@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics beyond connected components
@@ -85,37 +86,36 @@ object Graphs {
     require(iters >= 1 && iters <= 50, s"iterations must be in [1,50], got $iters")
     // pin the caller's edge frame: deg and withDeg both consume it, and
     // callers often pass a join+distinct pipeline that must not run twice
-    val e = PinnedCache.pin(edges)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    val p = Ladder.pin(edges)
+    val deg = p.edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // withDeg is joined on src once per iteration; when the deg join
     // broadcasts, its output carries NO useful partitioning, so every
-    // iteration re-exchanged the static edge frame. One explicit
-    // hash-partition before the pin lets all `iters` joins reuse it
-    // (guide §2.4; the labelPropagation idiom). Size-gated like
-    // [[pinLadderEdges]]: tiny graphs broadcast per-iteration anyway and
-    // the upfront exchange would be pure overhead.
-    val withDeg0 = e.join(deg, "src")
-    val withDeg = PinnedCache.pin(
-      if (e.count() >= 32768L) withDeg0.repartition(col("src")) else withDeg0)
+    // iteration would re-exchange the static edge frame — the ladder pin
+    // tier decides whether all `iters` joins reuse one upfront exchange
+    val withDeg = p.by("src", p.edges.join(deg, "src"))
     val n = deg.count()
     require(n > 0, "empty graph")
     val r0 = mass / n
-    val base = (15L * r0) / 100L
     // `eager = false` skips the per-round checkpoint so plan audits can see
-    // the full iteration lineage; production always checkpoints (flat
-    // lineage, each round's shuffle reused, the connectedComponents idiom).
-    def flatten(df: DataFrame): DataFrame =
-      if (eager) df.localCheckpoint(true) else df
-    var ranks = flatten(deg.select(col("src").as("node"), lit(r0).as("r")))
-    for (_ <- 1 to iters) {
-      ranks = flatten(withDeg
+    // the full iteration lineage; production always checkpoints
+    val init = deg.select(col("src").as("node"), lit(r0).as("r"))
+    pageRankRounds(withDeg, if (eager) Ladder.step(init) else init,
+      (15L * r0) / 100L, iters, eager)
+  }
+
+  /** `iters` rounds of the integer PageRank recurrence from `init` (node, r)
+    * over a degree-annotated (src, dst, deg) edge frame with teleport
+    * constant `base` — shared by [[integerPageRank]] and the restricted
+    * replay of [[incrementalPageRank]]. */
+  private def pageRankRounds(withDeg: DataFrame, init: DataFrame, base: Long,
+      iters: Int, eager: Boolean = true): DataFrame =
+    Ladder.trace(init, iters, eager = eager) { (ranks, _) =>
+      withDeg
         .join(ranks.select(col("node").as("src"), col("r")), "src")
         .select(col("dst").as("node"), expr("r div deg").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("s"))
-        .select(col("node"), (lit(base) + expr("(85 * s) div 100")).as("r")))
-    }
-    ranks
-  }
+        .select(col("node"), (lit(base) + expr("(85 * s) div 100")).as("r"))
+    }.last
 
   /** Fixed-round k-core peeling over an undirected edge list `(a, b)`
     * (a < b, deduplicated): `rounds` iterations of "drop every node whose
@@ -140,29 +140,25 @@ object Graphs {
     * incremental maintenance ([[incrementalKCorePeel]]) can carry the
     * edge state forward between waves (degrees alone don't determine the
     * next peel). */
-  def kCorePeelEdges(edges: DataFrame, k: Int, rounds: Int,
-      eager: Boolean = true): DataFrame = {
+  def kCorePeelEdges(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1 && rounds <= 50, "k >= 1, rounds in [1,50]")
-    def flatten(df: DataFrame): DataFrame =
-      if (eager) df.localCheckpoint(true) else df
     // materialize the input once: round 1 reads it three times (degree
     // count + both semi-joins), and callers pass join+distinct pipelines
-    var e = flatten(edges.toDF("a", "b")
-      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b")))
-    for (_ <- 1 to rounds) {
+    val e0 = edges.toDF("a", "b")
+      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+      .localCheckpoint(true)
+    Ladder.trace(e0, rounds) { (e, _) =>
       val keep = undirDegrees(e).where(col("deg") >= k).select(col("node"))
-      e = flatten(e
-        .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi"))
-    }
-    // USING-joins front their key, so the loop leaves columns as (b, a);
-    // restore the (a, b) contract for edge-set consumers
-    e.select(col("a"), col("b"))
+      e.join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
+        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
+    }.last
+      // USING-joins front their key, so the loop leaves columns as (b, a);
+      // restore the (a, b) contract for edge-set consumers
+      .select(col("a"), col("b"))
   }
 
-  def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
-      eager: Boolean = true): DataFrame =
-    undirDegrees(kCorePeelEdges(edges, k, rounds, eager))
+  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    undirDegrees(kCorePeelEdges(edges, k, rounds))
 
   /** INCREMENTAL k-core peel — the fourth graph tier's maintained form,
     * closing the incremental family (connectivity q164, communities
@@ -215,24 +211,16 @@ object Graphs {
     // without a lineage cut each reference re-embeds the caller's whole
     // pair-pipeline plan (the incrementalTriangleCounts lesson)
     val all = bE.unionByName(dE).localCheckpoint(true)
-    val nbrs = all.select(col("a").as("u"), col("b").as("w"))
-      .unionByName(all.select(col("b").as("u"), col("a").as("w")))
+    val nbrs = all.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(all.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint(true)
     val seeds = dE.select(col("a").as("node"))
-      .unionByName(dE.select(col("b").as("node"))).distinct()
+      .unionByName(dE.select(col("b").as("node")))
     // node distances to the nearest delta endpoint, up to 2R hops
-    var ball = seeds.withColumn("d", lit(0L)).localCheckpoint(true)
-    for (i <- 1 to 2 * rounds) {
-      val frontier = ball.where(col("d") === (i - 1).toLong)
-        .select(col("node").as("u"))
-      ball = ball.unionByName(
-          nbrs.join(frontier, "u").select(col("w").as("node"), lit(i.toLong).as("d")))
-        .groupBy(col("node")).agg(min(col("d")).as("d"))
-        .localCheckpoint(true)
-    }
-    val ballAll = ball.select(col("node"))
+    val dist = ball(nbrs, seeds, 2 * rounds)
+    val ballAll = dist.select(col("node"))
     // taken edges: dist ≤ R−1 ⟺ either endpoint within R−1 hops
-    val takeN = ball.where(col("d") <= (rounds - 1).toLong)
+    val takeN = dist.where(col("d") <= (rounds - 1).toLong)
       .select(col("node")).localCheckpoint(true)
     // re-select (a, b): the USING-joins front their key, and the batch
     // operator renames POSITIONALLY via toDF
@@ -288,10 +276,7 @@ object Graphs {
     // edge-generation pipeline executes three times
     val e = PinnedCache.pin(edges.toDF("a", "b")
       .select(col("a").cast("long").as("a"), col("b").cast("long").as("b")))
-    def degrees(df: DataFrame): DataFrame =
-      df.select(col("a").as("node")).unionAll(df.select(col("b").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val deg = PinnedCache.pin(degrees(e))
+    val deg = PinnedCache.pin(undirDegrees(e))
     // Optional k=2 pre-peel before orientation: a degree-1 node can't
     // close a wedge, and every triangle vertex keeps degree >= 2 inside
     // its own triangle, so any number of peel rounds preserves the
@@ -303,19 +288,12 @@ object Graphs {
     // degree-1 tail — q139's co-purchase graph has ZERO degree-1 nodes at
     // sf0.1, so the query keeps the peel off; dup-graphs with tendrils
     // should pass peelRounds = 2.
-    var pe = e
-    for (_ <- 1 to peelRounds) {
-      val keep = degrees(pe).where(col("deg") >= 2).select(col("node"))
-      pe = pe
-        .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint(true)
-    }
+    val pe = if (peelRounds == 0) e else kCorePeelEdges(e, 2, peelRounds)
     // orientation order uses the PEELED degrees (any total order is
     // correct; the peeled one gives the tighter O(sqrt(m)) out-degree);
     // with no peel, pe == e so the PINNED deg frame is reused instead of
     // re-running the union+aggregate over 2|E| rows (guide §2.4)
-    val ord = (if (peelRounds == 0) deg else degrees(pe))
+    val ord = (if (peelRounds == 0) deg else undirDegrees(pe))
       .select(col("node"), (col("deg") * 4294967296L + col("node")).as("ord"))
     val oriented = PinnedCache.pin(pe
       .join(ord.select(col("node").as("a"), col("ord").as("oa")), "a")
@@ -526,13 +504,11 @@ object Graphs {
     val sym = (if (inputSymmetric)
         edges.toDF("a", "b").where(col("a") =!= col("b"))
       else hyperAnfSym(edges)).localCheckpoint(true)
-    var regs = hyperAnfSeed(sym.select(col("a").as("node")).distinct())
+    val init = hyperAnfSeed(sym.select(col("a").as("node")).distinct())
       .localCheckpoint(true)
-    regs +: (1 to rounds).map { _ =>
-      regs = regs.unionByName(hyperAnfPropagate(sym, regs))
+    Ladder.trace(init, rounds) { (regs, _) =>
+      regs.unionByName(hyperAnfPropagate(sym, regs))
         .groupBy(col("node"), col("bucket")).agg(max(col("m")).as("m"))
-        .localCheckpoint(true)
-      regs
     }
   }
 
@@ -614,7 +590,7 @@ object Graphs {
       .unionByName(eB.select(col("b").as("a"), col("a").as("b")))
       .where(col("a") =!= col("b"))
     val symD = hyperAnfSym(deltaEdges).localCheckpoint(true)
-    val hint = frontierHinter(symB)
+    val hint = Ladder.hinter(symB)
     val dEnds = symD.select(col("a").as("node")).distinct().localCheckpoint(true)
     def norm(df: DataFrame) = df.toDF("node", "bucket", "m")
     // round-0 diff: singletons of nodes the base graph has never seen.
@@ -631,11 +607,10 @@ object Graphs {
         val primeAtEnds = norm(trace(k - 1))
           .join(hint(dEnds), Seq("node"), "left_semi")
           .unionByName(d.join(hint(dEnds), Seq("node"), "left_semi"))
-        val cand = d
+        val cand = Ladder.step(d
           .unionByName(hyperAnfPropagate(symB, hint(d)))
           .unionByName(hyperAnfPropagate(symD, primeAtEnds))
-          .groupBy(col("node"), col("bucket")).agg(max(col("m")).as("m"))
-          .localCheckpoint(true)
+          .groupBy(col("node"), col("bucket")).agg(max(col("m")).as("m")))
         // compare against the stored round-k frame WITHOUT exchanging it:
         // restrict the trace to candidate keys by broadcast semi-join
         // (scan-only), then broadcast the restricted side into the left
@@ -644,20 +619,18 @@ object Graphs {
         val traceAtCand = norm(trace(k))
           .join(hint(cand.select(col("node"), col("bucket"))),
             Seq("node", "bucket"), "left_semi")
-        d = cand
+        d = Ladder.step(cand
           .join(hint(traceAtCand.withColumnRenamed("m", "old_m")),
             Seq("node", "bucket"), "left")
           .where(col("old_m").isNull || col("m") > col("old_m"))
-          .select(col("node"), col("bucket"), col("m"))
-          .localCheckpoint(true)
+          .select(col("node"), col("bucket"), col("m")))
         // merged round-k frame: untouched rows verbatim via a broadcast
         // ANTI-join (d.m > old m by construction, so d rows override) —
         // a full-outer here would SortMergeJoin and exchange the
         // node-sized trace, the exact shape the r13 reshape removed
-        norm(trace(k))
+        Ladder.step(norm(trace(k))
           .join(hint(d), Seq("node", "bucket"), "left_anti")
-          .unionByName(d)
-          .localCheckpoint(true)
+          .unionByName(d))
       }
     newTrace
   }
@@ -685,7 +658,7 @@ object Graphs {
       .select(col("l").cast("long").as("l"), col("r").cast("long").as("r"))
     val bE = norm(baseEdges)
     val dE = norm(deltaEdges)
-    val hint = frontierHinter(bE)
+    val hint = Ladder.hinter(bE)
     // base edges of the delta's left vertices — the wedge ball
     val ball = bE.join(hint(dE.select(col("l")).distinct()), Seq("l"), "left_semi")
     // each (delta, base) wedge once, canonicalized; delta-internal once via <
@@ -797,35 +770,58 @@ object Graphs {
   def integerHits(edges: DataFrame, iters: Int,
       scale: Long = 1000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iterations must be in [1,50], got $iters")
-    val e = PinnedCache.pin(edges.toDF("src", "dst").distinct())
-    // the auth half-step joins e on src, the hub half-step on dst —
-    // each once per iteration. Two pinned pre-partitioned orientations
-    // let all 2·iters joins reuse one exchange each instead of
-    // re-exchanging the static edge frame per half-step (guide §2.4;
-    // cost: the edge frame is cached twice — edge-sized, spillable).
-    // Size-gated like pinLadderEdges: tiny graphs broadcast anyway.
-    val eBig = e.count() >= 32768L
-    val eS = if (eBig) PinnedCache.pin(e.repartition(col("src"))) else e
-    val eD = if (eBig) PinnedCache.pin(e.repartition(col("dst"))) else e
+    // the max rides a 1-row broadcast crossJoin — no driver round-trip
+    hitsRanks(hitsLadder(hitsEdges(edges), iters, scale) { (raw, c, _) =>
+      Ladder.step(raw.crossJoin(broadcast(raw.agg(max(col(c)).as("mx"))))
+        .select(col("node"), expr(s"($c * ${scale}L) div mx").as(c)))
+    })
+  }
+
+  /** The HITS ladder shared by [[integerHits]], [[integerHitsTrace]] and
+    * the restricted replays of [[incrementalHitsTrace]] over edges `es` =
+    * (e, e keyed for the src join, e keyed for the dst join): hub_0 =
+    * `scale` on every src, then `iters` × (auth half-step, hub half-step).
+    * Each half-step's RAW sums (node, c) — c = "a" or "h" — go through
+    * `rescale(raw, c, k)` (k = half-step index 0..2·iters−1), which
+    * divides by that half-step's max and materializes the scaled frame;
+    * only where the max comes from differs between the callers. Returns
+    * the final (hub, auth). */
+  private def hitsLadder(es: (DataFrame, DataFrame, DataFrame), iters: Int,
+      scale: Long)(rescale: (DataFrame, String, Int) => DataFrame): (DataFrame, DataFrame) = {
+    val (e, eS, eD) = es
     var hub = e.select(col("src").as("node")).distinct()
       .withColumn("h", lit(scale)).localCheckpoint(true)
     var auth = e.sparkSession.emptyDataFrame
-    for (_ <- 1 to iters) {
-      val a0 = eS.join(hub.select(col("node").as("src"), col("h")), "src")
-        .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
-      auth = a0.crossJoin(broadcast(a0.agg(max(col("a")).as("mx"))))
-        .select(col("node"), expr(s"(a * ${scale}L) div mx").as("a"))
-        .localCheckpoint(true)
-      val h0 = eD.join(auth.select(col("node").as("dst"), col("a")), "dst")
-        .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
-      hub = h0.crossJoin(broadcast(h0.agg(max(col("h")).as("mx"))))
-        .select(col("node"), expr(s"(h * ${scale}L) div mx").as("h"))
-        .localCheckpoint(true)
+    for (i <- 0 until iters) {
+      auth = rescale(eS.join(hub.select(col("node").as("src"), col("h")), "src")
+        .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a")), "a", 2 * i)
+      hub = rescale(eD.join(auth.select(col("node").as("dst"), col("a")), "dst")
+        .groupBy(col("src").as("node")).agg(sum(col("a")).as("h")), "h", 2 * i + 1)
     }
-    hub.select(col("node"), col("h").as("hub"))
-      .join(auth.select(col("node"), col("a").as("auth")), Seq("node"), "full_outer")
-      .na.fill(0L, Seq("hub", "auth"))
+    (hub, auth)
   }
+
+  /** The batch HITS edge pin: the auth half-step joins the edges on src,
+    * the hub half-step on dst — each once per iteration — so the ladder
+    * pin keys one copy per orientation (guide §2.4). */
+  private def hitsEdges(edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val p = Ladder.pin(edges.toDF("src", "dst").distinct())
+    (p.edges, p.by("src"), p.by("dst"))
+  }
+
+  /** Materialize a half-step's raw sums, then divide by `mx(raw)` — the
+    * collected-divisor rescale of [[integerHitsTrace]] and the replays. */
+  private def rescaleBy(raw: DataFrame, c: String, scale: Long)
+      (mx: DataFrame => Long): DataFrame = {
+    val m = Ladder.step(raw)
+    Ladder.step(m.select(col("node"), expr(s"($c * ${scale}L) div ${mx(m)}L").as(c)))
+  }
+
+  /** (node, hub, auth) with 0 for a side the node doesn't participate in. */
+  private def hitsRanks(hubAuth: (DataFrame, DataFrame)): DataFrame =
+    hubAuth._1.select(col("node"), col("h").as("hub"))
+      .join(hubAuth._2.select(col("node"), col("a").as("auth")), Seq("node"), "full_outer")
+      .na.fill(0L, Seq("hub", "auth"))
 
   /** One half-step of the [[integerHits]] rescale trace: the global MAX of
     * the UNSCALED sums and how many nodes attain it. `side` is "a" (auth
@@ -845,38 +841,14 @@ object Graphs {
   def integerHitsTrace(edges: DataFrame, iters: Int,
       scale: Long = 1000000L): (DataFrame, Seq[HitsMax]) = {
     require(iters >= 1 && iters <= 50, s"iterations must be in [1,50], got $iters")
-    val e = PinnedCache.pin(edges.toDF("src", "dst").distinct())
-    // two pinned pre-partitioned orientations — the [[integerHits]] trade
-    val eBig = e.count() >= 32768L
-    val eS = if (eBig) PinnedCache.pin(e.repartition(col("src"))) else e
-    val eD = if (eBig) PinnedCache.pin(e.repartition(col("dst"))) else e
-    var hub = e.select(col("src").as("node")).distinct()
-      .withColumn("h", lit(scale)).localCheckpoint(true)
-    var auth = e.sparkSession.emptyDataFrame
     val trace = scala.collection.mutable.ArrayBuffer.empty[HitsMax]
-    def maxAndCount(raw: DataFrame, c: String): (Long, Long) = {
-      val mx = raw.agg(max(col(c))).collect().head.getLong(0)
-      (mx, raw.where(col(c) === mx).count())
-    }
-    for (i <- 1 to iters) {
-      val a0 = eS.join(hub.select(col("node").as("src"), col("h")), "src")
-        .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
-        .localCheckpoint(true)
-      val (mxA, nA) = maxAndCount(a0, "a")
-      trace += HitsMax(i, "a", mxA, nA)
-      auth = a0.select(col("node"), expr(s"(a * ${scale}L) div ${mxA}L").as("a"))
-        .localCheckpoint(true)
-      val h0 = eD.join(auth.select(col("node").as("dst"), col("a")), "dst")
-        .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
-        .localCheckpoint(true)
-      val (mxH, nH) = maxAndCount(h0, "h")
-      trace += HitsMax(i, "h", mxH, nH)
-      hub = h0.select(col("node"), expr(s"(h * ${scale}L) div ${mxH}L").as("h"))
-        .localCheckpoint(true)
-    }
-    val ranks = hub.select(col("node"), col("h").as("hub"))
-      .join(auth.select(col("node"), col("a").as("auth")), Seq("node"), "full_outer")
-      .na.fill(0L, Seq("hub", "auth"))
+    val ranks = hitsRanks(hitsLadder(hitsEdges(edges), iters, scale) { (raw, c, k) =>
+      rescaleBy(raw, c, scale) { m =>
+        val mx = m.agg(max(col(c))).collect().head.getLong(0)
+        trace += HitsMax(k / 2 + 1, c, mx, m.where(col(c) === mx).count())
+        mx
+      }
+    })
     (ranks, trace.toSeq)
   }
 
@@ -953,24 +925,15 @@ object Graphs {
       all.unionByName(all.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())
     val seeds = dE.select(col("src").as("node"))
-      .unionByName(dE.select(col("dst").as("node"))).distinct()
+      .unionByName(dE.select(col("dst").as("node")))
     // one ball, two radii: take = 2R-1 (where finals can change),
     // region = 4R-2 (whose incident edges the restricted replays need)
     val takeRadius = 2 * iters - 1
     val regionRadius = 4 * iters - 2
-    var frontier = seeds.withColumn("d", lit(0L)).localCheckpoint(true)
-    var ball = frontier
-    for (r <- 1 to regionRadius) {
-      val cand = undirected
-        .join(frontier.select(col("node").as("src")), "src")
-        .select(col("dst").as("node")).distinct()
-      frontier = cand.join(ball, Seq("node"), "left_anti")
-        .select(col("node"), lit(r.toLong).as("d")).localCheckpoint(true)
-      ball = ball.unionByName(frontier)
-    }
+    val dist = ball(undirected, seeds, regionRadius)
     val take = PinnedCache.pin(
-      ball.where(col("d") <= takeRadius.toLong).select(col("node")))
-    val region = ball.select(col("node"))
+      dist.where(col("d") <= takeRadius.toLong).select(col("node")))
+    val region = dist.select(col("node"))
     // edges with EITHER endpoint in the region: every region node keeps
     // its FULL in/out edge set (column order re-pinned after USING joins)
     def incident(e: DataFrame) = PinnedCache.pin(
@@ -986,36 +949,20 @@ object Graphs {
     // restricted replay with the STORED maxes as divisors; returns final
     // (hub, auth) plus per-half-step ball-local evidence
     def replay(e0: DataFrame): (DataFrame, DataFrame, Seq[(Long, Long)]) = {
-      val e = PinnedCache.pin(e0)
-      var hub = e.select(col("src").as("node")).distinct()
-        .withColumn("h", lit(scale)).localCheckpoint(true)
-      var auth = e.sparkSession.emptyDataFrame
       val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      def ballStats(raw: DataFrame, c: String, mBase: Long): (Long, Long) = {
-        // ONE action per half-step: max and attainer count ride the same
-        // ball-restricted aggregate (was: checkpoint + two jobs — 3
-        // driver round-trips per half-step on a latency-bound path)
-        val row = raw.join(take, Seq("node"), "left_semi")
-          .agg(coalesce(max(col(c)), lit(0L)).as("mx"),
-            coalesce(sum(when(col(c) === mBase, 1L)), lit(0L)).as("n_at"))
-          .collect().head
-        (row.getLong(0), row.getLong(1))
-      }
-      for (i <- 1 to iters) {
-        val tA = prevTrace(2 * (i - 1))
-        val a0 = e.join(hub.select(col("node").as("src"), col("h")), "src")
-          .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
-          .localCheckpoint(true)
-        stats += ballStats(a0, "a", tA.mx)
-        auth = a0.select(col("node"), expr(s"(a * ${scale}L) div ${tA.mx}L").as("a"))
-          .localCheckpoint(true)
-        val tH = prevTrace(2 * (i - 1) + 1)
-        val h0 = e.join(auth.select(col("node").as("dst"), col("a")), "dst")
-          .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
-          .localCheckpoint(true)
-        stats += ballStats(h0, "h", tH.mx)
-        hub = h0.select(col("node"), expr(s"(h * ${scale}L) div ${tH.mx}L").as("h"))
-          .localCheckpoint(true)
+      val e = PinnedCache.pin(e0)
+      val (hub, auth) = hitsLadder((e, e, e), iters, scale) { (raw, c, k) =>
+        rescaleBy(raw, c, scale) { m =>
+          // ONE action per half-step: max and attainer count ride the same
+          // ball-restricted aggregate (was: checkpoint + two jobs — 3
+          // driver round-trips per half-step on a latency-bound path)
+          val row = m.join(take, Seq("node"), "left_semi")
+            .agg(coalesce(max(col(c)), lit(0L)).as("mx"),
+              coalesce(sum(when(col(c) === prevTrace(k).mx, 1L)), lit(0L)).as("n_at"))
+            .collect().head
+          stats += ((row.getLong(0), row.getLong(1)))
+          prevTrace(k).mx
+        }
       }
       (hub, auth, stats.toSeq)
     }
@@ -1034,10 +981,7 @@ object Graphs {
     }
     if (!localOk) integerHitsTrace(all, iters, scale)
     else {
-      val recomputed = newHub.select(col("node"), col("h").as("hub"))
-        .join(newAuth.select(col("node"), col("a").as("auth")),
-          Seq("node"), "full_outer")
-        .na.fill(0L, Seq("hub", "auth"))
+      val recomputed = hitsRanks((newHub, newAuth))
         .join(take, Seq("node"), "left_semi")
         .select(col("node"), col("hub"), col("auth"))
       val ranks = prevRanks.toDF("node", "hub", "auth")
@@ -1074,24 +1018,24 @@ object Graphs {
     // e⋈frontier a scan of e instead of a full-edge exchange per round;
     // on small graphs the edge frame is pinned pre-partitioned by the
     // join key instead, so the per-round join re-exchanges only the
-    // frontier ([[pinLadderEdges]]; measured both ways)
-    val (e, mh) = pinLadderEdges(edges.toDF("src", "dst"), "src")
-    var frontier = mh(seeds.toDF("node").distinct()
-      .withColumn("d", lit(0L)).localCheckpoint(true))
-    var settled = frontier
-    for (r <- 1 to rounds) {
-      val candidates = e
-        .join(frontier.select(col("node").as("src")), "src")
+    // frontier ([[Ladder.pin]]; measured both ways)
+    val p = Ladder.pin(edges.toDF("src", "dst"))
+    ball(p.by("src"), seeds, rounds, p.hint)
+  }
+
+  /** [[bfsDistances]] over an ALREADY-PINNED (src, dst) edge frame: the
+    * node-keyed settled/frontier ball every maintained form grows around
+    * its delta endpoints — (node, d) for each node within `rounds` hops of
+    * `seeds`, d its min hop distance. */
+  private def ball(e: DataFrame, seeds: DataFrame, rounds: Int,
+      hint: DataFrame => DataFrame = identity): DataFrame =
+    Ladder.frontier(seeds.toDF("node").distinct().withColumn("d", lit(0L)),
+        Seq("node"), rounds, hint) { (frontier, r) =>
+      e.join(frontier.select(col("node").as("src")), "src")
         .select(col("dst").as("node"))
         .distinct()
-      frontier = mh(candidates
-        .join(settled, Seq("node"), "left_anti")
         .select(col("node"), lit(r.toLong).as("d"))
-        .localCheckpoint(true))
-      settled = settled.unionByName(frontier)
-    }
-    settled
-  }
+    }.reduce(_ unionByName _)
 
   /** Sampled HARMONIC centrality — the distance-based centrality tier
     * (closeness family), complementing the eigen tier ([[integerPageRank]],
@@ -1147,26 +1091,19 @@ object Graphs {
   private[ext] def labeledBfs(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 10, "rounds in [1,10]")
-    // size-gated edge pin (the [[pinLadderEdges]] trade): on big graphs
+    // size-gated edge pin (the [[Ladder.pin]] trade): on big graphs
     // e⋈frontier stays a scan of e via frontier hints; on small graphs
     // e is pinned pre-partitioned by src so rounds reuse one exchange
-    val (e, mh) = pinLadderEdges(edges.toDF("src", "dst"), "src")
-    var frontier = mh(seeds.toDF("seed").distinct()
-      .select(col("seed"), col("seed").as("node"), lit(0L).as("d"))
-      .localCheckpoint(true))
-    var settled = frontier
-    for (r <- 1 to rounds) {
-      val candidates = e
-        .join(frontier.select(col("seed"), col("node").as("src")), "src")
+    val p = Ladder.pin(edges.toDF("src", "dst"))
+    val e = p.by("src")
+    Ladder.frontier(seeds.toDF("seed").distinct()
+        .select(col("seed"), col("seed").as("node"), lit(0L).as("d")),
+        Seq("seed", "node"), rounds, p.hint) { (frontier, r) =>
+      e.join(frontier.select(col("seed"), col("node").as("src")), "src")
         .select(col("seed"), col("dst").as("node"))
         .distinct()
-      frontier = mh(candidates
-        .join(settled, Seq("seed", "node"), "left_anti")
         .select(col("seed"), col("node"), lit(r.toLong).as("d"))
-        .localCheckpoint(true))
-      settled = settled.unionByName(frontier)
-    }
-    settled
+    }.reduce(_ unionByName _)
   }
 
   /** Bitmask MULTI-SOURCE BFS — [[labeledBfs]]'s output from a node-keyed
@@ -1193,48 +1130,57 @@ object Graphs {
   def multiSourceBfs(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 10, "rounds in [1,10]")
-    import org.apache.spark.sql.expressions.Window
     // per-round propagation joins e on src every round — same gated pin
-    // as the pair-keyed ladders ([[pinLadderEdges]]); mask frames are
+    // as the pair-keyed ladders ([[Ladder.pin]]); mask frames are
     // node×words sized, so the big-graph plan keeps its un-hinted shape
-    // (the hinter is discarded — no behavior change above the gate)
-    val (e, _) = pinLadderEdges(edges.toDF("src", "dst"), "src")
-    val idx = PinnedCache.pin(seeds.toDF("seed").distinct()
-      .select(col("seed"),
-        (row_number().over(Window.orderBy(col("seed"))) - 1)
-          .cast("long").as("i")))
-    var reached = idx.select(col("seed").as("node"),
+    // (the hinter is unused — no behavior change above the gate)
+    val e = Ladder.pin(edges.toDF("src", "dst")).by("src")
+    val idx = seedIndex(seeds.toDF("seed"))
+    val init = idx.select(col("seed").as("node"),
         expr("i div 64").as("w"),
         expr("shiftleft(cast(1 as bigint), cast(i % 64 as int))").as("m"))
       .localCheckpoint(true)
-    val pairChunks = scala.collection.mutable.ArrayBuffer(
-      idx.select(col("seed"), col("seed").as("node"), lit(0L).as("d")))
-    for (r <- 1 to rounds) {
+    // round r's state: the reached masks m plus the bits NEW this round nb
+    val states = Ladder.trace(init, rounds) { (reached, _) =>
       val prop = e
         .join(reached.select(col("node").as("src"), col("w"), col("m")), "src")
         .groupBy(col("dst").as("node"), col("w"))
         .agg(expr("bit_or(m)").as("pm"))
-      val merged = reached.select(col("node"), col("w"), col("m").as("om"))
+      reached.select(col("node"), col("w"), col("m").as("om"))
         .join(prop, Seq("node", "w"), "full_outer")
         .select(col("node"), col("w"),
           (coalesce(col("om"), lit(0L)).bitwiseOR(coalesce(col("pm"), lit(0L))))
             .as("m"),
           (coalesce(col("pm"), lit(0L))
             .bitwiseAND(expr("~coalesce(om, cast(0 as bigint))"))).as("nb"))
-        .localCheckpoint(true)
-      reached = merged.select(col("node"), col("w"), col("m"))
-      pairChunks += merged.where(col("nb") =!= 0L)
-        .select(col("node"), explode(expr(
-          """filter(transform(sequence(0, 63), b ->
-            |  case when (nb & shiftleft(cast(1 as bigint), b)) != 0
-            |    then b end), x -> x is not null)""".stripMargin)).as("b"),
-          col("w"))
-        .select((col("w") * 64L + col("b")).as("i"), col("node"))
-        .join(idx, "i")
-        .select(col("seed"), col("node"), lit(r.toLong).as("d"))
     }
-    pairChunks.reduce(_ unionByName _)
+    (idx.select(col("seed"), col("seed").as("node"), lit(0L).as("d")) +:
+      (1 to rounds).map(r => seedBits(states(r).where(col("nb") =!= 0L), "nb", idx)
+        .select(col("seed"), col("node"), lit(r.toLong).as("d"))))
+      .reduce(_ unionByName _)
   }
+
+  /** Dense seed-bit index (seed, i) over a `seed` frame, i in sorted seed
+    * order (deterministic) — the mask layout of [[multiSourceBfs]] and
+    * [[incrementalLabeledBfs]]. */
+  private def seedIndex(seeds: DataFrame): DataFrame =
+    PinnedCache.pin(seeds.distinct()
+      .select(col("seed"),
+        (row_number().over(Window.orderBy(col("seed"))) - 1)
+          .cast("long").as("i")))
+
+  /** One row per set bit of mask column `m` in a (node, w, …) frame,
+    * decoded to its seed through `idx`: (i, node, `keep`…, seed). */
+  private def seedBits(df: DataFrame, m: String, idx: DataFrame,
+      keep: String*): DataFrame =
+    df.select((Seq(col("node"), col("w"), explode(expr(
+        s"""filter(transform(sequence(0, 63), b ->
+           |  case when ($m & shiftleft(cast(1 as bigint), b)) != 0
+           |    then b end), x -> x is not null)""".stripMargin)).as("b")) ++
+        keep.map(col)): _*)
+      .select((Seq((col("w") * 64L + col("b")).as("i"), col("node")) ++
+        keep.map(col)): _*)
+      .join(idx, "i")
 
   /** INCREMENTAL labeled BFS — the q304/q306/q308/q310 maintenance
     * discipline applied to the DISTANCE tier: given the base graph's
@@ -1283,7 +1229,6 @@ object Graphs {
   def incrementalLabeledBfs(prevDist: DataFrame, baseEdges: DataFrame,
       deltaEdges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 10, "rounds in [1,10]")
-    import org.apache.spark.sql.expressions.Window
     val bE = baseEdges.toDF("src", "dst")
     val dE0 = deltaEdges.toDF("src", "dst").distinct().localCheckpoint(true)
     // NO full-graph distinct (the r13 incrementalKatz finding): every
@@ -1291,17 +1236,14 @@ object Graphs {
     // and BFS reachability are idempotent — so base ∪ delta is only
     // ever SCANNED, never exchanged
     // relaxation joins `all` on src every iteration — gated pin
-    // ([[pinLadderEdges]]): small graphs pre-partition by src, big
+    // ([[Ladder.pin]]): small graphs pre-partition by src, big
     // graphs keep the frontier hints
-    val (all, mh) = pinLadderEdges(bE.unionByName(dE0), "src")
+    val p = Ladder.pin(bE.unionByName(dE0))
+    val (all, mh) = (p.by("src"), p.hint)
     val dE = mh(dE0)
     val settled = PinnedCache.pin(prevDist.toDF("seed", "node", "d"))
-    // dense seed-bit index over the (unchanged) seed universe — the
-    // multiSourceBfs convention: sorted order, deterministic
-    val idx = PinnedCache.pin(settled.select(col("seed")).distinct()
-      .select(col("seed"),
-        (row_number().over(Window.orderBy(col("seed"))) - 1)
-          .cast("long").as("i")))
+    // dense seed-bit index over the (unchanged) seed universe
+    val idx = seedIndex(settled.select(col("seed")))
     // (seed, node, d) pairs → exact mask layers (node, w, d, m); exact
     // layers for one (node, seed) are disjoint across d, so bit_or = ∪
     def toLayers(pairs: DataFrame): DataFrame = pairs
@@ -1338,7 +1280,7 @@ object Graphs {
     // every candidate node sits within `rounds` FORWARD hops of a delta
     // dst, so this slice of settled is the only state improvements can
     // compare against — the full set is never reshuffled per iteration
-    val ballNodes = mh(bfsDistances(all, dE.select(col("dst")), rounds)
+    val ballNodes = mh(ball(all, dE.select(col("dst")), rounds, mh)
       .select(col("node")).localCheckpoint(true))
     val baseCum = PinnedCache.pin(cumulate(toLayers(
       settled.join(ballNodes, Seq("node"), "left_semi"))))
@@ -1347,8 +1289,7 @@ object Graphs {
       settled.join(dE.select(col("src").as("node"), col("dst")), "node")
         .select(col("seed"), col("dst").as("node"), (col("d") + 1L).as("d"))
         .where(col("d") <= rounds.toLong))
-    var frontier = mh(
-      selfPrune(minusCum(injected, baseCum)).localCheckpoint(true))
+    var frontier = mh(Ladder.step(selfPrune(minusCum(injected, baseCum))))
     // improvement state carried TWO ways, each maintained incrementally
     // (r15): `impChunks` accumulates the raw per-round layers for the
     // single decode at the END (min(d) there resolves re-improved bits),
@@ -1359,7 +1300,7 @@ object Graphs {
     // cumulate(imp) + a full imp groupBy per round — O(R·|imp|) exchange
     // volume for state the previous round already aggregated).
     val impChunks = scala.collection.mutable.ArrayBuffer(frontier)
-    var cumImp = cumulate(frontier).localCheckpoint(true)
+    var cumImp = Ladder.step(cumulate(frontier))
     for (_ <- 1 to rounds) {
       val prop = all
         .join(frontier.select(col("node").as("src"), col("w"), col("d"),
@@ -1371,28 +1312,19 @@ object Graphs {
       // an improvement must beat BOTH the base state and any earlier
       // improvement of the same pair (a pair can improve twice when a
       // shorter chain lands later — the chained-delta case)
-      frontier = mh(
-        selfPrune(minusCum(minusCum(prop, baseCum), cumImp))
-          .localCheckpoint(true))
+      frontier = mh(Ladder.step(
+        selfPrune(minusCum(minusCum(prop, baseCum), cumImp))))
       impChunks += frontier
-      cumImp = cumImp.withColumnRenamed("cum", "oc")
+      cumImp = Ladder.step(cumImp.withColumnRenamed("cum", "oc")
         .join(cumulate(frontier), Seq("node", "w", "d"), "full_outer")
         .select(col("node"), col("w"), col("d"),
           (coalesce(col("oc"), lit(0L))
-            .bitwiseOR(coalesce(col("cum"), lit(0L)))).as("cum"))
-        .localCheckpoint(true)
+            .bitwiseOR(coalesce(col("cum"), lit(0L)))).as("cum")))
     }
     val imp = impChunks.reduce(_ unionByName _)
     // decode bits → (seed, node) with min d per pair — ONE output-sized
     // pass (a re-improved bit can sit in two layers; min resolves it)
-    val improvedPairs = imp
-      .select(col("node"), col("w"), col("d"),
-        explode(expr(
-          """filter(transform(sequence(0, 63), b ->
-            |  case when (m & shiftleft(cast(1 as bigint), b)) != 0
-            |    then b end), x -> x is not null)""".stripMargin)).as("b"))
-      .select((col("w") * 64L + col("b")).as("i"), col("node"), col("d"))
-      .join(idx, "i")
+    val improvedPairs = seedBits(imp, "m", idx, "d")
       .groupBy(col("seed"), col("node")).agg(min(col("d")).as("d"))
       .localCheckpoint(true)
     settled
@@ -1451,53 +1383,59 @@ object Graphs {
   def betweennessTrace(edges: DataFrame, seeds: DataFrame,
       rounds: Int, scale: Long = 1000000L): DataFrame = {
     require(rounds >= 2 && rounds <= 10, "rounds in [2,10]")
-    // distinct: σ counts PATHS, so a duplicated edge row would double-count.
-    // Both the forward σ joins and the backward contrib join key e by src
-    // (renamed node), so the small-graph pin pre-partitions by src once
-    // ([[pinLadderEdges]]; hinter discarded — level frames are pair-sized)
-    val (e, _) = pinLadderEdges(edges.toDF("src", "dst").distinct(), "src")
-    // forward: per-level (seed, node, sigma), settled/frontier split
-    var frontier = seeds.toDF("seed").distinct()
-      .select(col("seed"), col("seed").as("node"), lit(1L).as("sigma"))
-      .localCheckpoint(true)
-    val levels = scala.collection.mutable.ArrayBuffer(frontier)
-    var settledKeys = frontier.select(col("seed"), col("node"))
-    for (_ <- 1 to rounds) {
-      val cand = e
-        .join(frontier.select(col("seed"), col("node").as("src"), col("sigma")), "src")
-        .groupBy(col("seed"), col("dst").as("node")).agg(sum(col("sigma")).as("sigma"))
-      frontier = cand
-        .join(settledKeys, Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), col("sigma"))
-        .localCheckpoint(true)
-      levels += frontier
-      settledKeys = settledKeys.unionByName(frontier.select(col("seed"), col("node")))
-    }
+    val e = brandesEdges(edges)
+    val levels = sigmaLevels(e, seeds, rounds)
     // backward: δ' per level, deepest level first (it has no successors)
-    var dep = levels(rounds).select(col("seed"), col("node"), lit(0L).as("dd"))
-    val perLevel = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (r <- (rounds - 1) to 1 by -1) {
-      val cur = levels(r)
-      val succ = levels(r + 1)
-        .join(dep, Seq("seed", "node"))
-        .select(col("seed"), col("node").as("dst"),
-          col("sigma").as("sigma_w"), col("dd").as("dd_w"))
-      val contrib = cur
-        .join(e.select(col("src").as("node"), col("dst")), "node")
-        .join(succ, Seq("seed", "dst"))
-        .select(col("seed"), col("node"),
-          expr(s"(sigma * (${scale}L + dd_w)) div sigma_w").as("term"))
-        .groupBy(col("seed"), col("node")).agg(sum(col("term")).as("dd"))
-      dep = cur.select(col("seed"), col("node"))
-        .join(contrib, Seq("seed", "node"), "left_outer")
-        .select(col("seed"), col("node"), coalesce(col("dd"), lit(0L)).as("dd"))
-        .localCheckpoint(true)
-      perLevel += dep
+    val leaf = levels(rounds).select(col("seed"), col("node"), lit(0L).as("dd"))
+    val deps = ((rounds - 1) to 1 by -1).scanLeft(leaf) { (dep, r) =>
+      brandesDep(levels(r), brandesTerms(e, levels, dep, r, scale))
     }
-    (perLevel :+ levels(rounds)
-        .select(col("seed"), col("node"), lit(0L).as("dd")))
-      .reduce(_ unionByName _)
+    (deps.tail :+ leaf).reduce(_ unionByName _)
   }
+
+  /** The Brandes edge pin shared by the node and edge forms. distinct: σ
+    * counts PATHS, so a duplicated edge row would double-count. Both the
+    * forward σ joins and the backward term join key e by src (renamed
+    * node), so the ladder pin keys it by src once ([[Ladder.pin]]; the
+    * hinter is unused — level frames are pair-sized). */
+  private def brandesEdges(edges: DataFrame): DataFrame =
+    Ladder.pin(edges.toDF("src", "dst").distinct()).by("src")
+
+  /** Forward phase of the hop-bounded Brandes ladder: per-level
+    * (seed, node, sigma) for levels 0..`rounds` — labeled BFS with path
+    * counts, settled/frontier split so only new pairs shuffle. */
+  private def sigmaLevels(e: DataFrame, seeds: DataFrame,
+      rounds: Int): IndexedSeq[DataFrame] =
+    Ladder.frontier(seeds.toDF("seed").distinct()
+        .select(col("seed"), col("seed").as("node"), lit(1L).as("sigma")),
+        Seq("seed", "node"), rounds) { (frontier, _) =>
+      e.join(frontier.select(col("seed"), col("node").as("src"), col("sigma")), "src")
+        .groupBy(col("seed"), col("dst").as("node")).agg(sum(col("sigma")).as("sigma"))
+    }
+
+  /** Backward terms of level r: per (seed, v→w) with v at level r and w at
+    * level r+1, (σ(s,v) · (scale + δ'(s,w))) div σ(s,w), given level r+1's
+    * dependencies `dep` — (seed, node, dst, term). */
+  private def brandesTerms(e: DataFrame, levels: IndexedSeq[DataFrame],
+      dep: DataFrame, r: Int, scale: Long): DataFrame = {
+    val succ = levels(r + 1)
+      .join(dep, Seq("seed", "node"))
+      .select(col("seed"), col("node").as("dst"),
+        col("sigma").as("sigma_w"), col("dd").as("dd_w"))
+    levels(r)
+      .join(e.select(col("src").as("node"), col("dst")), "node")
+      .join(succ, Seq("seed", "dst"))
+      .select(col("seed"), col("node"), col("dst"),
+        expr(s"(sigma * (${scale}L + dd_w)) div sigma_w").as("term"))
+  }
+
+  /** δ' (seed, node, dd) of the level `cur` rolled up from its terms — 0
+    * for a node with no successor — materialized per level. */
+  private def brandesDep(cur: DataFrame, terms: DataFrame): DataFrame =
+    Ladder.step(cur.select(col("seed"), col("node"))
+      .join(terms.groupBy(col("seed"), col("node")).agg(sum(col("term")).as("dd")),
+        Seq("seed", "node"), "left_outer")
+      .select(col("seed"), col("node"), coalesce(col("dd"), lit(0L)).as("dd")))
 
   /** INCREMENTAL [[betweennessCentrality]] — the TENTH maintained form,
     * completing the centrality tier (CC q164, LPA q253, PR q304,
@@ -1543,23 +1481,28 @@ object Graphs {
       deltaEdges: DataFrame, seeds: DataFrame, rounds: Int,
       scale: Long = 1000000L): DataFrame = {
     require(rounds >= 2 && rounds <= 10, "rounds in [2,10]")
-    val bE = baseEdges.toDF("src", "dst")
+    val (all, affected) = affectedSeeds(baseEdges, deltaEdges, seeds, rounds)
+    PinnedCache.pin(prevTrace.toDF("seed", "node", "dd"))
+      .join(affected, Seq("seed"), "left_anti")
+      .select(col("seed"), col("node"), col("dd"))
+      .unionByName(betweennessTrace(all, affected, rounds, scale))
+  }
+
+  /** The seeds whose hop-≤R forward DAG a delta can touch, for both
+    * maintained betweenness forms: a delta edge (u, v) is visible to seed
+    * s iff d_union(s, u) ≤ R−1 — the reverse-BFS from the delta srcs over
+    * FLIPPED union edges. Returns (union edges, affected seeds). */
+  private def affectedSeeds(baseEdges: DataFrame, deltaEdges: DataFrame,
+      seeds: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
     val dE = PinnedCache.pin(deltaEdges.toDF("src", "dst").distinct())
-    val all = PinnedCache.pin(bE.unionByName(dE).distinct())
-    val trace = PinnedCache.pin(prevTrace.toDF("seed", "node", "dd"))
-    // a delta edge (u, v) is visible to seed s iff d_union(s, u) ≤ R−1:
-    // reverse-BFS from the delta srcs over FLIPPED union edges
+    val all = PinnedCache.pin(baseEdges.toDF("src", "dst").unionByName(dE).distinct())
     val reverseBall = bfsDistances(
       all.select(col("dst").as("src"), col("src").as("dst")),
       dE.select(col("src").as("node")), rounds - 1)
       .select(col("node"))
-    val affectedSeeds = PinnedCache.pin(
+    (all, PinnedCache.pin(
       seeds.toDF("seed").distinct()
-        .join(reverseBall.select(col("node").as("seed")), Seq("seed"), "left_semi"))
-    val recomputed = betweennessTrace(all, affectedSeeds, rounds, scale)
-    trace.join(affectedSeeds, Seq("seed"), "left_anti")
-      .select(col("seed"), col("node"), col("dd"))
-      .unionByName(recomputed)
+        .join(reverseBall.select(col("node").as("seed")), Seq("seed"), "left_semi")))
   }
 
   /** EDGE betweenness centrality — [[betweennessCentrality]]'s per-LINK
@@ -1597,48 +1540,16 @@ object Graphs {
   def edgeBetweennessTrace(edges: DataFrame, seeds: DataFrame,
       rounds: Int, scale: Long = 1000000L): DataFrame = {
     require(rounds >= 2 && rounds <= 10, "rounds in [2,10]")
-    val e = PinnedCache.pin(edges.toDF("src", "dst").distinct())
-    var frontier = seeds.toDF("seed").distinct()
-      .select(col("seed"), col("seed").as("node"), lit(1L).as("sigma"))
-      .localCheckpoint(true)
-    val levels = scala.collection.mutable.ArrayBuffer(frontier)
-    var settledKeys = frontier.select(col("seed"), col("node"))
-    for (_ <- 1 to rounds) {
-      val cand = e
-        .join(frontier.select(col("seed"), col("node").as("src"), col("sigma")), "src")
-        .groupBy(col("seed"), col("dst").as("node")).agg(sum(col("sigma")).as("sigma"))
-      frontier = cand
-        .join(settledKeys, Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), col("sigma"))
-        .localCheckpoint(true)
-      levels += frontier
-      settledKeys = settledKeys.unionByName(frontier.select(col("seed"), col("node")))
-    }
+    val e = brandesEdges(edges)
+    val levels = sigmaLevels(e, seeds, rounds)
     var dep = levels(rounds).select(col("seed"), col("node"), lit(0L).as("dd"))
-    val edgeChunks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def levelTerms(r: Int): DataFrame = {
-      val succ = levels(r + 1)
-        .join(dep, Seq("seed", "node"))
-        .select(col("seed"), col("node").as("dst"),
-          col("sigma").as("sigma_w"), col("dd").as("dd_w"))
-      levels(r)
-        .join(e.select(col("src").as("node"), col("dst")), "node")
-        .join(succ, Seq("seed", "dst"))
-        .select(col("seed"), col("node"), col("dst"),
-          expr(s"(sigma * (${scale}L + dd_w)) div sigma_w").as("term"))
-        .localCheckpoint(true)
-    }
-    for (r <- (rounds - 1) to 1 by -1) {
-      val terms = levelTerms(r)
-      edgeChunks += terms
-      dep = levels(r).select(col("seed"), col("node"))
-        .join(terms.groupBy(col("seed"), col("node")).agg(sum(col("term")).as("dd")),
-          Seq("seed", "node"), "left_outer")
-        .select(col("seed"), col("node"), coalesce(col("dd"), lit(0L)).as("dd"))
-        .localCheckpoint(true)
-    }
-    edgeChunks += levelTerms(0)
-    edgeChunks.reduce(_ unionByName _)
+    // per-level terms are materialized: each serves both the edge output
+    // and the next dependency rollup; level 0's are the seeds' out-edges
+    ((rounds - 1) to 0 by -1).map { r =>
+      val terms = Ladder.step(brandesTerms(e, levels, dep, r, scale))
+      if (r > 0) dep = brandesDep(levels(r), terms)
+      terms
+    }.reduce(_ unionByName _)
   }
 
   /** INCREMENTAL [[edgeBetweenness]] — the THIRTEENTH maintained form,
@@ -1661,21 +1572,11 @@ object Graphs {
       baseEdges: DataFrame, deltaEdges: DataFrame, seeds: DataFrame,
       rounds: Int, scale: Long = 1000000L): DataFrame = {
     require(rounds >= 2 && rounds <= 10, "rounds in [2,10]")
-    val bE = baseEdges.toDF("src", "dst")
-    val dE = PinnedCache.pin(deltaEdges.toDF("src", "dst").distinct())
-    val all = PinnedCache.pin(bE.unionByName(dE).distinct())
-    val trace = PinnedCache.pin(prevTrace.toDF("seed", "node", "dst", "term"))
-    val reverseBall = bfsDistances(
-      all.select(col("dst").as("src"), col("src").as("dst")),
-      dE.select(col("src").as("node")), rounds - 1)
-      .select(col("node"))
-    val affectedSeeds = PinnedCache.pin(
-      seeds.toDF("seed").distinct()
-        .join(reverseBall.select(col("node").as("seed")), Seq("seed"), "left_semi"))
-    val recomputed = edgeBetweennessTrace(all, affectedSeeds, rounds, scale)
-    trace.join(affectedSeeds, Seq("seed"), "left_anti")
+    val (all, affected) = affectedSeeds(baseEdges, deltaEdges, seeds, rounds)
+    PinnedCache.pin(prevTrace.toDF("seed", "node", "dst", "term"))
+      .join(affected, Seq("seed"), "left_anti")
       .select(col("seed"), col("node"), col("dst"), col("term"))
-      .unionByName(recomputed)
+      .unionByName(edgeBetweennessTrace(all, affected, rounds, scale))
   }
 
   /** Pairwise hop-distance HISTOGRAM from `seeds` (d in 1..rounds), with
@@ -1730,20 +1631,16 @@ object Graphs {
     require(nSeeds > 0, "empty seed set")
     val r0 = mass / nSeeds
     val tel = (15L * r0) / 100L
-    var ranks = sd.withColumn("r", lit(r0)).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val contrib = withDeg
+    Ladder.trace(sd.withColumn("r", lit(r0)).localCheckpoint(true), iters) { (ranks, _) =>
+      withDeg
         .join(ranks.select(col("node").as("src"), col("r")), "src")
         .select(col("dst").as("node"), expr("r div deg").as("c"))
         .groupBy(col("node")).agg(expr("(85 * sum(c)) div 100").as("c"))
-      ranks = contrib
         .join(sd.withColumn("tel", lit(tel)), Seq("node"), "full_outer")
         .select(col("node"),
           (coalesce(col("c"), lit(0L)) + coalesce(col("tel"), lit(0L))).as("r"))
         .where(col("r") > 0)
-        .localCheckpoint(true)
-    }
-    ranks
+    }.last
   }
 
   /** Synchronous label propagation (fixed rounds) — community detection
@@ -1794,19 +1691,12 @@ object Graphs {
     val sym = PinnedCache.pin(
       all.unionByName(all.select(col("b").as("a"), col("a").as("b"))).distinct())
     val seeds = dE.select(col("a").as("node"))
-      .unionByName(dE.select(col("b").as("node"))).distinct()
+      .unionByName(dE.select(col("b").as("node")))
     // BFS ball to 2R-1 hops over the union graph
-    var ball = seeds.withColumn("d", lit(0L)).localCheckpoint(true)
-    for (i <- 1 to 2 * rounds - 1) {
-      val frontier = ball.where(col("d") === (i - 1).toLong)
-        .select(col("node").as("a"))
-      ball = ball.unionByName(
-          sym.join(frontier, "a").select(col("b").as("node"), lit(i.toLong).as("d")))
-        .groupBy(col("node")).agg(min(col("d")).as("d"))
-        .localCheckpoint(true)
-    }
-    val ballAll = ball.select(col("node"))
-    val take = ball.where(col("d") <= rounds.toLong).select(col("node"))
+    val dist = ball(sym.select(col("a").as("src"), col("b").as("dst")),
+      seeds, 2 * rounds - 1)
+    val ballAll = dist.select(col("node"))
+    val take = dist.where(col("d") <= rounds.toLong).select(col("node"))
     // edges incident to the ball (sym is symmetric, so a-side covers all)
     val subEdges = sym.join(ballAll.withColumnRenamed("node", "a"), "a")
     val recomputed = labelPropagation(subEdges, rounds)
@@ -1871,49 +1761,24 @@ object Graphs {
     if (bE.select(col("src")).distinct().count() != n)
       return integerPageRank(all, iters, mass)
     val r0 = mass / n
-    val base = (15L * r0) / 100L
     val seeds = dE.select(col("src").as("node"))
-      .unionByName(dE.select(col("dst").as("node"))).distinct()
+      .unionByName(dE.select(col("dst").as("node")))
     // forward influence ball: nodes within `iters` hops DOWNSTREAM of a
     // delta endpoint — the only ranks that can differ from the base run
-    var fwd = seeds.withColumn("d", lit(0L)).localCheckpoint(true)
-    for (i <- 1 to iters) {
-      val frontier = fwd.where(col("d") === (i - 1).toLong)
-        .select(col("node").as("src"))
-      fwd = fwd.unionByName(
-          all.join(frontier, "src")
-            .select(col("dst").as("node"), lit(i.toLong).as("d")))
-        .groupBy(col("node")).agg(min(col("d")).as("d"))
-        .localCheckpoint(true)
-    }
-    val take = PinnedCache.pin(fwd.select(col("node")))
+    val take = PinnedCache.pin(ball(all, seeds, iters).select(col("node")))
     // dependency ball: in-edges of nodes within iters-1 hops UPSTREAM of
     // the take ball feed the restricted recurrence; deeper nodes enter
     // through their exact r_0 init only
-    var bwd = take.withColumn("d", lit(0L)).localCheckpoint(true)
-    for (i <- 1 until iters) {
-      val frontier = bwd.where(col("d") === (i - 1).toLong)
-        .select(col("node").as("dst"))
-      bwd = bwd.unionByName(
-          all.join(frontier, "dst")
-            .select(col("src").as("node"), lit(i.toLong).as("d")))
-        .groupBy(col("node")).agg(min(col("d")).as("d"))
-        .localCheckpoint(true)
-    }
+    val bwd = ball(all.select(col("dst").as("src"), col("src").as("dst")),
+      take, iters - 1)
     val subEdges = all.join(bwd.select(col("node").as("dst")), "dst")
       .select(col("src"), col("dst"))
     // the SAME recurrence as integerPageRank, with GLOBAL deg and r0
     val withDeg = PinnedCache.pin(subEdges.join(deg, "src"))
-    var ranks = withDeg.select(col("src").as("node")).distinct()
-      .withColumn("r", lit(r0)).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      ranks = withDeg
-        .join(ranks.select(col("node").as("src"), col("r")), "src")
-        .select(col("dst").as("node"), expr("r div deg").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("s"))
-        .select(col("node"), (lit(base) + expr("(85 * s) div 100")).as("r"))
-        .localCheckpoint(true)
-    }
+    val ranks = pageRankRounds(withDeg,
+      Ladder.step(withDeg.select(col("src").as("node")).distinct()
+        .withColumn("r", lit(r0))),
+      (15L * r0) / 100L, iters)
     prevRanks.toDF("node", "r")
       .join(take, Seq("node"), "left_anti")
       .unionByName(ranks.join(take, Seq("node")))
@@ -1935,50 +1800,44 @@ object Graphs {
     * Shape: per round one rank-onto-edges join + one dst-keyed
     * map-side-combinable sum — Pregel-shaped, like [[integerPageRank]]
     * minus the degree join. */
-  def integerKatz(edges: DataFrame, iters: Int, alphaDen: Long = 8L): DataFrame = {
-    require(iters >= 1 && iters <= 20, "iters in [1,20]")
-    require(alphaDen >= 2, "alphaDen >= 2")
-    val e = edges.toDF("src", "dst").localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    var r = nodes.withColumn("r", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val in = e.join(r.select(col("node").as("src"), col("r")), "src")
-        .groupBy(col("dst").as("node")).agg(sum(col("r")).as("s"))
-      r = nodes.join(in, Seq("node"), "left")
-        .withColumn("r", lit(1000000L) +
-          expr(s"coalesce(s, 0L) div ${alphaDen}L"))
-        .select(col("node"), col("r"))
-        .localCheckpoint(true)
-    }
-    r
-  }
+  def integerKatz(edges: DataFrame, iters: Int, alphaDen: Long = 8L): DataFrame =
+    katzLadder(edges, iters, alphaDen).last
 
   /** [[integerKatz]] returning the full TRAJECTORY (node, t, r) for
     * t = 0..iters — the stored state [[incrementalKatz]] replays its
     * boundary inputs from (the [[integerHitsTrace]] pattern: batch runs
     * persist what maintenance needs). iters·|nodes| rows. */
   def integerKatzTrace(edges: DataFrame, iters: Int,
-      alphaDen: Long = 8L): DataFrame = {
+      alphaDen: Long = 8L): DataFrame =
+    katzLadder(edges, iters, alphaDen).zipWithIndex
+      .map { case (r, t) => r.withColumn("t", lit(t.toLong)) }
+      .reduce(_ unionByName _)
+      .select(col("node"), col("t"), col("r"))
+
+  /** The Katz round states r_0..r_iters (node, r) over every node. */
+  private def katzLadder(edges: DataFrame, iters: Int,
+      alphaDen: Long): IndexedSeq[DataFrame] = {
     require(iters >= 1 && iters <= 20, "iters in [1,20]")
+    require(alphaDen >= 2, "alphaDen >= 2")
     val e = edges.toDF("src", "dst").localCheckpoint(true)
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint(true)
-    var r = nodes.withColumn("r", lit(1000000L))
-    var out = r.withColumn("t", lit(0L))
-    for (t <- 1 to iters) {
-      val in = e.join(r.select(col("node").as("src"), col("r")), "src")
-        .groupBy(col("dst").as("node")).agg(sum(col("r")).as("s"))
-      r = nodes.join(in, Seq("node"), "left")
-        .withColumn("r", lit(1000000L) +
-          expr(s"coalesce(s, 0L) div ${alphaDen}L"))
-        .select(col("node"), col("r"))
-        .localCheckpoint(true)
-      out = out.unionByName(r.withColumn("t", lit(t.toLong)))
+    Ladder.trace(nodes.withColumn("r", lit(1000000L)), iters) { (r, _) =>
+      katzRound(nodes, e, r.select(col("node").as("src"), col("r")), alphaDen)
     }
-    out.select(col("node"), col("t"), col("r"))
+  }
+
+  /** One Katz round for every `nodes` row: 10⁶ + (Σ_{u→v} r(u)) div
+    * alphaDen, summing `srcVals` (src, r) along the edges `e`. */
+  private def katzRound(nodes: DataFrame, e: DataFrame, srcVals: DataFrame,
+      alphaDen: Long): DataFrame = {
+    val in = e.join(srcVals, "src")
+      .groupBy(col("dst").as("node")).agg(sum(col("r")).as("s"))
+    nodes.join(in, Seq("node"), "left")
+      .withColumn("r", lit(1000000L) +
+        expr(s"coalesce(s, 0L) div ${alphaDen}L"))
+      .select(col("node"), col("r"))
   }
 
   /** INCREMENTAL [[integerKatz]] — the eigen tier's CLEANEST maintained
@@ -2020,7 +1879,7 @@ object Graphs {
     val trace = prevTrace.toDF("node", "t", "r").localCheckpoint(true)
     // size-gated hints, decided on the checkpointed trace (∝ node count
     // × iters — the graph-scale signal this op has cheapest access to)
-    val mh = frontierHinter(trace)
+    val mh = Ladder.hinter(trace)
     // a node is new iff it touches a delta edge and is absent from the
     // trace: probe the trace's t=0 slice with the (small, broadcast)
     // delta endpoints — no full-node-set distinct
@@ -2030,17 +1889,10 @@ object Graphs {
     val knownEnds = trace.where(col("t") === 0L).select(col("node"))
       .join(deltaEnds, Seq("node"), "left_semi")
     val newNodes = deltaEnds.join(knownEnds, Seq("node"), "left_anti")
-    var aff = mh(delta.select(col("dst").as("node")).distinct()
-      .unionByName(newNodes).distinct().localCheckpoint(true))
-    var frontier = aff
-    for (_ <- 1 until iters) {
-      frontier = mh(union
-        .join(frontier.select(col("node").as("src")), "src")
-        .select(col("dst").as("node")).distinct()
-        .join(aff, Seq("node"), "left_anti")
-        .localCheckpoint(true))
-      aff = mh(aff.unionByName(frontier).localCheckpoint(true))
-    }
+    val aff = mh(ball(union,
+        delta.select(col("dst").as("node")).unionByName(newNodes),
+        iters - 1, mh)
+      .select(col("node")).localCheckpoint(true))
     // edges INTO the affected region — the only recurrence that replays;
     // the base-vs-delta dedup happens HERE, on the ball-local edge set
     // (edges outside the ball are never re-aggregated, so duplicates
@@ -2049,20 +1901,13 @@ object Graphs {
       .join(aff.select(col("node").as("dst")), Seq("dst"), "left_semi")
       .distinct()
       .localCheckpoint(true))
-    var rAff = aff.withColumn("r", lit(1000000L))
-    for (t <- 1 to iters) {
-      val srcVals = rAff.select(col("node").as("src"), col("r"))
+    val rAff = Ladder.trace(aff.withColumn("r", lit(1000000L)), iters, mh) { (prev, t) =>
+      val srcVals = prev.select(col("node").as("src"), col("r"))
         .unionByName(trace.where(col("t") === (t - 1).toLong)
           .select(col("node").as("src"), col("r"))
           .join(aff.select(col("node").as("src")), Seq("src"), "left_anti"))
-      val in = affIn.join(srcVals, "src")
-        .groupBy(col("dst").as("node")).agg(sum(col("r")).as("s"))
-      rAff = mh(aff.join(in, Seq("node"), "left")
-        .withColumn("r", lit(1000000L) +
-          expr(s"coalesce(s, 0L) div ${alphaDen}L"))
-        .select(col("node"), col("r"))
-        .localCheckpoint(true))
-    }
+      katzRound(aff, affIn, srcVals, alphaDen)
+    }.last
     trace.where(col("t") === iters.toLong).select(col("node"), col("r"))
       .join(aff, Seq("node"), "left_anti")
       .unionByName(rAff)
@@ -2195,13 +2040,63 @@ object Graphs {
     * takes recomputed labels for exactly `d <= R`; everything else
     * passes through verbatim) — so passing `lpaRounds = R` restricts
     * the diff to the ball: a frontier-join BFS (shuffle ∝ ball, scans
-    * hinted via [[frontierHinter]]) plus broadcast semi-joins onto the
+    * hinted via [[Ladder.hinter]]) plus broadcast semi-joins onto the
     * two assignments, which then diff at ball size. The ball BFS runs
     * to R hops only — strictly smaller than the 2R−1 ball the label
     * maintenance itself already paid for. */
   def incrementalConductance(prevStats: DataFrame, prevLabels: DataFrame,
       newLabels: DataFrame, baseEdges: DataFrame,
       deltaEdges: DataFrame, lpaRounds: Int = 0): DataFrame = {
+    val aff = affectedCommunities(prevLabels, newLabels, baseEdges, deltaEdges,
+      lpaRounds)
+    val mh = aff.mh
+    val byLab = aff.deg.join(aff.nodes, "node")
+      .groupBy(col("lab"))
+      .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("vol"))
+    // cut recount: the OTHER endpoint's label comes from the full
+    // assignment — but only incident-edge ENDPOINTS are ever consulted,
+    // so restrict the assignment to them first (one broadcast-semi scan
+    // of newL); both label joins below then run against a ball-sized
+    // hinted frame instead of exchanging the node universe (r14)
+    val ends = aff.incident.select(col("a").as("node"))
+      .unionByName(aff.incident.select(col("b").as("node"))).distinct()
+    val labInc = mh(aff.newL.join(mh(ends), Seq("node"), "left_semi")
+      .localCheckpoint(true))
+    val sided = aff.incident
+      .join(labInc.select(col("node").as("a"), col("lab").as("la")), "a")
+      .join(labInc.select(col("node").as("b"), col("lab").as("lb")), "b")
+      .where(col("la") =!= col("lb"))
+    val cut = sided.select(col("la").as("lab"))
+      .unionByName(sided.select(col("lb").as("lab")))
+      .join(aff.labels, Seq("lab"), "left_semi")
+      .groupBy(col("lab")).agg(count(lit(1)).as("cut"))
+    val recount = byLab.join(cut, Seq("lab"), "left")
+      .withColumn("cut", coalesce(col("cut"), lit(0L)))
+    val verbatim = prevStats
+      .select(col("label").as("lab"), col("n_nodes"), col("vol"), col("cut"))
+      .join(aff.labels, Seq("lab"), "left_anti")
+    verbatim.unionByName(recount)
+      .withColumn("m", lit(aff.mTotal))
+      .withColumn("phi_ppm", expr(
+        """case when least(vol, 2L * m - vol) = 0L then
+          |  cast(raise_error('incrementalConductance: community spans the whole graph - phi undefined') as bigint)
+          |else (cast(cut as decimal(38,0)) * 1000000) div least(vol, 2L * m - vol) end""".stripMargin))
+      .select(col("lab").as("label"), col("n_nodes"), col("vol"),
+        col("cut"), col("phi_ppm"))
+  }
+
+  /** What [[incrementalConductance]] and [[incrementalModularity]] recount
+    * from: the global edge total `mTotal`, the maintained assignment
+    * `newL`, the affected community `labels` and their member `nodes`,
+    * every union edge with an endpoint among those nodes (`incident`),
+    * those nodes' degrees `deg` (node, deg), and the size-gated hinter. */
+  private final case class AffectedCommunities(mTotal: Long, newL: DataFrame,
+      labels: DataFrame, nodes: DataFrame, incident: DataFrame, deg: DataFrame,
+      mh: DataFrame => DataFrame)
+
+  private def affectedCommunities(prevLabels: DataFrame, newLabels: DataFrame,
+      baseEdges: DataFrame, deltaEdges: DataFrame,
+      lpaRounds: Int): AffectedCommunities = {
     require(lpaRounds >= 0 && lpaRounds <= 10, "lpaRounds in [0,10]")
     def norm(df: DataFrame) = df.toDF("a", "b")
       .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
@@ -2211,16 +2106,16 @@ object Graphs {
     // caller pins it (every query/spec does); an internal checkpoint
     // here double-materialized it, measured +2 s on q318's fixture
     val base = norm(baseEdges)
-    // size-gated hints (the [[frontierHinter]] trade), decided on base
-    val mh = frontierHinter(base)
+    // size-gated hints (the [[Ladder.hinter]] trade), decided on base
+    val mh = Ladder.hinter(base)
     val delta = mh(norm(deltaEdges).distinct().localCheckpoint(true))
     // NO full-graph distinct (the r13 incrementalKatz finding): base is
-    // canonical by [[conductanceByCommunity]]'s contract, delta is
-    // distinct-ed above, and the base∩delta dedup happens AFTER the
-    // ball restriction (`incident` below — the only place union rows
-    // are COUNTED); the global edge total is three cheap counts, not a
-    // full exchange: m = |base| + |delta| − |base ∩ delta| (the overlap
-    // probe scans base against the broadcast delta)
+    // canonical by the batch readouts' contract, delta is distinct-ed
+    // above, and the base∩delta dedup happens AFTER the ball restriction
+    // (`incident` below — the only place union rows are COUNTED); the
+    // global edge total is three cheap counts, not a full exchange:
+    // m = |base| + |delta| − |base ∩ delta| (the overlap probe scans base
+    // against the broadcast delta)
     val union = base.unionByName(delta)
     val mTotal = base.count() + delta.count() -
       base.join(delta, Seq("a", "b"), "left_semi").count()
@@ -2242,19 +2137,11 @@ object Graphs {
     } else {
       // LPA-maintained labels: only the delta's <=R-hop ball can move.
       // BFS over the symmetric union with hinted frontiers — shuffle is
-      // the ball-sized groupBy-min, never a node-universe exchange.
+      // ball-sized, never a node-universe exchange.
       val symU = union
         .unionByName(union.select(col("b").as("a"), col("a").as("b")))
-      var ball = dNodes.withColumn("d", lit(0L)).localCheckpoint(true)
-      for (i <- 1 to lpaRounds) {
-        val frontier = mh(ball.where(col("d") === (i - 1).toLong)
-          .select(col("node").as("a")))
-        ball = ball.unionByName(symU.join(frontier, "a")
-            .select(col("b").as("node"), lit(i.toLong).as("d")))
-          .groupBy(col("node")).agg(min(col("d")).as("d"))
-          .localCheckpoint(true)
-      }
-      val ballN = mh(ball.select(col("node")))
+      val ballN = mh(ball(symU.select(col("a").as("src"), col("b").as("dst")),
+        dNodes, lpaRounds, mh).select(col("node")))
       newL.join(ballN, Seq("node"), "left_semi").as("n")
         .join(prevL.join(ballN, Seq("node"), "left_semi").as("p"),
           col("n.node") === col("p.node"), "full")
@@ -2286,39 +2173,7 @@ object Graphs {
       .unionByName(incident.select(col("b").as("a"), col("a").as("b")))
     val deg = symInc.join(affNodes.select(col("node").as("a")), Seq("a"), "left_semi")
       .groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-    val byLab = deg.join(affNodes, "node")
-      .groupBy(col("lab"))
-      .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("vol"))
-    // cut recount: the OTHER endpoint's label comes from the full
-    // assignment — but only incident-edge ENDPOINTS are ever consulted,
-    // so restrict the assignment to them first (one broadcast-semi scan
-    // of newL); both label joins below then run against a ball-sized
-    // hinted frame instead of exchanging the node universe (r14)
-    val ends = incident.select(col("a").as("node"))
-      .unionByName(incident.select(col("b").as("node"))).distinct()
-    val labInc = mh(newL.join(mh(ends), Seq("node"), "left_semi")
-      .localCheckpoint(true))
-    val sided = incident
-      .join(labInc.select(col("node").as("a"), col("lab").as("la")), "a")
-      .join(labInc.select(col("node").as("b"), col("lab").as("lb")), "b")
-      .where(col("la") =!= col("lb"))
-    val cut = sided.select(col("la").as("lab"))
-      .unionByName(sided.select(col("lb").as("lab")))
-      .join(affected, Seq("lab"), "left_semi")
-      .groupBy(col("lab")).agg(count(lit(1)).as("cut"))
-    val recount = byLab.join(cut, Seq("lab"), "left")
-      .withColumn("cut", coalesce(col("cut"), lit(0L)))
-    val verbatim = prevStats
-      .select(col("label").as("lab"), col("n_nodes"), col("vol"), col("cut"))
-      .join(affected, Seq("lab"), "left_anti")
-    verbatim.unionByName(recount)
-      .withColumn("m", lit(mTotal))
-      .withColumn("phi_ppm", expr(
-        """case when least(vol, 2L * m - vol) = 0L then
-          |  cast(raise_error('incrementalConductance: community spans the whole graph - phi undefined') as bigint)
-          |else (cast(cut as decimal(38,0)) * 1000000) div least(vol, 2L * m - vol) end""".stripMargin))
-      .select(col("lab").as("label"), col("n_nodes"), col("vol"),
-        col("cut"), col("phi_ppm"))
+    AffectedCommunities(mTotal, newL, affected, affNodes, incident, deg, mh)
   }
 
   /** The floor-safe ppm division shared by [[modularityByCommunity]] and
@@ -2368,86 +2223,14 @@ object Graphs {
   def incrementalModularity(prevStats: DataFrame, prevLabels: DataFrame,
       newLabels: DataFrame, baseEdges: DataFrame,
       deltaEdges: DataFrame, lpaRounds: Int = 0): DataFrame = {
-    require(lpaRounds >= 0 && lpaRounds <= 10, "lpaRounds in [0,10]")
-    def norm(df: DataFrame) = df.toDF("a", "b")
-      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-    def labs(df: DataFrame) = df.toDF("node", "lab")
-      .select(col("node").cast("long").as("node"), col("lab").cast("long").as("lab"))
-    // base is SCANNED repeatedly (the gate count + semi-joins) — the
-    // caller pins it (every query/spec does); an internal checkpoint
-    // here double-materialized it, measured +2 s on q318's fixture
-    val base = norm(baseEdges)
-    // size-gated hints (the [[frontierHinter]] trade), decided on base
-    val mh = frontierHinter(base)
-    val delta = mh(norm(deltaEdges).distinct().localCheckpoint(true))
-    // NO full-graph distinct (the r13 incrementalKatz finding; the
-    // incrementalConductance reshape mirrored here): base is canonical
-    // by [[modularityByCommunity]]'s contract, and the base∩delta dedup
-    // happens on the ball-local `incident` set — the only rows the
-    // recount aggregates. m = |base| + |delta| − |base ∩ delta| via
-    // three cheap counts (the overlap probe scans base against the
-    // broadcast delta)
-    val union = base.unionByName(delta)
-    val mTotal = base.count() + delta.count() -
-      base.join(delta, Seq("a", "b"), "left_semi").count()
-    val prevL = labs(prevLabels)
-    val newL = labs(newLabels).localCheckpoint(true)
-    // hinted delta endpoints + the optional ball-restricted relabel
-    // diff — the incrementalConductance r14 reshape, verbatim
-    val dNodes = mh(delta.select(col("a").as("node"))
-      .unionByName(delta.select(col("b").as("node"))).distinct()
-      .localCheckpoint(true))
-    val changed = if (lpaRounds == 0) {
-      newL.as("n")
-        .join(prevL.as("p"), col("n.node") === col("p.node"), "full")
-        .where(col("p.lab").isNull || col("n.lab").isNull ||
-          col("p.lab") =!= col("n.lab"))
-    } else {
-      val symU = union
-        .unionByName(union.select(col("b").as("a"), col("a").as("b")))
-      var ball = dNodes.withColumn("d", lit(0L)).localCheckpoint(true)
-      for (i <- 1 to lpaRounds) {
-        val frontier = mh(ball.where(col("d") === (i - 1).toLong)
-          .select(col("node").as("a")))
-        ball = ball.unionByName(symU.join(frontier, "a")
-            .select(col("b").as("node"), lit(i.toLong).as("d")))
-          .groupBy(col("node")).agg(min(col("d")).as("d"))
-          .localCheckpoint(true)
-      }
-      val ballN = mh(ball.select(col("node")))
-      newL.join(ballN, Seq("node"), "left_semi").as("n")
-        .join(prevL.join(ballN, Seq("node"), "left_semi").as("p"),
-          col("n.node") === col("p.node"), "full")
-        .where(col("p.lab").isNull || col("n.lab").isNull ||
-          col("p.lab") =!= col("n.lab"))
-    }
-    val deltaEnds = newL.join(dNodes, Seq("node"), "left_semi")
-      .select(col("lab"))
-    val affected = mh(changed.select(col("n.lab").as("lab"))
-      .unionByName(changed.select(col("p.lab").as("lab")))
-      .where(col("lab").isNotNull)
-      .unionByName(deltaEnds)
-      .distinct().localCheckpoint(true))
-    val affNodes = mh(newL.join(affected, Seq("lab"), "left_semi")
-      .localCheckpoint(true))
-    // every edge at an affected node (degrees and intra-edges of
-    // affected communities only ever touch these rows)
-    val incident = mh(union
-      .join(affNodes.select(col("node").as("a")), Seq("a"), "left_semi")
-      .unionByName(union
-        .join(affNodes.select(col("node").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b")))
-      .distinct().localCheckpoint(true))
-    val symInc = incident
-      .unionByName(incident.select(col("b").as("a"), col("a").as("b")))
-    val deg = symInc.join(affNodes.select(col("node").as("a")), Seq("a"), "left_semi")
-      .groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-    val byLab = deg.join(affNodes, "node")
+    val aff = affectedCommunities(prevLabels, newLabels, baseEdges, deltaEdges,
+      lpaRounds)
+    val byLab = aff.deg.join(aff.nodes, "node")
       .groupBy(col("lab"))
       .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("deg_sum"))
-    val intra = incident
-      .join(affNodes.select(col("node").as("a"), col("lab").as("la")), "a")
-      .join(affNodes.select(col("node").as("b"), col("lab").as("lb")), "b")
+    val intra = aff.incident
+      .join(aff.nodes.select(col("node").as("a"), col("lab").as("la")), "a")
+      .join(aff.nodes.select(col("node").as("b"), col("lab").as("lb")), "b")
       .where(col("la") === col("lb"))
       .groupBy(col("la").as("lab")).agg(count(lit(1)).as("intra_edges"))
     val recount = byLab.join(intra, Seq("lab"), "left")
@@ -2455,9 +2238,9 @@ object Graphs {
     val verbatim = prevStats
       .select(col("label").as("lab"), col("n_nodes"), col("deg_sum"),
         col("intra_edges"))
-      .join(affected, Seq("lab"), "left_anti")
+      .join(aff.labels, Seq("lab"), "left_anti")
     verbatim.unionByName(recount)
-      .withColumn("m", lit(mTotal))
+      .withColumn("m", lit(aff.mTotal))
       .withColumn("q_ppm", shiftedQppm)
       .select(col("lab").as("label"), col("n_nodes"), col("deg_sum"),
         col("intra_edges"), col("q_ppm"))
@@ -2603,28 +2386,26 @@ object Graphs {
     var progress = true
     while (outer < outerRounds && progress && !unassigned.isEmpty) {
       outer += 1
-      val sub0 = e
+      val sub0 = Ladder.step(e
         .join(unassigned.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(unassigned.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")).localCheckpoint(true)
+        .select(col("src"), col("dst")))
       // TRIM: in-degree-0 or out-degree-0 nodes are singleton SCCs
-      val trivial = unassigned
+      val trivial = Ladder.step(unassigned
         .join(sub0.select(col("dst").as("node")), Seq("node"), "left_anti")
         .unionByName(unassigned
           .join(sub0.select(col("src").as("node")), Seq("node"), "left_anti"))
-        .distinct().localCheckpoint(true)
+        .distinct())
       done += trivial.select(col("node"), col("node").as("scc"),
         lit(true).as("settled"))
-      unassigned = unassigned
-        .join(trivial, Seq("node"), "left_anti").localCheckpoint(true)
-      val sub = sub0
+      unassigned = Ladder.step(unassigned.join(trivial, Seq("node"), "left_anti"))
+      val sub = Ladder.step(sub0
         .join(trivial.select(col("node").as("src")), Seq("src"), "left_anti")
         .join(trivial.select(col("node").as("dst")), Seq("dst"), "left_anti")
-        .select(col("src"), col("dst")).localCheckpoint(true)
+        .select(col("src"), col("dst")))
       // forward min-label relaxation, fixpoint-exited (a chg marker
       // rides the already-checkpointed frame — no second join)
-      var f = unassigned.select(col("node"), col("node").as("f"))
-        .localCheckpoint(true)
+      var f = Ladder.step(unassigned.select(col("node"), col("node").as("f")))
       var fwdConverged = false
       var fr = 0
       while (fr < innerRounds && !fwdConverged) {
@@ -2632,11 +2413,10 @@ object Graphs {
         val prop = sub
           .join(f.select(col("node").as("src"), col("f")), "src")
           .groupBy(col("dst").as("node")).agg(min(col("f")).as("pf"))
-        val f2 = f.join(prop, Seq("node"), "left_outer")
+        val f2 = Ladder.step(f.join(prop, Seq("node"), "left_outer")
           .select(col("node"),
             least(col("f"), coalesce(col("pf"), col("f"))).as("f"),
-            (coalesce(col("pf"), col("f")) < col("f")).as("chg"))
-          .localCheckpoint(true)
+            (coalesce(col("pf"), col("f")) < col("f")).as("chg")))
         fwdConverged = f2.where(col("chg")).isEmpty
         f = f2.select(col("node"), col("f"))
       }
@@ -2647,19 +2427,18 @@ object Graphs {
           .join(f.select(col("node").as("src"), col("f").as("fu")), "src")
           .join(f.select(col("node").as("dst"), col("f").as("fv")), "dst")
           .where(col("fu") < col("fv")).isEmpty
-      var frontier = f.where(col("node") === col("f")).localCheckpoint(true)
+      var frontier = Ladder.step(f.where(col("node") === col("f")))
       var reached = frontier
       var bwdConverged = false
       var br = 0
       def nextFrontier(): DataFrame = {
         val r0 = reached
-        sub
+        Ladder.step(sub
           .join(frontier.select(col("node").as("dst"), col("f").as("bf")), "dst")
           .select(col("src").as("node"), col("bf")).distinct()
           .join(f, "node").where(col("f") === col("bf"))
           .select(col("node"), col("f"))
-          .join(r0, Seq("node"), "left_anti")
-          .localCheckpoint(true)
+          .join(r0, Seq("node"), "left_anti"))
       }
       while (br < innerRounds && !bwdConverged) {
         br += 1
@@ -2675,9 +2454,8 @@ object Graphs {
       if (fwdConverged && bwdConverged) {
         done += reached.select(col("node"), col("f").as("scc"),
           lit(true).as("settled"))
-        unassigned = unassigned
-          .join(reached.select(col("node")), Seq("node"), "left_anti")
-          .localCheckpoint(true)
+        unassigned = Ladder.step(unassigned
+          .join(reached.select(col("node")), Seq("node"), "left_anti"))
         progress = true
       } else {
         // nothing colored may settle; without trim progress the next
@@ -2777,8 +2555,8 @@ object Graphs {
     // caller pins it (every query/spec does); an internal checkpoint
     // here double-materialized it, measured +2 s on q318's fixture
     val base = norm(baseEdges)
-    // size-gated hints (the [[frontierHinter]] trade), decided on base
-    val mh = frontierHinter(base)
+    // size-gated hints (the [[Ladder.hinter]] trade), decided on base
+    val mh = Ladder.hinter(base)
     val delta0 = mh(norm(deltaEdges).distinct().localCheckpoint(true))
     val overlap = mh(base.join(delta0, Seq("a", "b"), "left_semi")
       .localCheckpoint(true))
@@ -2984,76 +2762,6 @@ object Graphs {
   private def hash60(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     Sampling.portableHash(c)
 
-  /** Broadcast-hint an already-materialized model-state frame when it is
-    * ACTUALLY small. `localCheckpoint` erases precise stats (the
-    * LogicalRDD reports the default size), so without the hint Spark
-    * plans SortMergeJoin and PAYS the big side's exchange before AQE's
-    * runtime conversion can see the real size — measured 2× the full
-    * recompute's shuffle on incrementalKatz at 1M edges
-    * (MaintenanceCostSpec). The count is a cheap action over
-    * already-materialized partitions; above the threshold the frame is
-    * returned unhinted — ball-sized state IS graph-sized on an expander,
-    * and force-broadcasting what might not fit trades a shuffle for an
-    * OOM. The gate is rows AND estimated bytes (rows × Σ field
-    * defaultSize, ADVICE r13): a near-threshold WIDE frame — e.g. a
-    * labeledBfs (seed, node, d) ball at 2M rows — estimates tens of MB
-    * and must not be force-broadcast under the repo's 2 GB-driver
-    * stress profile just because its row count squeaked under the cap. */
-  private[graft] def hintIfSmall(df: DataFrame,
-      maxRows: Long = 2000000L, maxBytes: Long = 48L << 20): DataFrame = {
-    val rowBytes = df.schema.map(_.dataType.defaultSize.toLong).sum.max(1L)
-    val n = df.count()
-    if (n <= maxRows && n * rowBytes <= maxBytes) broadcast(df) else df
-  }
-
-  /** ONE gating decision per operator call for the frontier/ball hints:
-    * each [[hintIfSmall]] costs a count JOB per round (~50 ms of
-    * scheduling), which only amortizes when the scanned side is big
-    * enough that the exchange it avoids dominates — measured +1.4 s on
-    * q312's ~8k-edge host graph (24 pointless count jobs) vs a 122 →
-    * 0.1 MB shuffle cut on the 1M-edge ring forest. Below the threshold
-    * the un-hinted plan's exchanges are a few MB and CHEAPER than the
-    * jobs; above it the jobs are noise against the scans. The count
-    * itself runs once per call on an already-pinned/checkpointed frame. */
-  private def frontierHinter(big: DataFrame): DataFrame => DataFrame =
-    if (big.count() > 500000L) hintIfSmall(_) else identity
-
-  /** Pin an edge frame for a per-round JOIN LADDER and decide the
-    * frontier-hint policy in the same size gate (guide §2.4 "two
-    * operations keyed the same way can share one exchange"):
-    *
-    *  - SMALL graphs (≤ the [[frontierHinter]] gate): hash-partition the
-    *    frame by `key` ONCE before the pin, so every round's
-    *    edges ⋈ frontier join reuses that partitioning instead of
-    *    re-exchanging the static edge frame per round — the
-    *    labelPropagation idiom (r14 change 4; a cached frame's
-    *    outputPartitioning survives InMemoryTableScan). No hints: below
-    *    the gate the hint's per-round count jobs cost more than the
-    *    KB-size exchanges they would avoid (measured, frontierHinter
-    *    doc).
-    *  - BIG graphs: the per-round joins broadcast the frontier instead
-    *    (the returned hinter), so the edge side is never exchanged at
-    *    all and an upfront repartition would be a pure extra full-graph
-    *    exchange — skipped.
-    *
-    * Returns (pinned edge frame, frontier hinter). Results are
-    * partitioning-independent; only the plan changes. */
-  private def pinLadderEdges(e: DataFrame, key: String)
-      : (DataFrame, DataFrame => DataFrame) = {
-    val raw = PinnedCache.pin(e)
-    val n = raw.count()
-    // LOW gate (measured, r15 subset A/B): ball-probe ladders over TINY
-    // graphs (the incremental forms' ≤few-k-edge balls — katz/truss/
-    // betweenness maintenance) lost 20–30% to the repartition + second
-    // cache materialization, because their per-round joins broadcast the
-    // sub-64m edge side anyway; below the gate the r13 plain-pin plan is
-    // kept byte-identical. Between the gates the pre-partition wins
-    // (q187/q220/q307/q309: 1.16–1.40× same-window).
-    if (n > 500000L) (raw, hintIfSmall(_))
-    else if (n < 32768L) (raw, identity)
-    else (PinnedCache.pin(raw.repartition(col(key))), identity)
-  }
-
   /** Deterministic ADJACENCY CAP — the hub pre-step for the walk tier:
     * [[node2vecWalks]]'s second-order fan-out is |frontier|·deg(cur),
     * so one 10⁷-degree hub makes that key's candidate list the
@@ -3125,20 +2833,21 @@ object Graphs {
       .localCheckpoint(true)
     // distinct origins: a duplicated origin row would emit duplicate
     // (origin, walk) state rows and duplicate corpus rows
-    var state = origins.toDF("origin").distinct()
+    val start = origins.toDF("origin").distinct()
       .select(col("origin"),
         explode(array((0 until walksPerNode).map(w => lit(w.toLong)): _*)).as("walk"))
       .withColumn("cur", col("origin"))
       .localCheckpoint(true)
-    var out = state.select(col("origin"), col("walk"),
-      lit(0L).as("step"), col("cur").as("node"))
-    for (s <- 1 to steps) {
-      state = walkHop(state, degT, adj, s).localCheckpoint(true)
-      out = out.unionByName(state.select(col("origin"), col("walk"),
-        lit(s.toLong).as("step"), col("cur").as("node")))
-    }
-    out
+    walkCorpus(Ladder.trace(start, steps)(walkHop(_, degT, adj, _)))
   }
+
+  /** The (origin, walk, step, node) corpus of a walk ladder's per-step
+    * states (origin, walk, cur, …), step 0 = the origins. */
+  private def walkCorpus(states: IndexedSeq[DataFrame]): DataFrame =
+    states.zipWithIndex.map { case (state, s) =>
+      state.select(col("origin"), col("walk"),
+        lit(s.toLong).as("step"), col("cur").as("node"))
+    }.reduce(_ unionByName _)
 
   /** INCREMENTAL [[randomWalks]] — the walk-CORPUS maintained form
     * (the q304/q311/q324 discipline applied to a training-data
@@ -3249,14 +2958,12 @@ object Graphs {
     // (origin, walk) state rows, and the (origin, walk)-keyed cumulative
     // window would then double-count tied dst candidates (tot doubled,
     // overlapping slots) — walks silently vanish or fork
-    var state = origins.toDF("origin").distinct()
+    val start = origins.toDF("origin").distinct()
       .select(col("origin"),
         explode(array((0 until walksPerNode).map(w => lit(w.toLong)): _*)).as("walk"))
       .withColumn("prev", col("origin")).withColumn("cur", col("origin"))
       .localCheckpoint(true)
-    var out = state.select(col("origin"), col("walk"),
-      lit(0L).as("step"), col("cur").as("node"))
-    for (s <- 1 to steps) {
+    walkCorpus(Ladder.trace(start, steps) { (state, s) =>
       val fan = state.join(e, col("cur") === col("src"))
       val cands =
         if (s == 1) fan.withColumn("wt", lit(1L))
@@ -3267,11 +2974,8 @@ object Graphs {
             when(col("dst") === col("prev"), retW.toLong)
               .when(col("c_src").isNotNull, comW.toLong)
               .otherwise(outW.toLong))
-      state = pick(cands, s).localCheckpoint(true)
-      out = out.unionByName(state.select(col("origin"), col("walk"),
-        lit(s.toLong).as("step"), col("cur").as("node")))
-    }
-    out
+      pick(cands, s)
+    })
   }
 
   /** SKIP-GRAM (center, context) pair counts from a walk corpus — the
@@ -3388,17 +3092,12 @@ object Graphs {
   def kTrussTrace(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3 && k <= 10, "k in [3,10]")
     require(rounds >= 1 && rounds <= 10, "rounds in [1,10]")
-    var cur = canonicalEdges(edges).localCheckpoint(true)
-    val chunks = scala.collection.mutable.ArrayBuffer(
-      cur.select(lit(0L).as("round"), col("a"), col("b")))
-    for (r <- 1 to rounds) {
-      cur = cur
-        .join(edgeSupport(cur, cur).where(col("support") >= (k - 2).toLong),
-          Seq("a", "b"), "left_semi")
-        .localCheckpoint(true)
-      chunks += cur.select(lit(r.toLong).as("round"), col("a"), col("b"))
-    }
-    chunks.reduce(_ unionByName _)
+    Ladder.trace(canonicalEdges(edges).localCheckpoint(true), rounds) { (cur, _) =>
+      cur.join(edgeSupport(cur, cur).where(col("support") >= (k - 2).toLong),
+        Seq("a", "b"), "left_semi")
+    }.zipWithIndex.map { case (cur, r) =>
+      cur.select(lit(r.toLong).as("round"), col("a"), col("b"))
+    }.reduce(_ unionByName _)
   }
 
   /** INCREMENTAL [[kTrussEdges]] — the TWELFTH maintained form, the
@@ -3453,17 +3152,14 @@ object Graphs {
           allE.join(ballNodes.select(col("node").as("b")), Seq("b"), "left_semi")
             .select(col("a"), col("b")))
         .distinct())
-    var curA = affected.localCheckpoint(true)
-    for (r <- 1 to rounds) {
+    val curA = Ladder.trace(affected.localCheckpoint(true), rounds) { (cur, r) =>
       val outOfBall = trace.where(col("round") === (r - 1).toLong)
         .select(col("a"), col("b"))
         .join(affected, Seq("a", "b"), "left_anti")
-      val ctx = curA.unionByName(outOfBall)
-      curA = curA
-        .join(edgeSupport(curA, ctx).where(col("support") >= (k - 2).toLong),
-          Seq("a", "b"), "left_semi")
-        .localCheckpoint(true)
-    }
+      val ctx = cur.unionByName(outOfBall)
+      cur.join(edgeSupport(cur, ctx).where(col("support") >= (k - 2).toLong),
+        Seq("a", "b"), "left_semi")
+    }.last
     val passThrough = trace.where(col("round") === rounds.toLong)
       .select(col("a"), col("b"))
       .join(affected, Seq("a", "b"), "left_anti")
@@ -3514,18 +3210,16 @@ object Graphs {
     // ShuffleExchangeExec) in the driver's gate (VERDICT r14 item 1).
     val sym = (if (canonicalInput) sym0.repartition(col("a")) else sym0.distinct())
       .localCheckpoint(true)
-    var labels = sym.select(col("a").as("node")).distinct()
+    val init = sym.select(col("a").as("node")).distinct()
       .withColumn("lab", col("node")).localCheckpoint(true)
-    (1 to rounds).map { _ =>
-      labels = sym
+    Ladder.trace(init, rounds) { (labels, _) =>
+      sym
         .join(labels.select(col("node").as("a"), col("lab")), "a")
         .groupBy(col("b").as("node"), col("lab")).agg(count(lit(1)).as("cnt"))
         // argmax by (count desc, label asc) as one struct-min: total order
         .groupBy(col("node"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lab").as("lab"))).as("s"))
         .select(col("node"), col("s.lab").as("lab"))
-        .localCheckpoint(true)
-      labels
-    }
+    }.tail
   }
 }

@@ -71,7 +71,7 @@ object DagQueries {
 
   /** Per-user changed-value emissions through REPLAY CYCLES with NOTHING
     * materialized on the driver: the fact table streams through
-    * [[graft.replay.ParquetStatsReplaySource]] (footer-stats cursor, lazy
+    * [[graft.replay.V2ReplaySource]] (footer-stats cursor, lazy
     * slices), each cycle computes hour buckets + last-per-(user, hour) +
     * change-vs-held-state as Spark plans, and the held state itself is a
     * keyed DataFrame upserted per cycle (the reference's in-memory node
@@ -90,11 +90,9 @@ object DagQueries {
     import org.apache.spark.sql.expressions.Window
     val HourNs = 3600L * 1000000000L
     val WeekNs = 7L * 24 * HourNs
-    // V2ReplaySource: same footer-stats cursor contract as
-    // ParquetStatsReplaySource (agreement-tested), but slices plan through
-    // the graft-replay connector — the footer index is read once and every
-    // weekly cycle's planning is in-memory row-group filtering with the ts
-    // bounds pushed into the scan.
+    // V2ReplaySource: slices plan through the graft-replay connector — the
+    // footer index is read once and every weekly cycle's planning is
+    // in-memory row-group filtering with the ts bounds pushed into the scan.
     val eventsSource = new V2ReplaySource(s, s"$dir/events.parquet", "ts")
     // Cycle boundaries must be hour-aligned (so no hour bucket is split
     // across cycles) and the horizon must reach past the last event at the

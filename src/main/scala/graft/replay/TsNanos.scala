@@ -1,9 +1,9 @@
 package graft.replay
 
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, lit, unix_micros}
-import org.apache.spark.sql.types.{DataType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, unix_micros}
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** Engine-wide event-time convention: `ts` is a LONG of epoch NANOS
   * (DEVNOTES #2 — the dag's virtual clock, cutoffs, and replay cursors all
@@ -25,37 +25,6 @@ object TsNanos {
         df.withColumn(tsCol, unix_micros(col(tsCol).cast(TimestampType)) * 1000L)
       case _ => df
     }
-
-  /** A micros-precision literal matching the column's own timestamp type,
-    * so comparisons stay on the RAW column and parquet row-group pruning /
-    * predicate pushdown still fire (a predicate on the normalized long
-    * projection would not reach the scan). */
-  private def microsLiteral(us: Long, dt: DataType): Column = {
-    val s = Math.floorDiv(us, 1000000L)
-    val nanoAdj = (Math.floorMod(us, 1000000L) * 1000L).toInt
-    dt match {
-      case TimestampNTZType =>
-        lit(java.time.LocalDateTime.ofEpochSecond(s, nanoAdj, java.time.ZoneOffset.UTC))
-      case _ => lit(java.time.Instant.ofEpochSecond(s, nanoAdj.toLong))
-    }
-  }
-
-  /** The replay window `(fromNs, toNs]` as a slice whose predicate sits on
-    * the raw column representation (long compare for long columns; a
-    * same-type timestamp literal for timestamp columns — for micros data,
-    * `ts_ns > from ⟺ ts_us > floor(from/1000)` and
-    * `ts_ns <= to ⟺ ts_us <= floor(to/1000)`, exact because the data
-    * grid is micros), then normalized to long nanos. */
-  def slice(df: DataFrame, tsCol: String, fromNs: Long, toNs: Long): DataFrame = {
-    val dt = df.schema.find(_.name == tsCol).map(_.dataType)
-    val pred = dt match {
-      case Some(d @ (TimestampNTZType | TimestampType)) =>
-        col(tsCol) > microsLiteral(Math.floorDiv(fromNs, 1000L), d) &&
-          col(tsCol) <= microsLiteral(Math.floorDiv(toNs, 1000L), d)
-      case _ => col(tsCol) > fromNs && col(tsCol) <= toNs
-    }
-    normalize(df.where(pred), tsCol)
-  }
 
   /** Raw-footer-value → nanos multiplier for a primitive column, from its
     * parquet logical annotation: TIMESTAMP(NANOS) stats are already nanos,

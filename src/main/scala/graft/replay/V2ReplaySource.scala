@@ -12,9 +12,12 @@ import graft.sources.v2.ReplayDataSource
   * by the connector), `getNext` is pure in-memory index math, and every
   * cycle's slice plans O(overlapping row groups) input partitions with the
   * ts bounds pushed into the scan (visible as `graft-replay ... tsRange=`
-  * in the plan). Cursor/count semantics are identical to
-  * [[ParquetStatsReplaySource]] (exact emptiness, upper-bound counts for
-  * partially-overlapping groups — see [[DataSource.length]]). */
+  * in the plan). The cursor runs off parquet footer statistics only:
+  * `getNext` is the min over row groups not yet passed (conservative — a
+  * scheduled cycle may find 0 rows when the range is sparse inside a row
+  * group), emptiness is exact (a limit-1 probe when only partially
+  * overlapping groups remain) and counts are upper bounds for
+  * partially-overlapping groups — see [[DataSource.length]]. */
 final class V2ReplaySource(
     spark: SparkSession, path: String, tsCol: String,
 ) extends DataSource[SparkBatch] {
@@ -24,7 +27,7 @@ final class V2ReplaySource(
   // The cursor's exhaustion test (getNext) and slice counts are driven by
   // row-group stats; a stat-less group would be scanned by the connector
   // (it keeps such groups) but never scheduled by the cursor. Fail fast at
-  // construction instead — same contract as ParquetStatsReplaySource.
+  // construction instead.
   require(groups.forall(g => g.tsMin.isDefined && g.tsMax.isDefined),
     s"V2ReplaySource requires $tsCol min/max statistics in every row group " +
       s"under $path; rewrite the files with stats or use SparkTableDataSource")

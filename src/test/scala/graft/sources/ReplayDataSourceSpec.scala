@@ -201,25 +201,6 @@ class ReplayDataSourceSpec extends AnyFunSuite {
     assert(i2.groups.map(_.rows).sum == 250L)
   }
 
-  test("V2ReplaySource cursor agrees with ParquetStatsReplaySource") {
-    import graft.replay.{ParquetStatsReplaySource, V2ReplaySource}
-    val path = s"$sfDir/events.parquet"
-    val v2 = new V2ReplaySource(spark, path, "ts")
-    val ref = new ParquetStatsReplaySource(spark, path, "ts")
-    assert(v2.minTimestamp == ref.minTimestamp && v2.maxTimestamp == ref.maxTimestamp)
-    assert(v2.getNext == ref.getNext)
-    val step = (v2.maxTimestamp - v2.minTimestamp) / 3
-    Seq(v2.minTimestamp + step, v2.minTimestamp + 2 * step, v2.maxTimestamp).foreach { t =>
-      val a = v2.readTo(t)
-      val b = ref.readTo(t)
-      assert(a.df.count() == b.df.count())
-      assert((a.count == 0) == (b.count == 0)) // exact emptiness contract
-      assert(v2.getNext == ref.getNext)
-    }
-    // exhausted
-    assert(v2.readTo(v2.maxTimestamp + 1).df.isEmpty)
-  }
-
   test("property: random ts slices agree with the built-in source (ids and counts)") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed

@@ -28,8 +28,11 @@ def main(sf_dir, out_dir):
     ok = fail = 0
     for name, sql in sorted(oracle.items()):
         try:
-            want = con.execute(sql).fetch_arrow_table().to_pylist()
-            got = pq.read_table(f"{out_dir}/{name}").to_pylist()
+            # one oracle run and one parquet read per query: rows and
+            # dtypes both come from these two Arrow tables
+            want_t = con.execute(sql).fetch_arrow_table()
+            got_t = pq.read_table(f"{out_dir}/{name}")
+            want, got = want_t.to_pylist(), got_t.to_pylist()
         except Exception as e:
             print(f"FAIL {name}: {type(e).__name__}: {e}")
             fail += 1
@@ -40,8 +43,8 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: column mismatch oracle={sorted(wcols)} spark={sorted(gcols)}")
             fail += 1
             continue
-        wtypes = {f.name: str(f.type) for f in con.execute(sql).fetch_arrow_table().schema}
-        gtypes = {f.name: str(f.type) for f in pq.read_table(f"{out_dir}/{name}").schema}
+        wtypes = {f.name: str(f.type) for f in want_t.schema}
+        gtypes = {f.name: str(f.type) for f in got_t.schema}
         tdiffs = {c: (wtypes[c], gtypes.get(c)) for c in wtypes if wtypes.get(c) != gtypes.get(c)}
         if tdiffs:
             print(f"FAIL {name}: dtype mismatch {tdiffs}")
