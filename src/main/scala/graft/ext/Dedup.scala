@@ -210,6 +210,12 @@ object Dedup {
     * "keep the oldest" dedup survivor. */
   private val ccObsId = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** How long a round waits for its changed-count observation. The
+    * checkpoint action has already finished by then; only the listener
+    * event carrying the metrics is outstanding, so a longer wait means the
+    * event was lost, and the round fails instead of blocking forever. */
+  private val ccObsWait = scala.concurrent.duration.Duration(5, "min")
+
   def connectedComponents(edges: DataFrame): DataFrame = {
     val sym = edges
       .select(col("a_id").as("src"), col("b_id").as("dst"))
@@ -247,7 +253,13 @@ object Dedup {
             .as("changed"))
         .select(col("id"), col("root"))
         .localCheckpoint(true)
-      changed = obs.get("changed").asInstanceOf[Long]
+      changed =
+        try scala.concurrent.Await.result(obs.future, ccObsWait).getAs[Long]("changed")
+        catch {
+          case e: java.util.concurrent.TimeoutException =>
+            throw new IllegalStateException(s"connectedComponents round $round: " +
+              s"observation ${obs.name} reported no metrics within $ccObsWait", e)
+        }
       labels = updated
     }
     labels
@@ -1071,7 +1083,7 @@ object Dedup {
     * and each chunk carries the order-sensitive content fingerprint
     * fpc = Σp·h − (start−1)·Σh. Returns (doc_id, source, cid, len, fpc).
     * Shared by the batch rollup (q289) and the streaming chunker twin
-    * (CdcChunkProcessor parity). */
+    * ([[graft.streaming.TransformWithStateOps.streamingCdcChunks]] parity). */
   def cdcChunks(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wDoc = Window.partitionBy("doc_id").orderBy("p")

@@ -49,6 +49,19 @@ object Evaluation {
                |  end as bigint)""".stripMargin))
       .withColumn("flagged", coalesce(col("z2_ppm") > 4000000L, lit(false)))
 
+  /** JVM mirror of [[withZ2Ppm]]'s exact rational for the streaming A/A
+    * twins: z²·10⁶ = N(c₁n₂−c₂n₁)²·10⁶ / (C(N−C)n₁n₂) in BigInt, truncating
+    * division (numerator ≥ 0, so it equals the decimal(38,0) `div`). None
+    * when degenerate. */
+  def z2PpmJvm(n1: Long, c1: Long, n2: Long, c2: Long): Option[Long] = {
+    val C = c1 + c2; val N = n1 + n2
+    if (C == 0L || C == N || n1 == 0L || n2 == 0L) None
+    else {
+      val d = BigInt(c1) * n2 - BigInt(c2) * n1
+      Some((BigInt(N) * d * d * 1000000 / (BigInt(C) * (N - C) * n1 * n2)).toLong)
+    }
+  }
+
   /** Exact covariance sign + per-pair magnitude for (grp, x, y) rows via
     * the moment identity n·Σxy − Σx·Σy over decimal(38,0). `keys` empty =
     * pooled. cov_pp = sign·(|cov| div n²) — bounded by max|x·y|, so the

@@ -149,7 +149,7 @@ object EventFunnel {
     * same attribute → the runs merge (counts add, the open start is
     * kept); different → the open run closes at the first run's start.
     * Exactly the streaming twin's transition ([[graft.streaming
-    * .TransformWithStateOps.ScdIntervalProcessor]]) expressed as
+    * .TransformWithStateOps.streamingScdIntervals]]) expressed as
     * DataFrame joins, so nightly incremental compaction and the
     * continuous pipeline produce identical histories. All joins key on
     * user_id; per-cycle cost is the SLICE's compaction plus one

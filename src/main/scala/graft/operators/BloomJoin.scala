@@ -53,7 +53,7 @@ object BloomJoin {
   }
 
   /** JVM mirror of [[positions]] for per-row streaming state code
-    * ([[graft.streaming.TransformWithStateOps.BloomDedupProcessor]]):
+    * ([[graft.streaming.TransformWithStateOps.streamingBloomDedup]]):
     * same md5-derived hash ([[Sampling.portableHash]]'s exact definition —
     * first 15 hex chars base-16), same double-hash layout, so a bitset
     * built row-side is interchangeable with one built by the aggregate.

@@ -275,7 +275,7 @@ object DagQueries {
 
   /** The q280 A/A experiment monitor maintained incrementally through dag
     * cycles — the evaluation family's third execution form (batch q280,
-    * streaming AaTestProcessor, and this): per-day two-arm contingency
+    * streaming `streamingAaTest`, and this): per-day two-arm contingency
     * counters merged per cycle, z² derived ONCE from the final state via
     * the same exact-rational select ([[graft.ext.Evaluation.withZ2Ppm]]).
     * Slices split by event_id range, deliberately NOT day-aligned, so

@@ -1,5 +1,8 @@
 package graft.streaming
 
+import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 
@@ -7,8 +10,113 @@ import org.apache.spark.sql.streaming._
   * state AND per-key timers in one API, the direct analog of the engine's
   * state nodes + `TimerManager` (SURVEY.md E3/E7; reference
   * `beavers/dag.py:95-154,501-518`). Requires the RocksDB state store
-  * provider. */
+  * provider.
+  *
+  * Most twins are one of two keyed folds: [[fold]] (one `ValueState` per
+  * key) or [[mapFold]] (rows merged into a `MapState`, then read out).
+  * The rest — timers, `ListState`, read-your-writes within a batch, or a
+  * map plus running totals kept by deltas — are hand-written processors
+  * behind the same [[wire]]. Spark calls `handleInputRows` only for keys
+  * with rows in the batch (`TransformWithStateExec.processNewData` groups
+  * the batch with `GroupedIterator`), so no step sees an empty batch. */
 object TransformWithStateOps {
+
+  private implicit val stringEnc: Encoder[String] = Encoders.STRING
+  private implicit val longEnc: Encoder[Long] = Encoders.scalaLong
+  private implicit val intEnc: Encoder[Int] = Encoders.scalaInt
+  private implicit val boolEnc: Encoder[Boolean] = Encoders.scalaBoolean
+  private def enc[T](implicit e: Encoder[T]): Encoder[T] = e
+  private implicit def tuple2Enc[A: Encoder, B: Encoder]: Encoder[(A, B)] =
+    Encoders.tuple(enc[A], enc[B])
+  private implicit def tuple3Enc[A: Encoder, B: Encoder, C: Encoder]: Encoder[(A, B, C)] =
+    Encoders.tuple(enc[A], enc[B], enc[C])
+  private implicit def tuple4Enc[A: Encoder, B: Encoder, C: Encoder, D: Encoder]
+      : Encoder[(A, B, C, D)] = Encoders.tuple(enc[A], enc[B], enc[C], enc[D])
+  private implicit def tuple5Enc[A: Encoder, B: Encoder, C: Encoder, D: Encoder,
+      E: Encoder]: Encoder[(A, B, C, D, E)] =
+    Encoders.tuple(enc[A], enc[B], enc[C], enc[D], enc[E])
+
+  /** The plumbing every twin shares: key `ds` by `key` and run `p` over it. */
+  private def wire[I, K: Encoder, O <: Product : TypeTag](ds: Dataset[I],
+      mode: OutputMode = OutputMode.Update(), time: TimeMode = TimeMode.None())(
+      key: I => K)(p: StatefulProcessor[K, I, O]): Dataset[O] =
+    ds.groupByKey(key).transformWithState(p, time, mode)(Encoders.product[O])
+
+  /** One `ValueState` per key, `zero` until first written: `step(key,
+    * state, rows)` returns the new state and the rows to emit. */
+  private final class FoldProcessor[K, I, S, O](zero: S, stateEnc: Encoder[S],
+      step: (K, S, Iterator[I]) => (S, IterableOnce[O]))
+      extends StatefulProcessor[K, I, O] {
+
+    @transient private var st: ValueState[S] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState[S]("st", stateEnc, TTLConfig.NONE)
+
+    override def handleInputRows(key: K, rows: Iterator[I],
+        timerValues: TimerValues): Iterator[O] = {
+      val (s, out) = step(key, if (st.exists()) st.get() else zero, rows)
+      st.update(s)
+      out.iterator
+    }
+  }
+
+  /** A keyed [[FoldProcessor]] stream; the state encoder follows the type
+    * of `zero`. */
+  private def fold[I, K: Encoder, S: Encoder, O <: Product : TypeTag](ds: Dataset[I],
+      mode: OutputMode = OutputMode.Update())(key: I => K, zero: S)(
+      step: (K, S, Iterator[I]) => (S, IterableOnce[O])): Dataset[O] =
+    wire(ds, mode)(key)(new FoldProcessor(zero, enc[S], step))
+
+  /** An associative, commutative merge and what an absent entry reads as. */
+  private final case class Merge[V](zero: V, f: (V, V) => V)
+  private val addLong = Merge[Long](0L, _ + _)
+  private val maxLong = Merge[Long](0L, math.max)
+  private val addPair = Merge[(Long, Long)]((0L, 0L), (a, b) => (a._1 + b._1, a._2 + b._2))
+  private val addQuad = Merge[(Long, Long, Long, Long)]((0L, 0L, 0L, 0L),
+    (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4))
+
+  /** A `MapState` per key, one state row per entry: each row maps to one
+    * `(entry, value)`; the batch's values merge per entry first, then into
+    * the map (written only when the entry changes). `readout(key, touched,
+    * map)` sees the entries this batch touched with their merged values and
+    * the map, and returns the rows to emit and the entries to drop (applied
+    * after it returns, so its rows must not read the map lazily). */
+  private final class MapFoldProcessor[K, I, E, V, O](entryEnc: Encoder[E],
+      valueEnc: Encoder[V], entry: I => (E, V), merge: Merge[V],
+      readout: (K, collection.Map[E, V], MapState[E, V]) => (IterableOnce[O], IterableOnce[E]))
+      extends StatefulProcessor[K, I, O] {
+
+    @transient private var st: MapState[E, V] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getMapState[E, V]("st", entryEnc, valueEnc, TTLConfig.NONE)
+
+    override def handleInputRows(key: K, rows: Iterator[I],
+        timerValues: TimerValues): Iterator[O] = {
+      val touched = mutable.HashMap.empty[E, V]
+      rows.foreach { r =>
+        val (e, v) = entry(r)
+        touched(e) = merge.f(touched.getOrElse(e, merge.zero), v)
+      }
+      touched.mapValuesInPlace { (e, v) =>
+        val old = if (st.containsKey(e)) st.getValue(e) else merge.zero
+        val now = merge.f(old, v)
+        if (now != old) st.updateValue(e, now)
+        now
+      }
+      val (out, drop) = readout(key, touched, st)
+      drop.iterator.foreach(st.removeKey)
+      out.iterator
+    }
+  }
+
+  /** A keyed [[MapFoldProcessor]] stream. */
+  private def mapFold[I, K: Encoder, E: Encoder, V: Encoder, O <: Product : TypeTag](
+      ds: Dataset[I])(key: I => K, entry: I => (E, V), merge: Merge[V])(
+      readout: (K, collection.Map[E, V], MapState[E, V]) => (IterableOnce[O], IterableOnce[E]))
+      : Dataset[O] =
+    wire(ds)(key)(new MapFoldProcessor(enc[E], enc[V], entry, merge, readout))
 
   final case class KeyedEvent(key: String, eventTimeMs: Long)
   final case class SessionResult(key: String, events: Long, lastEventMs: Long)
@@ -23,8 +131,7 @@ object TransformWithStateOps {
     @transient private var counts: ValueState[(Long, Long)] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getValueState[(Long, Long)](
-        "counts", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
+      counts = getHandle.getValueState[(Long, Long)]("counts", TTLConfig.NONE)
 
     override def handleInputRows(key: String, rows: Iterator[KeyedEvent],
         timerValues: TimerValues): Iterator[SessionResult] = {
@@ -51,12 +158,8 @@ object TransformWithStateOps {
 
   /** Wire the processor into a stream keyed by `key` with an event-time
     * watermark already applied to `eventTimeMs`'s source column. */
-  def inactivitySessions(ds: Dataset[KeyedEvent], gapMs: Long): Dataset[SessionResult] = {
-    implicit val outEnc: Encoder[SessionResult] = Encoders.product[SessionResult]
-    ds.groupByKey(_.key)(Encoders.STRING)
-      .transformWithState(new InactivitySessionProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Update())
-  }
+  def inactivitySessions(ds: Dataset[KeyedEvent], gapMs: Long): Dataset[SessionResult] =
+    wire(ds, time = TimeMode.EventTime())(_.key)(new InactivitySessionProcessor(gapMs))
 
   final case class GroupToken(grp: String, w: String)
   final case class GroupTopK(grp: String, w: String, c: Long, rk: Long)
@@ -74,35 +177,14 @@ object TransformWithStateOps {
     * never re-aggregates. Production variants can swap the exact map for
     * the bounded Misra-Gries summary ([[graft.ext.Sketches.FreqItems]])
     * when per-group vocabularies are unbounded. */
-  final class GroupTopKProcessor(k: Int)
-      extends StatefulProcessor[String, GroupToken, GroupTopK] {
-
-    @transient private var counts: MapState[String, Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getMapState[String, Long](
-        "counts", Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[GroupToken],
-        timerValues: TimerValues): Iterator[GroupTopK] = {
-      rows.foreach { r =>
-        val prev = if (counts.containsKey(r.w)) counts.getValue(r.w) else 0L
-        counts.updateValue(r.w, prev + 1L)
-      }
+  def groupTopK(ds: Dataset[GroupToken], k: Int): Dataset[GroupTopK] =
+    mapFold(ds)(_.grp, r => (r.w, 1L), addLong) { (key, _, counts) =>
       // q61's ordering exactly: count desc, token asc, rank 1..k
-      counts.iterator().toArray
+      (counts.iterator().toArray
         .sortBy { case (w, c) => (-c, w) }
         .take(k).iterator.zipWithIndex
-        .map { case ((w, c), i) => GroupTopK(key, w, c, i + 1L) }
+        .map { case ((w, c), i) => GroupTopK(key, w, c, i + 1L) }, Nil)
     }
-  }
-
-  def groupTopK(ds: Dataset[GroupToken], k: Int): Dataset[GroupTopK] = {
-    implicit val outEnc: Encoder[GroupTopK] = Encoders.product[GroupTopK]
-    ds.groupByKey(_.grp)(Encoders.STRING)
-      .transformWithState(new GroupTopKProcessor(k),
-        TimeMode.None(), OutputMode.Update())
-  }
 
   final case class TaskAttempt(task: Long, ok: Boolean)
   final case class PassAtKReport(task: Long, n: Long, c: Long,
@@ -117,35 +199,15 @@ object TransformWithStateOps {
     * [[graft.ext.Evaluation.passAtKPpmJvm]] — one formula, two runtimes
     * (the quarterLog2Jvm discipline); TransformWithStateSpec pins the
     * twin across batch splits. */
-  final class PassAtKProcessor
-      extends StatefulProcessor[Long, TaskAttempt, PassAtKReport] {
-
-    @transient private var nc: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      nc = getHandle.getValueState[(Long, Long)](
-        "nc", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[TaskAttempt],
-        timerValues: TimerValues): Iterator[PassAtKReport] = {
-      var (n, c) = if (nc.exists()) nc.get() else (0L, 0L)
+  def passAtKStream(ds: Dataset[TaskAttempt]): Dataset[PassAtKReport] =
+    fold(ds)(_.task, (0L, 0L)) { (key, s, rows) =>
+      var (n, c) = s
       rows.foreach { r => n += 1L; if (r.ok) c += 1L }
-      nc.update((n, c))
-      if (n >= 5L)
-        Iterator.single(PassAtKReport(key, n, c,
-          graft.ext.Evaluation.passAtKPpmJvm(n, c, 1),
-          graft.ext.Evaluation.passAtKPpmJvm(n, c, 3),
-          graft.ext.Evaluation.passAtKPpmJvm(n, c, 5)))
-      else Iterator.empty
+      ((n, c), Option.when(n >= 5L)(PassAtKReport(key, n, c,
+        graft.ext.Evaluation.passAtKPpmJvm(n, c, 1),
+        graft.ext.Evaluation.passAtKPpmJvm(n, c, 3),
+        graft.ext.Evaluation.passAtKPpmJvm(n, c, 5))))
     }
-  }
-
-  def passAtKStream(ds: Dataset[TaskAttempt]): Dataset[PassAtKReport] = {
-    implicit val outEnc: Encoder[PassAtKReport] = Encoders.product[PassAtKReport]
-    ds.groupByKey(_.task)(Encoders.scalaLong)
-      .transformWithState(new PassAtKProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
 
   final case class RateEvent(key: Long, ok: Boolean)
   final case class WilsonReport(key: Long, n: Long, p: Long,
@@ -161,36 +223,18 @@ object TransformWithStateOps {
     * op's decimal(38,0) rails), so the live leaderboard at every prefix
     * equals the batch frame on the same rows. The n > 6·10¹² decimal-
     * domain rail throws, matching the batch raise_error. */
-  final class WilsonProcessor
-      extends StatefulProcessor[Long, RateEvent, WilsonReport] {
-
-    @transient private var np: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      np = getHandle.getValueState[(Long, Long)](
-        "np", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[RateEvent],
-        timerValues: TimerValues): Iterator[WilsonReport] = {
-      var (n, p) = if (np.exists()) np.get() else (0L, 0L)
+  def streamingWilson(ds: Dataset[RateEvent]): Dataset[WilsonReport] =
+    fold(ds)(_.key, (0L, 0L)) { (key, s, rows) =>
+      var (n, p) = s
       rows.foreach { r => n += 1L; if (r.ok) p += 1L }
-      np.update((n, p))
       require(n <= 6000000000000L,
         s"wilson stream: n = $n > 6e12 overflows the decimal(38,0) radicand")
-      val s = BigInt(p) * (n - p) * 1000000000000L / n + 1000000000000L
+      val sq = BigInt(p) * (n - p) * 1000000000000L / n + 1000000000000L
       val lb = ((BigInt(p) + 2) * 1000000 -
-        2 * graft.ext.Sampling.isqrtDecJvm(s)) / (n + 4)
-      Iterator.single(WilsonReport(key, n, p,
-        (BigInt(p) * 1000000 / n).toLong, lb.toLong))
+        2 * graft.ext.Sampling.isqrtDecJvm(sq)) / (n + 4)
+      ((n, p), Iterator.single(WilsonReport(key, n, p,
+        (BigInt(p) * 1000000 / n).toLong, lb.toLong)))
     }
-  }
-
-  def streamingWilson(ds: Dataset[RateEvent]): Dataset[WilsonReport] = {
-    implicit val outEnc: Encoder[WilsonReport] = Encoders.product[WilsonReport]
-    ds.groupByKey(_.key)(Encoders.scalaLong)
-      .transformWithState(new WilsonProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
 
   final case class GroupId(grp: String, id: Long)
   final case class DistinctCount(grp: String, n_distinct: Long, n_words: Long)
@@ -214,15 +258,13 @@ object TransformWithStateOps {
     @transient private var tot: ValueState[(Long, Long)] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      words = getHandle.getMapState[Long, Long](
-        "words", Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-      tot = getHandle.getValueState[(Long, Long)](
-        "tot", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
+      words = getHandle.getMapState[Long, Long]("words", TTLConfig.NONE)
+      tot = getHandle.getValueState[(Long, Long)]("tot", TTLConfig.NONE)
     }
 
     override def handleInputRows(key: String, rows: Iterator[GroupId],
         timerValues: TimerValues): Iterator[DistinctCount] = {
-      val incoming = scala.collection.mutable.Map.empty[Long, Long]
+      val incoming = mutable.Map.empty[Long, Long]
       rows.foreach { r =>
         require(r.id >= 0L,
           s"bitmapDistinct stream: negative id ${r.id} outside the documented non-negative domain")
@@ -244,12 +286,8 @@ object TransformWithStateOps {
     }
   }
 
-  def streamingBitmapDistinct(ds: Dataset[GroupId]): Dataset[DistinctCount] = {
-    implicit val outEnc: Encoder[DistinctCount] = Encoders.product[DistinctCount]
-    ds.groupByKey(_.grp)(Encoders.STRING)
-      .transformWithState(new BitmapDistinctProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
+  def streamingBitmapDistinct(ds: Dataset[GroupId]): Dataset[DistinctCount] =
+    wire(ds)(_.grp)(new BitmapDistinctProcessor)
 
   final case class CatEvent(grp: String, cat: String)
   final case class SimpsonReport(grp: String, n_rows: Long,
@@ -272,16 +310,13 @@ object TransformWithStateOps {
     @transient private var tot: ValueState[(Long, Long, Long)] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      counts = getHandle.getMapState[String, Long](
-        "counts", Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
-      tot = getHandle.getValueState[(Long, Long, Long)]("tot",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.scalaLong), TTLConfig.NONE)
+      counts = getHandle.getMapState[String, Long]("counts", TTLConfig.NONE)
+      tot = getHandle.getValueState[(Long, Long, Long)]("tot", TTLConfig.NONE)
     }
 
     override def handleInputRows(key: String, rows: Iterator[CatEvent],
         timerValues: TimerValues): Iterator[SimpsonReport] = {
-      val incoming = scala.collection.mutable.Map.empty[String, Long]
+      val incoming = mutable.Map.empty[String, Long]
       rows.foreach(r =>
         incoming(r.cat) = incoming.getOrElse(r.cat, 0L) + 1L)
       var (n, k, c2) = if (tot.exists()) tot.get() else (0L, 0L, 0L)
@@ -301,12 +336,8 @@ object TransformWithStateOps {
     }
   }
 
-  def streamingSimpson(ds: Dataset[CatEvent]): Dataset[SimpsonReport] = {
-    implicit val outEnc: Encoder[SimpsonReport] = Encoders.product[SimpsonReport]
-    ds.groupByKey(_.grp)(Encoders.STRING)
-      .transformWithState(new SimpsonProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
+  def streamingSimpson(ds: Dataset[CatEvent]): Dataset[SimpsonReport] =
+    wire(ds)(_.grp)(new SimpsonProcessor)
 
   final case class PairedOutcome(grp: String, aOk: Int, bOk: Int)
   final case class McNemarReport(grp: String, n: Long, b: Long, c: Long,
@@ -323,37 +354,18 @@ object TransformWithStateOps {
     * but a stream must stay alive while disagreements have not yet
     * arrived, so the twin emits the explicit −1 sentinel until the
     * first asymmetric disagreement lands (spec-pinned both ways). */
-  final class McNemarProcessor
-      extends StatefulProcessor[String, PairedOutcome, McNemarReport] {
-
-    @transient private var st: ValueState[(Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Long)]("nbc",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.scalaLong), TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[PairedOutcome],
-        timerValues: TimerValues): Iterator[McNemarReport] = {
-      var (n, b, c) = if (st.exists()) st.get() else (0L, 0L, 0L)
+  def streamingMcNemar(ds: Dataset[PairedOutcome]): Dataset[McNemarReport] =
+    fold(ds)(_.grp, (0L, 0L, 0L)) { (key, s, rows) =>
+      var (n, b, c) = s
       rows.foreach { r =>
         n += 1L
         if (r.aOk == 1 && r.bOk == 0) b += 1L
         else if (r.aOk == 0 && r.bOk == 1) c += 1L
       }
-      st.update((n, b, c))
       val chi2 = if (b + c == 0L) -1L
         else ((BigInt(b) - c).pow(2) * 1000000 / (BigInt(b) + c)).toLong
-      Iterator.single(McNemarReport(key, n, b, c, chi2))
+      ((n, b, c), Iterator.single(McNemarReport(key, n, b, c, chi2)))
     }
-  }
-
-  def streamingMcNemar(ds: Dataset[PairedOutcome]): Dataset[McNemarReport] = {
-    implicit val outEnc: Encoder[McNemarReport] = Encoders.product[McNemarReport]
-    ds.groupByKey(_.grp)(Encoders.STRING)
-      .transformWithState(new McNemarProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
 
   final case class SourceGram(src: String, g: String)
   final case class BoilerCand(source: String, gram: String, lb: Long, n: Long)
@@ -361,13 +373,13 @@ object TransformWithStateOps {
   /** Continuous per-source boilerplate candidates — the streaming twin of
     * [[graft.ext.CorpusMining.boilerplate]], closing the one gap that kept
     * the batch op batch-only: a crawl's per-source gram vocabulary is
-    * UNBOUNDED, so exact `MapState` counting (the [[GroupTopKProcessor]]
-    * shape) would grow state without limit. Instead each source keeps ONE
+    * UNBOUNDED, so exact `MapState` counting (the [[groupTopK]] shape)
+    * would grow state without limit. Instead each source keeps ONE
     * Misra-Gries summary ([[graft.ext.Sketches.FreqItems]]) of its n-gram
     * stream in `ValueState`: k counters + a total, fixed size forever.
-    * The processor calls the batch aggregator's own `reduce` — the two
-    * paths share transition functions, so the sketch guarantees (G1
-    * counters never overcount beyond the shared bound; G3 every gram with
+    * The fold calls the batch aggregator's own `reduce` — the two paths
+    * share transition functions, so the sketch guarantees (G1 counters
+    * never overcount beyond the shared bound; G3 every gram with
     * f·(k+1) > n is tracked) hold verbatim; `TransformWithStateSpec`
     * asserts both against an exact recount across batch splits.
     *
@@ -377,24 +389,24 @@ object TransformWithStateOps {
     * the count lower bound and the source's running gram total `n`.
     * Downstream consumers needing exact counts recount the ≤ k candidates
     * (the q98 `guaranteedHeavyHitters` pattern) — candidates are bounded,
-    * so the recount broadcast-probes. */
-  final class BoilerplateProcessor(k: Int)
-      extends StatefulProcessor[String, SourceGram, BoilerCand] {
-
-    private val mg = new graft.ext.Sketches.FreqItems(k)
-    @transient private var sk: ValueState[graft.ext.FreqBuf] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sk = getHandle.getValueState[graft.ext.FreqBuf](
-        "sk", Encoders.product[graft.ext.FreqBuf], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[SourceGram],
-        timerValues: TimerValues): Iterator[BoilerCand] = {
-      var buf = if (sk.exists()) sk.get() else mg.zero
+    * so the recount broadcast-probes.
+    *
+    * Input is a streaming `documents` frame: split → n-gram explode
+    * (map-only, the batch op's exact gram definition via
+    * [[graft.ext.TextAnalysis.ngramsFromTokens]]) → keyed summary update. */
+  def streamingBoilerplate(docs: DataFrame, textCol: String,
+      srcCol: String, n: Int, k: Int): Dataset[BoilerCand] = {
+    import org.apache.spark.sql.functions._
+    implicit val bufEnc: Encoder[graft.ext.FreqBuf] = Encoders.product[graft.ext.FreqBuf]
+    val mg = new graft.ext.Sketches.FreqItems(k)
+    val grams = docs.select(col(srcCol).as("src"), split(col(textCol), " ").as("toks"))
+      .select(col("src"), explode(graft.ext.TextAnalysis.ngramsFromTokens("toks", n)).as("g"))
+      .as(Encoders.product[SourceGram])
+    fold(grams)(_.src, mg.zero) { (key, s, rows) =>
+      var buf = s
       rows.foreach(r => buf = mg.reduce(buf, r.g))
-      sk.update(buf)
-      buf.counts.toArray.sortBy { case (g, c) => (-c, g) }.iterator
-        .map { case (g, c) => BoilerCand(key, g, c, buf.n) }
+      (buf, buf.counts.toArray.sortBy { case (g, c) => (-c, g) }.iterator
+        .map { case (g, c) => BoilerCand(key, g, c, buf.n) })
     }
   }
 
@@ -412,17 +424,17 @@ object TransformWithStateOps {
     * `positionsJvm`, pinned equal to the Column form in its spec), so a
     * filter primed by the batch aggregate and one built row-by-row here
     * are interchangeable. State is a SPARSE word map (occupied words
-    * only, <= m/64 entries) — the [[GridQuantilesProcessor]] bound style.
+    * only, <= m/64 entries) — the [[streamingGridQuantiles]] bound style.
     * Shard keys ([[ShardedKey.shard]] = any stable hash of the key) to
-    * spread the filters across the state store. */
+    * spread the filters across the state store. Each row's flag reads the
+    * bits earlier rows of the same batch set, so this stays hand-written. */
   final class BloomDedupProcessor(m: Int, j: Int)
       extends StatefulProcessor[Int, ShardedKey, SeenFlag] {
 
     @transient private var words: MapState[Long, Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      words = getHandle.getMapState[Long, Long](
-        "words", Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
+      words = getHandle.getMapState[Long, Long]("words", TTLConfig.NONE)
 
     override def handleInputRows(key: Int, rows: Iterator[ShardedKey],
         timerValues: TimerValues): Iterator[SeenFlag] = {
@@ -442,15 +454,24 @@ object TransformWithStateOps {
     }
   }
 
-  def streamingBloomDedup(ds: Dataset[ShardedKey], m: Int, j: Int): Dataset[SeenFlag] = {
-    implicit val outEnc: Encoder[SeenFlag] = Encoders.product[SeenFlag]
-    ds.groupByKey(_.shard)(Encoders.scalaInt)
-      .transformWithState(new BloomDedupProcessor(m, j),
-        TimeMode.None(), OutputMode.Update())
-  }
+  def streamingBloomDedup(ds: Dataset[ShardedKey], m: Int, j: Int): Dataset[SeenFlag] =
+    wire(ds)(_.shard)(new BloomDedupProcessor(m, j))
 
   final case class SourceDoc(source: String, text: String)
   final case class FunnelCounts(source: String, total: Long, dropped: Long, kept: Long)
+
+  /** Per-source (total, dropped, kept) counters under the keep predicate
+    * `keep` — two longs of state per source, touched sources only. */
+  private def keptCounts(ds: Dataset[SourceDoc])(keep: String => Boolean)
+      : Dataset[FunnelCounts] =
+    fold(ds)(_.source, (0L, 0L)) { (key, s, rows) =>
+      var (total, kept) = s
+      rows.foreach { r =>
+        total += 1
+        if (keep(r.text)) kept += 1
+      }
+      ((total, kept), Iterator.single(FunnelCounts(key, total, total - kept, kept)))
+    }
 
   /** Live per-source Gopher-gate attrition counters — the streaming half
     * of the batch curation funnel (q113/q114): as documents stream in,
@@ -461,33 +482,8 @@ object TransformWithStateOps {
     * nightly batch report reconciles to the same numbers. State: two
     * longs per source. Emits refreshed counters for touched sources only
     * (the only-changed-keys contract). */
-  final class GopherFunnelProcessor
-      extends StatefulProcessor[String, SourceDoc, FunnelCounts] {
-
-    @transient private var counts: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getValueState[(Long, Long)](
-        "counts", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[SourceDoc],
-        timerValues: TimerValues): Iterator[FunnelCounts] = {
-      var (total, kept) = if (counts.exists()) counts.get() else (0L, 0L)
-      rows.foreach { r =>
-        total += 1
-        if (graft.ext.TextAnalysis.gopherKeepJvm(r.text)) kept += 1
-      }
-      counts.update((total, kept))
-      Iterator.single(FunnelCounts(key, total, total - kept, kept))
-    }
-  }
-
-  def streamingGopherFunnel(ds: Dataset[SourceDoc]): Dataset[FunnelCounts] = {
-    implicit val outEnc: Encoder[FunnelCounts] = Encoders.product[FunnelCounts]
-    ds.groupByKey(_.source)(Encoders.STRING)
-      .transformWithState(new GopherFunnelProcessor(),
-        TimeMode.None(), OutputMode.Update())
-  }
+  def streamingGopherFunnel(ds: Dataset[SourceDoc]): Dataset[FunnelCounts] =
+    keptCounts(ds)(graft.ext.TextAnalysis.gopherKeepJvm)
 
   final case class ContamCounts(source: String, docs: Long,
       contaminated: Long, gram_hits: Long)
@@ -499,43 +495,22 @@ object TransformWithStateOps {
     * ([[graft.ext.Curation.gramHashesJvm]], pinned equal in the spec), so
     * a live crawl dashboard shows benchmark leakage per source and the
     * nightly q125 report reconciles exactly. The eval gram set is MODEL
-    * STATE carried in the processor (benchmark-sized — the same
+    * STATE carried in the fold (benchmark-sized — the same
     * broadcast-shape as the batch probe; swap for the Bloom layout at
     * very large eval suites). Keyed state: three longs per source.
     * Emits refreshed counters for touched sources only. */
-  final class DecontaminationProcessor(evalGrams: Set[Long], k: Int,
-      thresholdPpm: Long)
-      extends StatefulProcessor[String, SourceDoc, ContamCounts] {
-
-    @transient private var counts: ValueState[(Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getValueState[(Long, Long, Long)](
-        "counts",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[SourceDoc],
-        timerValues: TimerValues): Iterator[ContamCounts] = {
-      var (docs, contam, hits) = if (counts.exists()) counts.get() else (0L, 0L, 0L)
+  def streamingDecontamination(ds: Dataset[SourceDoc], evalGrams: Set[Long],
+      k: Int = 3, thresholdPpm: Long = 500000L): Dataset[ContamCounts] =
+    fold(ds)(_.source, (0L, 0L, 0L)) { (key, s, rows) =>
+      var (docs, contam, hits) = s
       rows.foreach { r =>
         graft.ext.Curation.contaminationJvm(r.text, evalGrams, k, thresholdPpm)
           .foreach { case (_, nHit, flag) =>
             docs += 1; hits += nHit; if (flag) contam += 1
           }
       }
-      counts.update((docs, contam, hits))
-      Iterator.single(ContamCounts(key, docs, contam, hits))
+      ((docs, contam, hits), Iterator.single(ContamCounts(key, docs, contam, hits)))
     }
-  }
-
-  def streamingDecontamination(ds: Dataset[SourceDoc], evalGrams: Set[Long],
-      k: Int = 3, thresholdPpm: Long = 500000L): Dataset[ContamCounts] = {
-    implicit val outEnc: Encoder[ContamCounts] = Encoders.product[ContamCounts]
-    ds.groupByKey(_.source)(Encoders.STRING)
-      .transformWithState(new DecontaminationProcessor(evalGrams, k, thresholdPpm),
-        TimeMode.None(), OutputMode.Update())
-  }
 
   final case class GroupValue(grp: String, v: Double)
   final case class QuantileRow(grp: String, n: Long, pct: Long, value: Double)
@@ -554,25 +529,14 @@ object TransformWithStateOps {
     * Emits refreshed quantile rows (one per requested percent, ceil-rank
     * convention) for TOUCHED groups only — the reference's
     * only-changed-keys propagation contract. */
-  final class GridQuantilesProcessor(scale: Int, percents: Seq[Int])
-      extends StatefulProcessor[String, GroupValue, QuantileRow] {
-
-    @transient private var bins: MapState[Long, Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      bins = getHandle.getMapState[Long, Long](
-        "bins", Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[GroupValue],
-        timerValues: TimerValues): Iterator[QuantileRow] = {
-      rows.foreach { r =>
-        val b = math.floor(r.v * scale).toLong // exact: scale is 2^k
-        val prev = if (bins.containsKey(b)) bins.getValue(b) else 0L
-        bins.updateValue(b, prev + 1L)
-      }
+  def streamingGridQuantiles(ds: Dataset[GroupValue], scale: Int,
+      percents: Seq[Int]): Dataset[QuantileRow] = {
+    require(scale >= 1 && (scale & (scale - 1)) == 0, "scale must be a power of two")
+    // exact: scale is 2^k
+    mapFold(ds)(_.grp, r => (math.floor(r.v * scale).toLong, 1L), addLong) { (key, _, bins) =>
       val sorted = bins.iterator().toArray.sortBy(_._1)
       val n = sorted.iterator.map(_._2).sum
-      percents.iterator.map { p =>
+      (percents.iterator.map { p =>
         val target = (n * p + 99) / 100
         var cum = 0L
         var i = 0
@@ -583,52 +547,18 @@ object TransformWithStateOps {
           i += 1
         }
         QuantileRow(key, n, p.toLong, hit / scale.toDouble)
-      }
+      }, Nil)
     }
-  }
-
-  def streamingGridQuantiles(ds: Dataset[GroupValue], scale: Int,
-      percents: Seq[Int]): Dataset[QuantileRow] = {
-    require(scale >= 1 && (scale & (scale - 1)) == 0, "scale must be a power of two")
-    implicit val outEnc: Encoder[QuantileRow] = Encoders.product[QuantileRow]
-    ds.groupByKey(_.grp)(Encoders.STRING)
-      .transformWithState(new GridQuantilesProcessor(scale, percents),
-        TimeMode.None(), OutputMode.Update())
   }
 
   /** Live per-source attrition counters for the LINEAR quality classifier
-    * (q122's streaming half, the [[GopherFunnelProcessor]] shape with the
-    * model swapped in): margins via the JVM mirror of the exact integer
+    * (q122's streaming half, the [[streamingGopherFunnel]] counters with
+    * the model swapped in): margins via the JVM mirror of the exact integer
     * rule ([[graft.ext.Curation.linearMarginJvm]], pinned equal to the
     * Column form), two longs of state per source, touched sources only. */
-  final class QualityGateProcessor(weights: Map[String, Long], bias: Long)
-      extends StatefulProcessor[String, SourceDoc, FunnelCounts] {
-
-    @transient private var counts: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getValueState[(Long, Long)](
-        "counts", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[SourceDoc],
-        timerValues: TimerValues): Iterator[FunnelCounts] = {
-      var (total, kept) = if (counts.exists()) counts.get() else (0L, 0L)
-      rows.foreach { r =>
-        total += 1
-        if (graft.ext.Curation.linearMarginJvm(r.text, weights, bias) > 0L) kept += 1
-      }
-      counts.update((total, kept))
-      Iterator.single(FunnelCounts(key, total, total - kept, kept))
-    }
-  }
-
   def streamingQualityGate(ds: Dataset[SourceDoc], weights: Map[String, Long],
-      bias: Long): Dataset[FunnelCounts] = {
-    implicit val outEnc: Encoder[FunnelCounts] = Encoders.product[FunnelCounts]
-    ds.groupByKey(_.source)(Encoders.STRING)
-      .transformWithState(new QualityGateProcessor(weights, bias),
-        TimeMode.None(), OutputMode.Update())
-  }
+      bias: Long): Dataset[FunnelCounts] =
+    keptCounts(ds)(t => graft.ext.Curation.linearMarginJvm(t, weights, bias) > 0L)
 
   final case class GroupWeekBin(grp: String, wk: Long, bin: Long)
   final case class WeeklyDrift(grp: String, wk: Long, n_cur: Long, n_prev: Long,
@@ -651,33 +581,28 @@ object TransformWithStateOps {
     * groups only; pairs missing either side stay silent (the batch
     * operator's n_cur > 0 AND n_prev > 0 guard). In production the week
     * map is pruned by retention (drop weeks below the watermark week);
-    * kept unbounded here to reconcile with the full-history batch op. */
-  final class WeeklyKsDriftProcessor
-      extends StatefulProcessor[String, GroupWeekBin, WeeklyDrift] {
-
-    @transient private var counts: MapState[(Long, Long), Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getMapState[(Long, Long), Long](
-        "counts", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
-        Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[GroupWeekBin],
-        timerValues: TimerValues): Iterator[WeeklyDrift] = {
-      val touched = scala.collection.mutable.Set.empty[Long]
-      rows.foreach { r =>
-        val k = (r.wk, r.bin)
-        val prev = if (counts.containsKey(k)) counts.getValue(k) else 0L
-        counts.updateValue(k, prev + 1L)
-        touched += r.wk
-      }
+    * kept unbounded here to reconcile with the full-history batch op.
+    *
+    * Input is a streaming frame carrying the group/value/ts columns; week
+    * and bin derivation use the batch operator's exact expressions. */
+  def streamingWeeklyKsDrift(df: DataFrame,
+      group: org.apache.spark.sql.Column, value: org.apache.spark.sql.Column,
+      tsNanosCol: String, scale: Int): Dataset[WeeklyDrift] = {
+    require(scale >= 1 && (scale & (scale - 1)) == 0, "scale must be a power of two")
+    import org.apache.spark.sql.functions._
+    val weekNs = 7L * 24 * 3600 * 1000000000L
+    val bins = df.select(group.as("grp"), expr(s"$tsNanosCol div ${weekNs}L").as("wk"),
+        floor(value * scale).cast("long").as("bin"))
+      .as(Encoders.product[GroupWeekBin])
+    mapFold(bins)(_.grp, r => ((r.wk, r.bin), 1L), addLong) { (key, touched, counts) =>
       // weeks whose (wk-1 -> wk) comparison this batch may have changed
+      val wks = touched.keySet.map(_._1)
       val state = counts.iterator().toArray
       val weeks = state.iterator.map(_._1._1).toSet
-      val affected = (touched.iterator ++ touched.iterator.map(_ + 1L)).toSeq
+      val affected = (wks.iterator ++ wks.iterator.map(_ + 1L)).toSeq
         .distinct.sorted
         .filter(w => weeks.contains(w) && weeks.contains(w - 1L))
-      affected.iterator.map { w =>
+      (affected.iterator.map { w =>
         val cur = state.iterator.filter(_._1._1 == w)
           .map { case ((_, b), c) => b -> c }.toMap
         val prev = state.iterator.filter(_._1._1 == w - 1L)
@@ -694,27 +619,8 @@ object TransformWithStateOps {
         }
         WeeklyDrift(key, w, nCur, nPrev, best,
           best.toDouble / (nCur * nPrev))
-      }
+      }, Nil)
     }
-  }
-
-  /** Wire [[WeeklyKsDriftProcessor]] over a streaming frame carrying the
-    * group/value/ts columns — week and bin derivation use the batch
-    * operator's exact expressions. */
-  def streamingWeeklyKsDrift(df: org.apache.spark.sql.DataFrame,
-      group: org.apache.spark.sql.Column, value: org.apache.spark.sql.Column,
-      tsNanosCol: String, scale: Int): Dataset[WeeklyDrift] = {
-    require(scale >= 1 && (scale & (scale - 1)) == 0, "scale must be a power of two")
-    import org.apache.spark.sql.functions._
-    val weekNs = 7L * 24 * 3600 * 1000000000L
-    implicit val inEnc: Encoder[GroupWeekBin] = Encoders.product[GroupWeekBin]
-    implicit val outEnc: Encoder[WeeklyDrift] = Encoders.product[WeeklyDrift]
-    df.select(group.as("grp"), expr(s"$tsNanosCol div ${weekNs}L").as("wk"),
-        floor(value * scale).cast("long").as("bin"))
-      .as[GroupWeekBin]
-      .groupByKey(_.grp)(Encoders.STRING)
-      .transformWithState(new WeeklyKsDriftProcessor(),
-        TimeMode.None(), OutputMode.Update())
   }
 
   final case class SourceTokens(source: String, n_tok: Long)
@@ -732,53 +638,18 @@ object TransformWithStateOps {
     * touched sources only. Zero-token sources emit rate 1,000,000 (take
     * everything — vacuously met; the batch form's ANSI division guards
     * this corner by construction since a counted doc implies a row). */
-  final class MixturePlanProcessor(budgetTokens: Long, weightsPpm: Map[String, Long])
-      extends StatefulProcessor[String, SourceTokens, MixtureRow] {
-
-    @transient private var counts: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getValueState[(Long, Long)](
-        "counts", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[SourceTokens],
-        timerValues: TimerValues): Iterator[MixtureRow] = {
-      var (docs, tokens) = if (counts.exists()) counts.get() else (0L, 0L)
+  def streamingMixturePlan(ds: Dataset[SourceTokens], budgetTokens: Long,
+      weightsPpm: Map[String, Long]): Dataset[MixtureRow] =
+    fold(ds)(_.source, (0L, 0L)) { (key, s, rows) =>
+      var (docs, tokens) = s
       rows.foreach { r => docs += 1; tokens += r.n_tok }
-      counts.update((docs, tokens))
       val w = weightsPpm.getOrElse(key, 0L)
       val target = budgetTokens * w / 1000000L
       val rate = if (tokens > 0) math.min(1000000L, target * 1000000L / tokens)
         else 1000000L
-      Iterator.single(MixtureRow(key, docs, tokens, w, target, rate,
-        tokens * rate / 1000000L, target > tokens))
+      ((docs, tokens), Iterator.single(MixtureRow(key, docs, tokens, w, target, rate,
+        tokens * rate / 1000000L, target > tokens)))
     }
-  }
-
-  def streamingMixturePlan(ds: Dataset[SourceTokens], budgetTokens: Long,
-      weightsPpm: Map[String, Long]): Dataset[MixtureRow] = {
-    implicit val outEnc: Encoder[MixtureRow] = Encoders.product[MixtureRow]
-    ds.groupByKey(_.source)(Encoders.STRING)
-      .transformWithState(new MixturePlanProcessor(budgetTokens, weightsPpm),
-        TimeMode.None(), OutputMode.Update())
-  }
-
-  /** Wire [[BoilerplateProcessor]] over a streaming `documents` frame:
-    * split → n-gram explode (map-only, the batch op's exact gram
-    * definition via [[graft.ext.TextAnalysis.ngramsFromTokens]]) → keyed
-    * summary update. */
-  def streamingBoilerplate(docs: org.apache.spark.sql.DataFrame, textCol: String,
-      srcCol: String, n: Int, k: Int): Dataset[BoilerCand] = {
-    import org.apache.spark.sql.functions._
-    implicit val inEnc: Encoder[SourceGram] = Encoders.product[SourceGram]
-    implicit val outEnc: Encoder[BoilerCand] = Encoders.product[BoilerCand]
-    docs.select(col(srcCol).as("src"), split(col(textCol), " ").as("toks"))
-      .select(col("src"), explode(graft.ext.TextAnalysis.ngramsFromTokens("toks", n)).as("g"))
-      .as[SourceGram]
-      .groupByKey(_.src)(Encoders.STRING)
-      .transformWithState(new BoilerplateProcessor(k),
-        TimeMode.None(), OutputMode.Update())
-  }
 
   final case class SpanOcc(h: Long, docId: Long, pos: Long)
   final case class SpanNovel(docId: Long, pos: Long, novel: Boolean)
@@ -799,26 +670,20 @@ object TransformWithStateOps {
     * (unbounded like any exact streaming dedup; [[streamingBloomDedup]]
     * is the fixed-memory alternative when a false-positive fraction is
     * acceptable). Keying by the span hash itself spreads state uniformly
-    * across the store's key space. */
-  final class SpanNoveltyProcessor
-      extends StatefulProcessor[Long, SpanOcc, SpanNovel] {
-
-    @transient private var seen: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean](
-        "seen", Encoders.scalaBoolean, TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[SpanOcc],
-        timerValues: TimerValues): Iterator[SpanNovel] = {
+    * across the store's key space. Spans are the batch op's exact
+    * definition ([[graft.ext.Dedup.spanFrame]], map-only). */
+  def streamingSpanNovelty(docs: DataFrame, textCol: String,
+      idCol: String, k: Int): Dataset[SpanNovel] = {
+    val spans = graft.ext.Dedup.spanFrame(docs, textCol, idCol, k)
+      .toDF("docId", "pos", "h")
+      .selectExpr("h", "docId", "cast(pos as long) as pos")
+      .as(Encoders.product[SpanOcc])
+    fold(spans)(_.h, false) { (_, seen, rows) =>
       val batch = rows.toVector
-      val already = seen.exists()
-      if (!already) seen.update(true)
       val winner =
-        if (already) None
+        if (seen) None
         else Some(batch.minBy(r => (r.docId, r.pos)))
-      batch.iterator.map(r =>
-        SpanNovel(r.docId, r.pos, winner.contains(r)))
+      (true, batch.iterator.map(r => SpanNovel(r.docId, r.pos, winner.contains(r))))
     }
   }
 
@@ -837,18 +702,10 @@ object TransformWithStateOps {
     * anchored; the final emission per user reconciles bit-for-bit with
     * the batch funnel (pinned in the spec). ttcNs = -1 until converted
     * (the Dataset row stays non-null; the batch op's null maps to it). */
-  final class FunnelProcessor(startType: String, convType: String, windowNs: Long)
-      extends StatefulProcessor[Long, UserEvent, FunnelState] {
-
-    @transient private var st: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long)](
-        "st", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[UserEvent],
-        timerValues: TimerValues): Iterator[FunnelState] = {
-      var (sTs, ttc) = if (st.exists()) st.get() else (-1L, -1L)
+  def streamingFunnel(ds: Dataset[UserEvent], startType: String, convType: String,
+      windowNs: Long): Dataset[FunnelState] =
+    fold(ds)(_.userId, (-1L, -1L)) { (key, s, rows) =>
+      var (sTs, ttc) = s
       // within one micro-batch rows may interleave arbitrarily; process in
       // ts order so the batch == stream contract holds per micro-batch too
       rows.toVector.sortBy(r => (r.ts, r.eventType)).foreach { r =>
@@ -859,39 +716,36 @@ object TransformWithStateOps {
           if (ttc < 0 || d < ttc) ttc = d
         }
       }
-      st.update((sTs, ttc))
-      if (sTs >= 0) Iterator.single(FunnelState(key, sTs, ttc >= 0, ttc))
-      else Iterator.empty
+      ((sTs, ttc), Option.when(sTs >= 0)(FunnelState(key, sTs, ttc >= 0, ttc)))
     }
-  }
-
-  def streamingFunnel(ds: Dataset[UserEvent], startType: String, convType: String,
-      windowNs: Long): Dataset[FunnelState] = {
-    implicit val outEnc: Encoder[FunnelState] = Encoders.product[FunnelState]
-    ds.groupByKey(_.userId)(Encoders.scalaLong)
-      .transformWithState(new FunnelProcessor(startType, convType, windowNs),
-        TimeMode.None(), OutputMode.Update())
-  }
-
-  /** Wire [[SpanNoveltyProcessor]] over a streaming `documents` frame:
-    * the batch op's exact span definition ([[graft.ext.Dedup.spanFrame]],
-    * map-only) keyed by span hash. */
-  def streamingSpanNovelty(docs: org.apache.spark.sql.DataFrame, textCol: String,
-      idCol: String, k: Int): Dataset[SpanNovel] = {
-    implicit val inEnc: Encoder[SpanOcc] = Encoders.product[SpanOcc]
-    implicit val outEnc: Encoder[SpanNovel] = Encoders.product[SpanNovel]
-    graft.ext.Dedup.spanFrame(docs, textCol, idCol, k)
-      .toDF("docId", "pos", "h")
-      .selectExpr("h", "docId", "cast(pos as long) as pos")
-      .as[SpanOcc]
-      .groupByKey(_.h)(Encoders.scalaLong)
-      .transformWithState(new SpanNoveltyProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
 
   final case class GroupHash(grp: String, h: Long)
   final case class HllReport(grp: String, v_zero: Long, s_sum: Long,
       raw_est: Double, est_distinct: Option[Double])
+
+  /** A hash's HLL register: (bucket, rho). floorMod, not %: the batch twin
+    * buckets by pmod(h, 64). h is contractually the NON-NEGATIVE 60-bit
+    * portable hash (where the two agree), but a stray negative hash must
+    * not land in a bucket the 0..63 estimator loop silently never reads. */
+  private def hllReg(h: Long): (Long, Long) =
+    (java.lang.Math.floorMod(h, 64L), graft.ext.Sketches.hllRhoJvm(h).toLong)
+
+  /** The 64-bucket estimator both HLL twins read out with: (v_zero, s_sum,
+    * raw estimate, the estimate once no register is zero) over the
+    * registers `reg(bucket)`. */
+  private def hll(reg: Long => Long): (Long, Long, Double, Option[Double]) = {
+    var vZero = 0L
+    var sSum = 0L
+    var b = 0L
+    while (b < 64) {
+      val m = reg(b)
+      if (m == 0L) vZero += 1
+      sSum += 1L << (55 - m)
+      b += 1
+    }
+    val raw = graft.ext.Sketches.hllRawEstimate(sSum)
+    (vZero, sSum, raw, if (vZero == 0) Some(raw) else None)
+  }
 
   /** Continuous per-group HyperLogLog — the streaming twin of
     * [[graft.ext.Sketches.hllDistinct]] (q133). State per group is the
@@ -904,47 +758,12 @@ object TransformWithStateOps {
     * .hllRawEstimate]]) bit-matches the batch report (asserted in
     * TransformWithStateSpec). Inputs are (group, hash) pairs — hash with
     * `Sampling.portableHash` upstream, exactly like the batch path. */
-  final class HllProcessor extends StatefulProcessor[String, GroupHash, HllReport] {
-
-    @transient private var regs: MapState[Long, Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      regs = getHandle.getMapState[Long, Long](
-        "regs", Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[GroupHash],
-        timerValues: TimerValues): Iterator[HllReport] = {
-      rows.foreach { r =>
-        // floorMod, not %: the batch twin buckets by pmod(h, 64). h is
-        // contractually the NON-NEGATIVE 60-bit portable hash (where the
-        // two agree), but a stray negative hash must not land in a bucket
-        // the 0..63 estimator loop silently never reads (the
-        // SlidingHllProcessor fix, applied here for consistency).
-        val b = java.lang.Math.floorMod(r.h, 64L)
-        val rho = graft.ext.Sketches.hllRhoJvm(r.h).toLong
-        val cur = if (regs.containsKey(b)) regs.getValue(b) else 0L
-        if (rho > cur) regs.updateValue(b, rho)
-      }
-      var vZero = 0L
-      var sSum = 0L
-      var b = 0L
-      while (b < 64) {
-        val m = if (regs.containsKey(b)) regs.getValue(b) else 0L
-        if (m == 0L) vZero += 1
-        sSum += 1L << (55 - m)
-        b += 1
-      }
-      val raw = graft.ext.Sketches.hllRawEstimate(sSum)
-      Iterator.single(HllReport(key, vZero, sSum, raw,
-        if (vZero == 0) Some(raw) else None))
+  def streamingHllDistinct(ds: Dataset[GroupHash]): Dataset[HllReport] =
+    mapFold(ds)(_.grp, r => hllReg(r.h), maxLong) { (key, _, regs) =>
+      val (vZero, sSum, raw, est) =
+        hll(b => if (regs.containsKey(b)) regs.getValue(b) else 0L)
+      (Iterator.single(HllReport(key, vZero, sSum, raw, est)), Nil)
     }
-  }
-
-  def streamingHllDistinct(ds: Dataset[GroupHash]): Dataset[HllReport] = {
-    implicit val outEnc: Encoder[HllReport] = Encoders.product[HllReport]
-    ds.groupByKey(_.grp)(Encoders.STRING)
-      .transformWithState(new HllProcessor, TimeMode.None(), OutputMode.Update())
-  }
 
   final case class TimedEvent(user_id: Long, event_type: String, ts: Long,
       event_id: Long)
@@ -953,57 +772,31 @@ object TransformWithStateOps {
 
   /** Streaming twin of [[graft.ext.EventFunnel.scdIntervals]] (q140) —
     * continuous SCD-type-2 history build. State per user is ONLY the open
-    * run (event_type, valid_from, n_events): a closed interval is emitted
-    * exactly once, at the moment the attribute changes, and never touched
-    * again; the open run is re-emitted every batch it grows (Update-mode
-    * upsert keyed by (user_id, valid_from) — a later "closed" row for the
-    * same run supersedes its earlier "open" emissions). So the reconciled
-    * view (all closed rows + the latest row per open run) equals the batch
+    * run (event_type, valid_from, n_events; n_events = 0 before the first
+    * event): a closed interval is emitted exactly once, at the moment the
+    * attribute changes, and never touched again; the open run is
+    * re-emitted every batch it grows (Update-mode upsert keyed by
+    * (user_id, valid_from) — a later "closed" row for the same run
+    * supersedes its earlier "open" emissions). So the reconciled view (all
+    * closed rows + the latest row per open run) equals the batch
     * compaction of the same prefix, for ANY batch split, provided each
     * user's events arrive in (ts, event_id) order — the replay/Kafka
-    * priming contract; within a batch the processor sorts per key.
+    * priming contract; within a batch the fold sorts per key.
     * Bounded state: 3 scalars per user, independent of history length. */
-  final class ScdIntervalProcessor
-      extends StatefulProcessor[Long, TimedEvent, ScdRow] {
-
-    @transient private var open: ValueState[(String, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      open = getHandle.getValueState[(String, Long, Long)]("open",
-        Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[TimedEvent],
-        timerValues: TimerValues): Iterator[ScdRow] = {
-      val sorted = rows.toArray.sortBy(e => (e.ts, e.event_id))
+  def streamingScdIntervals(ds: Dataset[TimedEvent]): Dataset[ScdRow] =
+    fold(ds)(_.user_id, ("", 0L, 0L)) { (key, s, rows) =>
+      var (t, from, n) = s
       val out = Seq.newBuilder[ScdRow]
-      var cur: Option[(String, Long, Long)] =
-        if (open.exists()) Some(open.get()) else None
-      sorted.foreach { e =>
-        cur match {
-          case Some((t, from, n)) if t == e.event_type =>
-            cur = Some((t, from, n + 1))
-          case Some((t, from, n)) =>
-            out += ScdRow(key, t, from, Some(e.ts), n, is_current = false)
-            cur = Some((e.event_type, e.ts, 1L))
-          case None =>
-            cur = Some((e.event_type, e.ts, 1L))
+      rows.toArray.sortBy(e => (e.ts, e.event_id)).foreach { e =>
+        if (n > 0 && t == e.event_type) n += 1
+        else {
+          if (n > 0) out += ScdRow(key, t, from, Some(e.ts), n, is_current = false)
+          t = e.event_type; from = e.ts; n = 1L
         }
       }
-      cur.foreach { c =>
-        open.update(c)
-        out += ScdRow(key, c._1, c._2, None, c._3, is_current = true)
-      }
-      out.result().iterator
+      out += ScdRow(key, t, from, None, n, is_current = true)
+      ((t, from, n), out.result())
     }
-  }
-
-  def streamingScdIntervals(ds: Dataset[TimedEvent]): Dataset[ScdRow] = {
-    implicit val outEnc: Encoder[ScdRow] = Encoders.product[ScdRow]
-    ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new ScdIntervalProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
 
   final case class TypedHour(event_type: String, hr: Long)
   final case class BurstRow(event_type: String, hr: Long, n: Long, trail: Long,
@@ -1026,15 +819,13 @@ object TransformWithStateOps {
     @transient private var firstHr: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      counts = getHandle.getMapState[Long, Long](
-        "counts", Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-      firstHr = getHandle.getValueState[Long]("firstHr", Encoders.scalaLong,
-        TTLConfig.NONE)
+      counts = getHandle.getMapState[Long, Long]("counts", TTLConfig.NONE)
+      firstHr = getHandle.getValueState[Long]("firstHr", TTLConfig.NONE)
     }
 
     override def handleInputRows(key: String, rows: Iterator[TypedHour],
         timerValues: TimerValues): Iterator[BurstRow] = {
-      val touched = scala.collection.mutable.SortedSet[Long]()
+      val touched = mutable.SortedSet[Long]()
       var fh = if (firstHr.exists()) firstHr.get() else Long.MaxValue
       rows.foreach { r =>
         val c = if (counts.containsKey(r.hr)) counts.getValue(r.hr) else 0L
@@ -1042,7 +833,6 @@ object TransformWithStateOps {
         touched += r.hr
         if (r.hr < fh) fh = r.hr
       }
-      if (touched.isEmpty) return Iterator.empty
       firstHr.update(fh)
       val out = touched.toSeq.map { h =>
         var trail = 0L
@@ -1062,12 +852,8 @@ object TransformWithStateOps {
     }
   }
 
-  def streamingHourlyBursts(ds: Dataset[TypedHour], factor: Int): Dataset[BurstRow] = {
-    implicit val outEnc: Encoder[BurstRow] = Encoders.product[BurstRow]
-    ds.groupByKey(_.event_type)(Encoders.STRING)
-      .transformWithState(new BurstProcessor(factor),
-        TimeMode.None(), OutputMode.Update())
-  }
+  def streamingHourlyBursts(ds: Dataset[TypedHour], factor: Int): Dataset[BurstRow] =
+    wire(ds)(_.event_type)(new BurstProcessor(factor))
 
   final case class PathInstance(user_id: Long, path: String)
 
@@ -1076,26 +862,15 @@ object TransformWithStateOps {
     * tiny ValueState string), emit one completed length-n path per event
     * once the window fills. The multiset of emitted paths equals the
     * batch lead-window n-grams under per-user (ts, event_id)-ordered
-    * arrival (within a batch the processor sorts), so any downstream
+    * arrival (within a batch the fold sorts), so any downstream
     * count — batch rollup or a keyed counting stage — reconciles exactly.
     * State is O(n) per user forever (the held types join on \u0001 —
     * event-type values must not contain that control char); emission is
     * append-only. */
-  final class PathProcessor(n: Int)
-      extends StatefulProcessor[Long, TimedEvent, PathInstance] {
-
-    @transient private var recent: ValueState[String] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      recent = getHandle.getValueState[String]("recent", Encoders.STRING,
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[TimedEvent],
-        timerValues: TimerValues): Iterator[PathInstance] = {
+  def streamingPathInstances(ds: Dataset[TimedEvent], n: Int): Dataset[PathInstance] =
+    fold(ds, OutputMode.Append())(_.user_id, "") { (key, s, rows) =>
       var held: Vector[String] =
-        if (recent.exists() && recent.get().nonEmpty)
-          recent.get().split('\u0001').toVector
-        else Vector.empty
+        if (s.nonEmpty) s.split('\u0001').toVector else Vector.empty
       val out = Seq.newBuilder[PathInstance]
       rows.toArray.sortBy(e => (e.ts, e.event_id)).foreach { e =>
         held = (held :+ e.event_type).takeRight(n)
@@ -1104,17 +879,8 @@ object TransformWithStateOps {
       // persist only the last n-1 types: the oldest held entry is dropped
       // by the next append anyway, so this keeps the documented O(n-1)
       // state bound with identical emissions
-      recent.update(held.takeRight(math.max(n - 1, 0)).mkString("\u0001"))
-      out.result().iterator
+      (held.takeRight(math.max(n - 1, 0)).mkString("\u0001"), out.result())
     }
-  }
-
-  def streamingPathInstances(ds: Dataset[TimedEvent], n: Int): Dataset[PathInstance] = {
-    implicit val outEnc: Encoder[PathInstance] = Encoders.product[PathInstance]
-    ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new PathProcessor(n),
-        TimeMode.None(), OutputMode.Append())
-  }
 
   final case class SourceToken(source: String, w: String)
   final case class KlDriftRow(source: String, n_tokens: Long, vocab: Long,
@@ -1127,43 +893,32 @@ object TransformWithStateOps {
     * frame), so the reduction is inherently one global grid: the state is
     * the (source, token) → count map — the exact sources × vocabulary
     * metadata frame the batch operator materializes, bounded by the
-    * monitoring vocabulary, never by row count — and the processor runs
+    * monitoring vocabulary, never by row count — and the fold runs
     * single-keyed (the token-count EXPLODE upstream is still parallel;
     * only the vocabulary-sized reduction is one task, same as the batch
     * plan's final sources-sized rollup). Every batch re-emits ALL
     * sources' refreshed rows (any update moves every source's rest
     * margin); each emission equals the batch operator over the rows seen
     * so far regardless of batching (TransformWithStateSpec), via the
-    * [[graft.ext.TextAnalysis.quarterLog2Jvm]] pinned kernel. */
-  final class VocabKlDriftProcessor
-      extends StatefulProcessor[Int, SourceToken, KlDriftRow] {
-
-    @transient private var counts: MapState[(String, String), Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getMapState[(String, String), Long]("counts",
-        Encoders.tuple(Encoders.STRING, Encoders.STRING),
-        Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[SourceToken],
-        timerValues: TimerValues): Iterator[KlDriftRow] = {
-      var any = false
-      rows.foreach { r =>
-        val k = (r.source, r.w)
-        val c = if (counts.containsKey(k)) counts.getValue(k) else 0L
-        counts.updateValue(k, c + 1L)
-        any = true
-      }
-      if (!any) return Iterator.empty
-      import graft.ext.TextAnalysis.quarterLog2Jvm
+    * [[graft.ext.TextAnalysis.quarterLog2Jvm]] pinned kernel.
+    * Tokenization is the batch operator's exact expression (map-side,
+    * parallel); the single-key grouping feeds the global reduction. */
+  def streamingVocabKlDrift(docs: DataFrame,
+      textCol: String, srcCol: String): Dataset[KlDriftRow] = {
+    import org.apache.spark.sql.functions._
+    import graft.ext.TextAnalysis.quarterLog2Jvm
+    val toks = docs.select(col(srcCol).as("source"),
+        explode(graft.ext.TextAnalysis.tokens(col(textCol))).as("w"))
+      .as(Encoders.product[SourceToken])
+    mapFold(toks)(_ => 0, r => ((r.source, r.w), 1L), addLong) { (_, _, counts) =>
       val state = counts.iterator().toArray
-      val tot = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
+      val tot = mutable.Map.empty[String, Long].withDefaultValue(0L)
       state.foreach { case ((_, w), c) => tot(w) += c }
       val vocab = tot.keys.toArray
       val totAll = tot.valuesIterator.sum
       val v = vocab.length.toLong
       val bySource = state.groupBy(_._1._1)
-      bySource.keys.toArray.sorted.iterator.map { s =>
+      (bySource.keys.toArray.sorted.iterator.map { s =>
         val ca = bySource(s).map { case ((_, w), c) => w -> c }.toMap
           .withDefaultValue(0L)
         val nTokens = ca.valuesIterator.sum
@@ -1175,24 +930,8 @@ object TransformWithStateOps {
           kl += (a + 1) * (quarterLog2Jvm((a + 1) * nb) - quarterLog2Jvm((b + 1) * na))
         }
         KlDriftRow(s, nTokens, v, kl, math.max(kl, 0L) * 1000L / na)
-      }
+      }, Nil)
     }
-  }
-
-  /** Wire [[VocabKlDriftProcessor]] over a streaming `documents` frame —
-    * tokenization is the batch operator's exact expression (map-side,
-    * parallel); the single-key grouping feeds the global reduction. */
-  def streamingVocabKlDrift(docs: org.apache.spark.sql.DataFrame,
-      textCol: String, srcCol: String): Dataset[KlDriftRow] = {
-    import org.apache.spark.sql.functions._
-    implicit val inEnc: Encoder[SourceToken] = Encoders.product[SourceToken]
-    implicit val outEnc: Encoder[KlDriftRow] = Encoders.product[KlDriftRow]
-    docs.select(col(srcCol).as("source"),
-        explode(graft.ext.TextAnalysis.tokens(col(textCol))).as("w"))
-      .as[SourceToken]
-      .groupByKey(_ => 0)(Encoders.scalaInt)
-      .transformWithState(new VocabKlDriftProcessor(),
-        TimeMode.None(), OutputMode.Update())
   }
 
   final case class AlphaMixtureRow(source: String, docs: Long, tokens: Long,
@@ -1201,7 +940,7 @@ object TransformWithStateOps {
 
   /** Streaming twin of [[graft.ext.Sampling.alphaMixturePlan]] keyed the
     * q162 way (per canonicalized HOST) — the live crawl-budget allocator.
-    * Unlike [[MixturePlanProcessor]] (fixed externally-supplied weights),
+    * Unlike [[streamingMixturePlan]] (fixed externally-supplied weights),
     * the alpha = 1/2 weights DERIVE from the accumulating per-host token
     * totals, and the sqrt-sum normalizer couples every host — so the
     * state is the host → (docs, tokens) map (host-cardinality-bounded,
@@ -1211,30 +950,13 @@ object TransformWithStateOps {
     * Arithmetic is the batch planner's exact integer ppm chain on the
     * [[graft.ext.Sampling.isqrtJvm]] pinned kernel; every emission equals
     * the batch operator over rows seen so far (TransformWithStateSpec). */
-  final class AlphaMixtureProcessor(budgetTokens: Long)
-      extends StatefulProcessor[Int, SourceTokens, AlphaMixtureRow] {
-
-    @transient private var counts: MapState[String, (Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getMapState[String, (Long, Long)]("counts",
-        Encoders.STRING, Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[SourceTokens],
-        timerValues: TimerValues): Iterator[AlphaMixtureRow] = {
-      var any = false
-      rows.foreach { r =>
-        val (d, t) = if (counts.containsKey(r.source)) counts.getValue(r.source)
-          else (0L, 0L)
-        counts.updateValue(r.source, (d + 1L, t + r.n_tok))
-        any = true
-      }
-      if (!any) return Iterator.empty
+  def streamingAlphaMixturePlan(ds: Dataset[SourceTokens],
+      budgetTokens: Long): Dataset[AlphaMixtureRow] =
+    mapFold(ds)(_ => 0, r => (r.source, (1L, r.n_tok)), addPair) { (_, _, counts) =>
       import graft.ext.Sampling.isqrtJvm
       val state = counts.iterator().toArray
       val sumSqrt = state.iterator.map { case (_, (_, t)) => isqrtJvm(t) }.sum
-      state.sortBy(_._1).iterator.map { case (host, (docs, tokens)) =>
+      (state.sortBy(_._1).iterator.map { case (host, (docs, tokens)) =>
         val w = isqrtJvm(tokens)
         // sumSqrt == 0 (every host total still 0, e.g. a first batch of
         // empty-text docs) would divide by zero; w is 0 for every host
@@ -1248,17 +970,8 @@ object TransformWithStateOps {
           else 1000000L
         AlphaMixtureRow(host, docs, tokens, w, wp, target, rate,
           tokens * rate / 1000000L, target > tokens)
-      }
+      }, Nil)
     }
-  }
-
-  def streamingAlphaMixturePlan(ds: Dataset[SourceTokens],
-      budgetTokens: Long): Dataset[AlphaMixtureRow] = {
-    implicit val outEnc: Encoder[AlphaMixtureRow] = Encoders.product[AlphaMixtureRow]
-    ds.groupByKey(_ => 0)(Encoders.scalaInt)
-      .transformWithState(new AlphaMixtureProcessor(budgetTokens),
-        TimeMode.None(), OutputMode.Update())
-  }
 
   final case class TypedWeek(event_type: String, wk: Long)
   final case class EwmaRow(event_type: String, wk: Long, n: Long, ewma: Long,
@@ -1275,27 +988,15 @@ object TransformWithStateOps {
     * with the batch operator over the rows seen so far
     * (TransformWithStateSpec). Weeks with zero events occupy no state
     * and no recursion step, matching the batch rollup. */
-  final class EwmaBurstProcessor(factor: Int)
-      extends StatefulProcessor[String, TypedWeek, EwmaRow] {
-
-    // (wk, n, prevS); prevS = -1 encodes "no previous occupied week"
-    @transient private var st: ValueState[(Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Long)]("st",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-
-    private def fold(prevS: Long, n: Long): Long =
+  def streamingEwmaBursts(ds: Dataset[TypedWeek], factor: Int): Dataset[EwmaRow] = {
+    def ewma(prevS: Long, n: Long): Long =
       if (prevS < 0) n else (3 * prevS + n) / 4
-
-    override def handleInputRows(key: String, rows: Iterator[TypedWeek],
-        timerValues: TimerValues): Iterator[EwmaRow] = {
-      var (wk, n, prevS) =
-        if (st.exists()) st.get() else (Long.MinValue, 0L, -1L)
-      val out = scala.collection.mutable.LinkedHashMap.empty[Long, EwmaRow]
+    // (wk, n, prevS); prevS = -1 encodes "no previous occupied week"
+    fold(ds)(_.event_type, (Long.MinValue, 0L, -1L)) { (key, s, rows) =>
+      var (wk, n, prevS) = s
+      val out = mutable.LinkedHashMap.empty[Long, EwmaRow]
       def emit(): Unit = if (wk != Long.MinValue)
-        out(wk) = EwmaRow(key, wk, n, fold(prevS, n),
+        out(wk) = EwmaRow(key, wk, n, ewma(prevS, n),
           prevS >= 0 && n > prevS * factor)
       rows.toArray.sortBy(_.wk).foreach { r =>
         if (r.wk == wk || wk == Long.MinValue) {
@@ -1304,20 +1005,12 @@ object TransformWithStateOps {
         } else {
           require(r.wk > wk, s"out-of-order week ${r.wk} after $wk")
           emit() // close the finished week with its final count
-          prevS = fold(prevS, n); wk = r.wk; n = 1
+          prevS = ewma(prevS, n); wk = r.wk; n = 1
         }
       }
       emit() // provisional row for the still-open week
-      st.update((wk, n, prevS))
-      out.valuesIterator.toSeq.iterator
+      ((wk, n, prevS), out.valuesIterator.toSeq)
     }
-  }
-
-  def streamingEwmaBursts(ds: Dataset[TypedWeek], factor: Int): Dataset[EwmaRow] = {
-    implicit val outEnc: Encoder[EwmaRow] = Encoders.product[EwmaRow]
-    ds.groupByKey(_.event_type)(Encoders.STRING)
-      .transformWithState(new EwmaBurstProcessor(factor),
-        TimeMode.None(), OutputMode.Update())
   }
 
   final case class ArrivalEvent(event_type: String, event_id: Long, ts: Long)
@@ -1332,44 +1025,24 @@ object TransformWithStateOps {
     * late = max(maxTs − ts, 0) since the window max includes the current
     * row. Arrival order = event_id — per type, batches must split the
     * event_id order (the replay/Kafka priming contract; within a batch
-    * the processor sorts). Update-mode upsert by type reconciles with the
+    * the fold sorts). Update-mode upsert by type reconciles with the
     * batch rollup after any prefix. */
-  final class LatenessProcessor
-      extends StatefulProcessor[String, ArrivalEvent, LatenessRow] {
-
-    private val H = 3600000000000L
-    private val D = 86400000000000L
-
-    @transient private var st: ValueState[(Long, Long, Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Long, Long, Long)]("st",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[ArrivalEvent],
-        timerValues: TimerValues): Iterator[LatenessRow] = {
-      var (maxTs, n, n1h, n1d, maxLate) =
-        if (st.exists()) st.get() else (Long.MinValue, 0L, 0L, 0L, 0L)
+  def streamingLatenessAudit(ds: Dataset[ArrivalEvent]): Dataset[LatenessRow] = {
+    val hour = 3600000000000L
+    val day = 86400000000000L
+    fold(ds)(_.event_type, (Long.MinValue, 0L, 0L, 0L, 0L)) { (key, s, rows) =>
+      var (maxTs, n, n1h, n1d, maxLate) = s
       rows.toArray.sortBy(_.event_id).foreach { e =>
         val late = if (maxTs == Long.MinValue) 0L else math.max(maxTs - e.ts, 0L)
         n += 1
-        if (late > H) n1h += 1
-        if (late > D) n1d += 1
+        if (late > hour) n1h += 1
+        if (late > day) n1d += 1
         if (late > maxLate) maxLate = late
         if (e.ts > maxTs || maxTs == Long.MinValue) maxTs = e.ts
       }
-      st.update((maxTs, n, n1h, n1d, maxLate))
-      Iterator.single(LatenessRow(key, n, n1h, n1d, maxLate))
+      ((maxTs, n, n1h, n1d, maxLate),
+        Iterator.single(LatenessRow(key, n, n1h, n1d, maxLate)))
     }
-  }
-
-  def streamingLatenessAudit(ds: Dataset[ArrivalEvent]): Dataset[LatenessRow] = {
-    implicit val outEnc: Encoder[LatenessRow] = Encoders.product[LatenessRow]
-    ds.groupByKey(_.event_type)(Encoders.STRING)
-      .transformWithState(new LatenessProcessor,
-        TimeMode.None(), OutputMode.Update())
   }
 
   final case class KeyedArrival(user_id: Long, event_type: String, ts: Long,
@@ -1380,71 +1053,40 @@ object TransformWithStateOps {
   /** Streaming twin of q204's debounce rollup — live retry-storm
     * monitoring. State per (user, type): ONE long (the previous raw
     * event's ts — the batch lag contract) plus the three counters,
-    * merged downstream per type by the caller; here the processor keys
+    * merged downstream per type by the caller; here the fold keys
     * on (user, type) and emits per-key counter rows each batch, which
     * upsert-reconcile to the batch rollup after summing per type
     * (asserted in TransformWithStateSpec). Requires per-(user, type)
     * (ts, event_id)-ordered arrival across batches — the priming
-    * contract; within a batch the processor sorts. */
-  final class DebounceProcessor(intervalNs: Long)
-      extends StatefulProcessor[(Long, String), KeyedArrival, DebounceRow] {
-
-    @transient private var st: ValueState[(Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Long)]("st",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: (Long, String),
-        rows: Iterator[KeyedArrival],
-        timerValues: TimerValues): Iterator[DebounceRow] = {
-      var (prevTs, n, kept) =
-        if (st.exists()) st.get() else (Long.MinValue, 0L, 0L)
+    * contract; within a batch the fold sorts. */
+  def streamingDebounce(ds: Dataset[KeyedArrival],
+      intervalNs: Long): Dataset[DebounceRow] =
+    fold(ds)(e => (e.user_id, e.event_type), (Long.MinValue, 0L, 0L)) { (key, s, rows) =>
+      var (prevTs, n, kept) = s
       rows.toArray.sortBy(e => (e.ts, e.event_id)).foreach { e =>
         n += 1
         if (prevTs == Long.MinValue || e.ts - prevTs > intervalNs) kept += 1
         prevTs = e.ts
       }
-      st.update((prevTs, n, kept))
-      Iterator.single(DebounceRow(key._1, key._2, n, kept, n - kept))
+      ((prevTs, n, kept), Iterator.single(DebounceRow(key._1, key._2, n, kept, n - kept)))
     }
-  }
-
-  def streamingDebounce(ds: Dataset[KeyedArrival],
-      intervalNs: Long): Dataset[DebounceRow] = {
-    implicit val outEnc: Encoder[DebounceRow] = Encoders.product[DebounceRow]
-    ds.groupByKey(e => (e.user_id, e.event_type))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
-      .transformWithState(new DebounceProcessor(intervalNs),
-        TimeMode.None(), OutputMode.Update())
-  }
 
   final case class UserWeek(user_id: Long, wk: Long)
   final case class GrowthEvent(user_id: Long, wk: Long, cls: String)
 
   /** Streaming half of q198's growth accounting: per-user classification
-    * of each newly active week as new / retained / resurrected, from TWO
-    * longs of state (first week seen flag via lastWk sentinel, last
-    * active week). Each (user, week) first-activation emits exactly one
+    * of each newly active week as new / retained / resurrected, from ONE
+    * long of state (the last active week; Long.MinValue = never seen).
+    * Each (user, week) first-activation emits exactly one
     * immutable classification row (append semantics); the per-week flow
     * rollup is a downstream aggregation of these emissions, equal to the
     * batch flows for any prefix ending on a week boundary. Requires
     * per-user week-ordered arrival (priming contract); within a batch
-    * the processor sorts and dedups weeks. */
-  final class GrowthProcessor
-      extends StatefulProcessor[Long, UserWeek, GrowthEvent] {
-
-    @transient private var last: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState[Long]("last", Encoders.scalaLong,
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[UserWeek],
-        timerValues: TimerValues): Iterator[GrowthEvent] = {
+    * the fold sorts and dedups weeks. */
+  def streamingGrowthEvents(ds: Dataset[UserWeek]): Dataset[GrowthEvent] =
+    fold(ds, OutputMode.Append())(_.user_id, Long.MinValue) { (key, s, rows) =>
       val out = Seq.newBuilder[GrowthEvent]
-      var lastWk = if (last.exists()) last.get() else Long.MinValue
+      var lastWk = s
       rows.toArray.map(_.wk).distinct.sorted.foreach { wk =>
         if (wk > lastWk) {
           val cls =
@@ -1455,17 +1097,8 @@ object TransformWithStateOps {
           lastWk = wk
         }
       }
-      last.update(lastWk)
-      out.result().iterator
+      (lastWk, out.result())
     }
-  }
-
-  def streamingGrowthEvents(ds: Dataset[UserWeek]): Dataset[GrowthEvent] = {
-    implicit val outEnc: Encoder[GrowthEvent] = Encoders.product[GrowthEvent]
-    ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new GrowthProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
 
   final case class DocMeta(source: String, lang: String, n_tok: Long,
       n_chars: Long)
@@ -1486,11 +1119,8 @@ object TransformWithStateOps {
     @transient private var langs: MapState[String, Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      sums = getHandle.getValueState[(Long, Long, Long)]("sums",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-      langs = getHandle.getMapState[String, Long]("langs",
-        Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
+      sums = getHandle.getValueState[(Long, Long, Long)]("sums", TTLConfig.NONE)
+      langs = getHandle.getMapState[String, Long]("langs", TTLConfig.NONE)
     }
 
     override def handleInputRows(key: String, rows: Iterator[DocMeta],
@@ -1510,12 +1140,8 @@ object TransformWithStateOps {
     }
   }
 
-  def streamingCard(ds: Dataset[DocMeta]): Dataset[CardRow] = {
-    implicit val outEnc: Encoder[CardRow] = Encoders.product[CardRow]
-    ds.groupByKey(_.source)(Encoders.STRING)
-      .transformWithState(new CardProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
+  def streamingCard(ds: Dataset[DocMeta]): Dataset[CardRow] =
+    wire(ds)(_.source)(new CardProcessor)
 
   final case class WeekHash(grp: String, wk: Long, h: Long)
   final case class SlidingHllRow(grp: String, wk: Long, v_zero: Long,
@@ -1535,69 +1161,31 @@ object TransformWithStateOps {
     * with the batch operator's sketch columns; the batch form's exact
     * `n_exact` audit column is deliberately NOT mirrored — carrying exact
     * distincts would defeat the fixed-memory sketch. */
-  final class SlidingHllProcessor(windowWeeks: Int)
-      extends StatefulProcessor[String, WeekHash, SlidingHllRow] {
-
-    @transient private var regs: MapState[(Long, Long), Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      regs = getHandle.getMapState[(Long, Long), Long]("regs",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
-        Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[WeekHash],
-        timerValues: TimerValues): Iterator[SlidingHllRow] = {
-      var minB = Long.MaxValue
-      rows.foreach { r =>
-        // floorMod, not %: the batch twin buckets by pmod(h, 64). h is
-        // contractually the NON-NEGATIVE 60-bit portable hash (where the
-        // two agree), but a stray negative hash must not land in a bucket
-        // the 0..63 estimator loop silently never reads.
-        val k = (r.wk, java.lang.Math.floorMod(r.h, 64L))
-        val rho = graft.ext.Sketches.hllRhoJvm(r.h).toLong
-        val cur = if (regs.containsKey(k)) regs.getValue(k) else 0L
-        if (rho > cur) regs.updateValue(k, rho)
-        if (r.wk < minB) minB = r.wk
-      }
-      if (minB == Long.MaxValue) return Iterator.empty
+  def streamingSlidingHll(ds: Dataset[WeekHash],
+      windowWeeks: Int): Dataset[SlidingHllRow] = {
+    require(windowWeeks >= 1 && windowWeeks <= 64, "windowWeeks in [1,64]")
+    val entry = (r: WeekHash) => { val (b, rho) = hllReg(r.h); ((r.wk, b), rho) }
+    mapFold(ds)(_.grp, entry, maxLong) { (key, touched, regs) =>
+      val minB = touched.keysIterator.map(_._1).min
       val state = regs.iterator().toArray
       val weeks = state.iterator.map(_._1._1).toSet
       val maxW = weeks.max
       val out = weeks.toArray.sorted.iterator
         .filter(w => w >= minB && w <= maxW)
         .map { w =>
-          var vZero = 0L
-          var sSum = 0L
-          var b = 0L
-          while (b < 64) {
+          val (vZero, sSum, raw, est) = hll { b =>
             var m = 0L
             state.foreach { case ((sw, sb), sm) =>
               if (sb == b && sw <= w && sw > w - windowWeeks && sm > m) m = sm
             }
-            if (m == 0L) vZero += 1
-            sSum += 1L << (55 - m)
-            b += 1
+            m
           }
-          val raw = graft.ext.Sketches.hllRawEstimate(sSum)
-          SlidingHllRow(key, w, vZero, sSum, raw,
-            if (vZero == 0) Some(raw) else None)
+          SlidingHllRow(key, w, vZero, sSum, raw, est)
         }.toArray
       // prune: weeks below maxW - (windowWeeks-1) can't feed any window
       // a future (event-time-ordered) batch will emit
-      state.foreach { case (k @ (sw, _), _) =>
-        if (sw <= maxW - windowWeeks) regs.removeKey(k)
-      }
-      out.iterator
+      (out, state.iterator.map(_._1).filter(_._1 <= maxW - windowWeeks))
     }
-  }
-
-  def streamingSlidingHll(ds: Dataset[WeekHash],
-      windowWeeks: Int): Dataset[SlidingHllRow] = {
-    require(windowWeeks >= 1 && windowWeeks <= 64, "windowWeeks in [1,64]")
-    implicit val outEnc: Encoder[SlidingHllRow] = Encoders.product[SlidingHllRow]
-    ds.groupByKey(_.grp)(Encoders.STRING)
-      .transformWithState(new SlidingHllProcessor(windowWeeks),
-        TimeMode.None(), OutputMode.Update())
   }
 
   final case class HourErr(hr: Long, e: Long)
@@ -1617,27 +1205,12 @@ object TransformWithStateOps {
     * reconciles bit-exactly with the batch operator over rows seen so
     * far — same integer chain: share ppm, burn centi, two-threshold
     * alert. */
-  final class SloBurnProcessor(budgetPpm: Long, shortW: Int, longW: Int,
-      fastCenti: Long, slowCenti: Long)
-      extends StatefulProcessor[Int, HourErr, SloBurnRow] {
-
-    @transient private var counts: MapState[Long, (Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getMapState[Long, (Long, Long)]("counts",
-        Encoders.scalaLong, Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[HourErr],
-        timerValues: TimerValues): Iterator[SloBurnRow] = {
-      var minB = Long.MaxValue
-      rows.foreach { r =>
-        val (e, t) = if (counts.containsKey(r.hr)) counts.getValue(r.hr)
-          else (0L, 0L)
-        counts.updateValue(r.hr, (e + r.e, t + 1L))
-        if (r.hr < minB) minB = r.hr
-      }
-      if (minB == Long.MaxValue) return Iterator.empty
+  def streamingSloBurnRate(ds: Dataset[HourErr], budgetPpm: Long,
+      shortW: Int, longW: Int, fastCenti: Long,
+      slowCenti: Long): Dataset[SloBurnRow] = {
+    require(budgetPpm > 0 && shortW >= 1 && longW >= shortW)
+    mapFold(ds)(_ => 0, r => (r.hr, (r.e, 1L)), addPair) { (_, touched, counts) =>
+      val minB = touched.keysIterator.min
       val state = counts.iterator().toArray.sortBy(_._1)
       val maxH = state.last._1
       val out = state.iterator
@@ -1657,27 +1230,17 @@ object TransformWithStateOps {
         }.toArray
       // prune: hours at or below maxH - longW can't feed any trailing
       // window an event-time-ordered future batch will emit
-      state.foreach { case (h, _) =>
-        if (h <= maxH - longW) counts.removeKey(h)
-      }
-      out.iterator
+      (out, state.iterator.map(_._1).filter(_ <= maxH - longW))
     }
-  }
-
-  def streamingSloBurnRate(ds: Dataset[HourErr], budgetPpm: Long,
-      shortW: Int, longW: Int, fastCenti: Long,
-      slowCenti: Long): Dataset[SloBurnRow] = {
-    require(budgetPpm > 0 && shortW >= 1 && longW >= shortW)
-    implicit val outEnc: Encoder[SloBurnRow] = Encoders.product[SloBurnRow]
-    ds.groupByKey(_ => 0)(Encoders.scalaInt)
-      .transformWithState(
-        new SloBurnProcessor(budgetPpm, shortW, longW, fastCenti, slowCenti),
-        TimeMode.None(), OutputMode.Update())
   }
 
   final case class AaEvent(day: Long, arm: Long, conv: Long)
   final case class AaRow(day: Long, n1: Long, c1: Long, n2: Long, c2: Long,
       z2_ppm: Option[Long], flagged: Boolean)
+
+  /** One event's per-day two-arm contingency delta (n1, c1, n2, c2). */
+  private val aaCell = (r: AaEvent) =>
+    (r.day, if (r.arm == 0) (1L, r.conv, 0L, 0L) else (0L, 0L, 1L, r.conv))
 
   /** Streaming twin of the q280 A/A experiment-calibration monitor: the
     * per-day two-arm contingency lives as (day -> n1,c1,n2,c2) MapState —
@@ -1685,64 +1248,17 @@ object TransformWithStateOps {
     * only its own days' counters and re-emits the refreshed q280 row for
     * exactly those days; upsert-by-day reconciles with the batch operator
     * over rows seen so far. z² is the same exact rational as
-    * [[graft.ext.Evaluation.withZ2Ppm]], computed in BigInt (numerator is
-    * a square, so BigInt truncation == the decimal(38,0) `div`). State =
-    * four longs per active day, forever bounded by the day cardinality. */
-  final class AaTestProcessor(critPpm: Long)
-      extends StatefulProcessor[Int, AaEvent, AaRow] {
-
-    @transient private var counts: MapState[Long, (Long, Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getMapState[Long, (Long, Long, Long, Long)]("counts",
-        Encoders.scalaLong,
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[AaEvent],
-        timerValues: TimerValues): Iterator[AaRow] = {
-      val touched = scala.collection.mutable.Set[Long]()
-      rows.foreach { r =>
-        val (n1, c1, n2, c2) =
-          if (counts.containsKey(r.day)) counts.getValue(r.day)
-          else (0L, 0L, 0L, 0L)
-        val upd =
-          if (r.arm == 0) (n1 + 1L, c1 + r.conv, n2, c2)
-          else (n1, c1, n2 + 1L, c2 + r.conv)
-        counts.updateValue(r.day, upd)
-        touched += r.day
-      }
-      touched.toArray.sorted.iterator.map { d =>
-        val (n1, c1, n2, c2) = counts.getValue(d)
-        val z2 = AaTestProcessor.z2Ppm(n1, c1, n2, c2)
+    * [[graft.ext.Evaluation.withZ2Ppm]] ([[graft.ext.Evaluation.z2PpmJvm]]).
+    * State = four longs per active day, forever bounded by the day
+    * cardinality. critPpm = z²·10⁶ alert threshold (q280 uses 4·10⁶ —
+    * |z| > 2). */
+  def streamingAaTest(ds: Dataset[AaEvent], critPpm: Long): Dataset[AaRow] =
+    mapFold(ds)(_ => 0, aaCell, addQuad) { (_, touched, _) =>
+      (touched.toArray.sortBy(_._1).iterator.map { case (d, (n1, c1, n2, c2)) =>
+        val z2 = graft.ext.Evaluation.z2PpmJvm(n1, c1, n2, c2)
         AaRow(d, n1, c1, n2, c2, z2, z2.exists(_ > critPpm))
-      }
+      }, Nil)
     }
-  }
-
-  object AaTestProcessor {
-    /** JVM mirror of [[graft.ext.Evaluation.withZ2Ppm]]'s exact rational:
-      * z²·10⁶ = N(c₁n₂−c₂n₁)²·10⁶ / (C(N−C)n₁n₂), truncating division
-      * (numerator ≥ 0). None when degenerate. */
-    def z2Ppm(n1: Long, c1: Long, n2: Long, c2: Long): Option[Long] = {
-      val C = c1 + c2; val N = n1 + n2
-      if (C == 0L || C == N || n1 == 0L || n2 == 0L) None
-      else {
-        val d = BigInt(c1) * n2 - BigInt(c2) * n1
-        Some((BigInt(N) * d * d * 1000000 / (BigInt(C) * (N - C) * n1 * n2)).toLong)
-      }
-    }
-  }
-
-  /** See [[AaTestProcessor]]; critPpm = z²·10⁶ alert threshold (q280 uses
-    * 4·10⁶ — |z| > 2). */
-  def streamingAaTest(ds: Dataset[AaEvent], critPpm: Long): Dataset[AaRow] = {
-    implicit val outEnc: Encoder[AaRow] = Encoders.product[AaRow]
-    ds.groupByKey(_ => 0)(Encoders.scalaInt)
-      .transformWithState(new AaTestProcessor(critPpm),
-        TimeMode.None(), OutputMode.Update())
-  }
 
   /** Streaming twin of the q288 peeking audit's cumulative z² (the 'aa'
     * scenario as a continuous monitor): per-day contingency DELTAS live in
@@ -1753,52 +1269,21 @@ object TransformWithStateOps {
     * the batch prefix derivation over rows seen so far. State is one
     * 4-long tuple per day, bounded by day cardinality; prefixes need the
     * full day history, so nothing prunes (days, not events). */
-  final class PeekingProcessor(critPpm: Long)
-      extends StatefulProcessor[Int, AaEvent, AaRow] {
-
-    @transient private var deltas: MapState[Long, (Long, Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      deltas = getHandle.getMapState[Long, (Long, Long, Long, Long)]("deltas",
-        Encoders.scalaLong,
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[AaEvent],
-        timerValues: TimerValues): Iterator[AaRow] = {
-      var minDay = Long.MaxValue
-      rows.foreach { r =>
-        val (n1, c1, n2, c2) =
-          if (deltas.containsKey(r.day)) deltas.getValue(r.day)
-          else (0L, 0L, 0L, 0L)
-        deltas.updateValue(r.day,
-          if (r.arm == 0) (n1 + 1L, c1 + r.conv, n2, c2)
-          else (n1, c1, n2 + 1L, c2 + r.conv))
-        if (r.day < minDay) minDay = r.day
-      }
-      if (minDay == Long.MaxValue) return Iterator.empty
+  def streamingPeekingAudit(ds: Dataset[AaEvent], critPpm: Long): Dataset[AaRow] =
+    mapFold(ds)(_ => 0, aaCell, addQuad) { (_, touched, deltas) =>
+      val minDay = touched.keysIterator.min
       val state = deltas.iterator().toArray.sortBy(_._1)
       var (n1, c1, n2, c2) = (0L, 0L, 0L, 0L)
       val out = Array.newBuilder[AaRow]
       state.foreach { case (d, (dn1, dc1, dn2, dc2)) =>
         n1 += dn1; c1 += dc1; n2 += dn2; c2 += dc2
         if (d >= minDay) {
-          val z2 = AaTestProcessor.z2Ppm(n1, c1, n2, c2)
+          val z2 = graft.ext.Evaluation.z2PpmJvm(n1, c1, n2, c2)
           out += AaRow(d, n1, c1, n2, c2, z2, z2.exists(_ > critPpm))
         }
       }
-      out.result().iterator
+      (out.result(), Nil)
     }
-  }
-
-  /** See [[PeekingProcessor]]. */
-  def streamingPeekingAudit(ds: Dataset[AaEvent], critPpm: Long): Dataset[AaRow] = {
-    implicit val outEnc: Encoder[AaRow] = Encoders.product[AaRow]
-    ds.groupByKey(_ => 0)(Encoders.scalaInt)
-      .transformWithState(new PeekingProcessor(critPpm),
-        TimeMode.None(), OutputMode.Update())
-  }
 
   final case class CdcToken(doc_id: Long, p: Long, h: Long)
   final case class CdcChunk(doc_id: Long, cid: Long, len: Long, fpc: Long,
@@ -1816,23 +1301,10 @@ object TransformWithStateOps {
     * cross-batch order is the priming contract). State: seven longs per
     * in-flight document, kept until the doc's stream ends (production
     * would TTL on a document-complete marker). */
-  final class CdcChunkProcessor
-      extends StatefulProcessor[Long, CdcToken, CdcChunk] {
-
-    // (lastH2, lastH1, pos, chunkStart, sumH, sumPH, cid)
-    @transient private var st: ValueState[(Long, Long, Long, Long, (Long, Long, Long))] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[(Long, Long, Long, Long, (Long, Long, Long))]("cdc",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong,
-          Encoders.scalaLong,
-          Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)),
-        TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[CdcToken],
-        timerValues: TimerValues): Iterator[CdcChunk] = {
-      var (h2, h1, pos, start, (sumH, sumPH, cid)) =
-        if (st.exists()) st.get() else (0L, 0L, 0L, 1L, (0L, 0L, 0L))
+  def streamingCdcChunks(ds: Dataset[CdcToken]): Dataset[CdcChunk] =
+    // (lastH2, lastH1, pos, chunkStart, (sumH, sumPH, cid))
+    fold(ds)(_.doc_id, (0L, 0L, 0L, 1L, (0L, 0L, 0L))) { (key, s, rows) =>
+      var (h2, h1, pos, start, (sumH, sumPH, cid)) = s
       val out = Array.newBuilder[CdcChunk]
       rows.toArray.sortBy(_.p).foreach { tk =>
         require(tk.p == pos + 1, s"doc $key: token ${tk.p} after $pos")
@@ -1853,21 +1325,11 @@ object TransformWithStateOps {
         }
         h2 = h1; h1 = tk.h
       }
-      st.update((h2, h1, pos, start, (sumH, sumPH, cid)))
       if (pos >= start) // provisional open tail
         out += CdcChunk(key, cid, pos - start + 1,
           sumPH - (start - 1) * sumH, open = true)
-      out.result().iterator
+      ((h2, h1, pos, start, (sumH, sumPH, cid)), out.result())
     }
-  }
-
-  /** See [[CdcChunkProcessor]]. */
-  def streamingCdcChunks(ds: Dataset[CdcToken]): Dataset[CdcChunk] = {
-    implicit val outEnc: Encoder[CdcChunk] = Encoders.product[CdcChunk]
-    ds.groupByKey(_.doc_id)(Encoders.scalaLong)
-      .transformWithState(new CdcChunkProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
 
   final case class TouchEvent(user_id: Long, event_type: String, ts: Long,
       event_id: Long)
@@ -1894,11 +1356,8 @@ object TransformWithStateOps {
     @transient private var touches: ListState[(String, Long, Long)] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      converted = getHandle.getValueState[Boolean]("converted",
-        Encoders.scalaBoolean, TTLConfig.NONE)
-      touches = getHandle.getListState[(String, Long, Long)]("touches",
-        Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
+      converted = getHandle.getValueState[Boolean]("converted", TTLConfig.NONE)
+      touches = getHandle.getListState[(String, Long, Long)]("touches", TTLConfig.NONE)
     }
 
     override def handleInputRows(key: Long, rows: Iterator[TouchEvent],
@@ -1936,36 +1395,11 @@ object TransformWithStateOps {
     }
   }
 
-  def streamingMultitouch(ds: Dataset[TouchEvent]): Dataset[TouchCredit] = {
-    implicit val outEnc: Encoder[TouchCredit] = Encoders.product[TouchCredit]
-    ds.groupByKey(_.user_id)(Encoders.scalaLong)
-      .transformWithState(new MultitouchProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
+  def streamingMultitouch(ds: Dataset[TouchEvent]): Dataset[TouchCredit] =
+    wire(ds, OutputMode.Append())(_.user_id)(new MultitouchProcessor)
 
   final case class SrcStatus(source: String, status: String)
   final case class DiffCountRow(source: String, status: String, n_docs: Long)
-
-  /** Per-(source, status) running counter behind
-    * [[streamingSnapshotDiff]] — one long of state per occupied cell. */
-  final class DiffCountProcessor
-      extends StatefulProcessor[(String, String), SrcStatus, DiffCountRow] {
-
-    @transient private var n: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      n = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: (String, String), rows: Iterator[SrcStatus],
-        timerValues: TimerValues): Iterator[DiffCountRow] = {
-      var c = 0L
-      rows.foreach(_ => c += 1L)
-      if (c == 0L) return Iterator.empty
-      val cur = (if (n.exists()) n.get() else 0L) + c
-      n.update(cur)
-      Iterator.single(DiffCountRow(key._1, key._2, cur))
-    }
-  }
 
   /** Streaming twin of the q227 corpus snapshot diff — the release
     * provenance report maintained continuously as documents stream in.
@@ -1993,12 +1427,10 @@ object TransformWithStateOps {
           .when(!in2, "removed")
           .when(d1 =!= d2, "changed")
           .otherwise("unchanged").as("status"))
-    implicit val inEnc: Encoder[SrcStatus] = Encoders.product[SrcStatus]
-    implicit val outEnc: Encoder[DiffCountRow] = Encoders.product[DiffCountRow]
-    classified.as[SrcStatus]
-      .groupByKey(r => (r.source, r.status))(
-        Encoders.tuple(Encoders.STRING, Encoders.STRING))
-      .transformWithState(new DiffCountProcessor,
-        TimeMode.None(), OutputMode.Update())
+      .as(Encoders.product[SrcStatus])
+    fold(classified)(r => (r.source, r.status), 0L) { (key, s, rows) =>
+      val cur = s + rows.size
+      (cur, Iterator.single(DiffCountRow(key._1, key._2, cur)))
+    }
   }
 }

@@ -8,7 +8,11 @@ object SparkTestSession {
     val s = SparkEntry.configure(SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false"))
+      .config("spark.ui.enabled", "false")
+      // a streaming query.stop() that hangs fails its own test with a
+      // TimeoutException after this long instead of stalling the suite
+      // (Spark's default, 0, waits forever)
+      .config("spark.sql.streaming.stopTimeout", "60s"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -27,7 +27,7 @@ class EvaluationPropertiesSpec extends AnyFunSuite {
   } yield (n1, c1, n2, c2)
 
   test("property: z2Ppm equals the exact BigInt rational, and is assignment-symmetric") {
-    import graft.streaming.TransformWithStateOps.AaTestProcessor.z2Ppm
+    import graft.ext.Evaluation.{z2PpmJvm => z2Ppm}
     forAll(contingencyGen, runs = 400) { case (n1, c1, n2, c2) =>
       val got = z2Ppm(n1, c1, n2, c2)
       val C = c1 + c2; val N = n1 + n2
