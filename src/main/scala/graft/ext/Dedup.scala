@@ -200,14 +200,6 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("est_jaccard"))
   }
 
-  /** Connected components over an undirected edge list `(a_id, b_id)` via
-    * iterated min-label propagation — the scalable CC formulation (each
-    * round is one neighbor-min aggregation + one keyed join; rounds are
-    * bounded by the longest shortest-path inside a component, which for
-    * near-dup clusters is tiny). Labels are checkpointed per round so
-    * lineage stays flat. Returns `(id, root)` for every node that appears
-    * in an edge; `root` is the component's minimum id — the canonical
-    * "keep the oldest" dedup survivor. */
   private val ccObsId = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** How long a round waits for its changed-count observation. The
@@ -216,6 +208,14 @@ object Dedup {
     * event was lost, and the round fails instead of blocking forever. */
   private val ccObsWait = scala.concurrent.duration.Duration(5, "min")
 
+  /** Connected components over an undirected edge list `(a_id, b_id)` via
+    * iterated min-label propagation — the scalable CC formulation (each
+    * round is one neighbor-min aggregation + one keyed join; rounds are
+    * bounded by the longest shortest-path inside a component, which for
+    * near-dup clusters is tiny). Labels are checkpointed per round so
+    * lineage stays flat. Returns `(id, root)` for every node that appears
+    * in an edge; `root` is the component's minimum id — the canonical
+    * "keep the oldest" dedup survivor. */
   def connectedComponents(edges: DataFrame): DataFrame = {
     val sym = edges
       .select(col("a_id").as("src"), col("b_id").as("dst"))
