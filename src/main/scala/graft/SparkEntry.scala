@@ -44,31 +44,20 @@ object SparkEntry {
     * table) read as long nanos — Spark has no TIMESTAMP(NANOS) type — and
     * UTC everywhere.
     *
-    * The five tuning knobs below are env-parameterised (optimization-guide
-    * §2.2/§3.1/§9 levers; see OPTIMIZATION_r14.md / OPTIMIZATION_r15.md for
-    * the A/B numbers that picked the defaults). Three ship at Spark's own
-    * defaults because the A/B declined them (parallelismFirst=false lost
-    * 1.6–2.3× on explode-heavy queries; shuffled-hash join measured flat) —
-    * the env knobs remain as deployment escape hatches. The ONE non-default
-    * is autoBroadcastJoinThreshold 64m (same-window A/B: 0.82× on the
-    * slowest-25; re-proven r15): modest against multi-GB executor heaps and
-    * the 8 GB broadcast hard cap, but it DOES raise driver/executor memory
-    * pressure on wide multi-join plans, and Spark's post-filter size
-    * ESTIMATES feeding the decision can be badly wrong at 100 TB — see
-    * SCALE.md "Broadcast mis-estimate risk" for the failure mode and the
-    * SPARK_GRAFT_AUTO_BROADCAST escape hatch. */
+    * Every other setting stays at Spark's default, which the A/Bs in
+    * OPTIMIZATION_r14.md / OPTIMIZATION_r15.md kept (parallelismFirst=false
+    * lost 1.6–2.3× on explode-heavy queries; shuffled-hash join measured
+    * flat). The ONE non-default is autoBroadcastJoinThreshold 64m
+    * (same-window A/B: 0.82× on the slowest-25; re-proven r15): modest
+    * against multi-GB executor heaps and the 8 GB broadcast hard cap, but it
+    * DOES raise driver/executor memory pressure on wide multi-join plans,
+    * and Spark's post-filter size ESTIMATES feeding the decision can be
+    * badly wrong at 100 TB — see SCALE.md "Broadcast mis-estimate risk" for
+    * the failure mode and the SPARK_GRAFT_AUTO_BROADCAST escape hatch. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
-    .config("spark.sql.join.preferSortMergeJoin",
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-    .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP", "0"))
     .config("spark.sql.autoBroadcastJoinThreshold",
       sys.env.getOrElse("SPARK_GRAFT_AUTO_BROADCAST", "64m"))
 }

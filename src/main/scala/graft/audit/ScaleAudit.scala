@@ -37,8 +37,6 @@ object ScaleAudit {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val listener = new TaskBudgetListener
-    spark.sparkContext.addSparkListener(listener)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }
@@ -48,25 +46,23 @@ object ScaleAudit {
     val rows = selected.flatMap { case (name, fn) =>
       graft.ext.PinnedCache.releaseAll()
       spark.catalog.clearCache()
-      listener.reset()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[scale] $name FAILED: ${e.getMessage}"); false
+      try {
+        val (sec, b) = TaskBudgetListener.measure(spark) {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
         }
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (!ok) None
-      else {
-        val b = listener.quiesce()
         System.err.println(f"[scale] $name%-28s ${sec}%6.1fs ${b.pretty}")
         Some(name -> (sec, b))
+      } catch { case e: Throwable =>
+        System.err.println(s"[scale] $name FAILED: ${e.getMessage}"); None
       }
     }
     def j(name: String, sec: Double, b: BudgetSnapshot): String =
       s"""{"q":"${name.takeWhile(_ != '_')}","sec":${math.round(sec * 1000) / 1000.0},""" +
-        s""""tasks":${b.tasks},"input":${b.inputBytes},"shufR":${b.shuffleReadBytes},""" +
-        s""""shufW":${b.shuffleWriteBytes},"spillMem":${b.memorySpillBytes},""" +
+        s""""jobs":${b.jobs},"tasks":${b.tasks},"input":${b.inputBytes},""" +
+        s""""shufR":${b.shuffleReadBytes},"shufW":${b.shuffleWriteBytes},""" +
+        s""""spillMem":${b.memorySpillBytes},""" +
         s""""spillDisk":${b.diskSpillBytes},"peakTaskMem":${b.peakExecMem}}"""
     val body = rows.map { case (n, (s, b)) => j(n, s, b) }.mkString("[", ",\n", "]")
     val hdr = s"""{"sf":"$sfDir","cpus":$cpus,"shufflePartitions":$shufP,""" +

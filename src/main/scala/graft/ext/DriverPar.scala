@@ -23,9 +23,10 @@ import org.apache.spark.sql.SparkSession
   * without one can carry a null session into eager checkpoint
   * materialization (the Spark-internal `resetMetrics` NPE the r14 gate
   * hit). Workers are daemon threads created by the calling thread, so they
-  * inherit its Spark local properties — the caller's job group included,
-  * which job attribution by group relies on. Every branch job also carries
-  * one per-call job TAG: on the first branch failure the pool is
+  * inherit its Spark local properties — the caller's job group and job
+  * tags included, which attribution by group (perfbench's `SparkProbe`)
+  * and by tag (`TaskBudgetListener.measure`) rely on. Every branch job also
+  * carries one per-call job TAG: on the first branch failure the pool is
   * interrupted, the sibling branches' Spark jobs are cancelled by that tag,
   * and the first error propagates (unwrapped) to the caller. */
 private[ext] object DriverPar {

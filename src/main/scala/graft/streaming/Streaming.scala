@@ -422,26 +422,4 @@ object Streaming {
           out.iterator
       }
   }
-
-  /** Event-time timer via `GroupState` timeouts (E7 as a continuous
-    * operator): for each key, emit a wakeup record when no event arrives for
-    * `timeoutMs` — the TimerManager pattern on streaming state. */
-  def streamingTimer[T: Encoder, K: Encoder](
-      ds: Dataset[T], keyOf: T => K, timeoutMs: Long)(
-      onTimeout: K => T): Dataset[T] = {
-    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-    ds.groupByKey(keyOf)
-      .flatMapGroupsWithState[Long, T](OutputMode.Update(), GroupStateTimeout.ProcessingTimeTimeout()) {
-        (k: K, rows: Iterator[T], state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.single(onTimeout(k))
-          } else {
-            val n = rows.size
-            state.update(state.getOption.getOrElse(0L) + n)
-            state.setTimeoutDuration(timeoutMs)
-            Iterator.empty
-          }
-      }
-  }
 }

@@ -63,22 +63,13 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("convergence detection rides the checkpoint job (no per-round count action)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // a 9-hop chain forces many propagation rounds, amplifying per-round cost
     val edges = (1L to 9L).map(i => (i, i + 1)).toDF("a_id", "b_id")
 
-    def countJobs(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(): Unit }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try { body; Thread.sleep(500) } // let queued listener events drain
-      finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
+    def countJobs(body: => Unit): Long =
+      graft.audit.TaskBudgetListener.measure(spark)(body)._2.jobs
 
     val jobsNew = countJobs {
       assert(Dedup.connectedComponents(edges).collect()
