@@ -1,7 +1,9 @@
 package graft.ext
 
-import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, ThreadFactory, TimeoutException, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
+
+import scala.concurrent.duration._
 
 import org.apache.spark.sql.SparkSession
 
@@ -28,12 +30,19 @@ import org.apache.spark.sql.SparkSession
   * and by tag (`TaskBudgetListener.measure`) rely on. Every branch job also
   * carries one per-call job TAG: on the first branch failure the pool is
   * interrupted, the sibling branches' Spark jobs are cancelled by that tag,
-  * and the first error propagates (unwrapped) to the caller. */
+  * and the first error propagates (unwrapped) to the caller. The whole call
+  * waits at most [[Bound]]: past it the branches are cancelled the same
+  * way and a `TimeoutException` naming the tag is thrown. */
 private[ext] object DriverPar {
   private val calls = new AtomicLong()
 
-  def map[A, B](spark: SparkSession, items: Seq[A], maxConc: Int = 4)
-      (f: A => B): Seq[B] = {
+  /** Far beyond any fan-out the queries run (the heaviest ladder query
+    * takes seconds at sf0.1); it exists so a hung branch fails the call
+    * instead of stalling it forever. */
+  val Bound: FiniteDuration = 30.minutes
+
+  def map[A, B](spark: SparkSession, items: Seq[A], maxConc: Int = 4,
+      bound: FiniteDuration = Bound)(f: A => B): Seq[B] = {
     if (items.size <= 1) return items.map(f)
     val sc = spark.sparkContext
     val tag = s"graft-driverpar-${calls.incrementAndGet()}"
@@ -57,18 +66,28 @@ private[ext] object DriverPar {
           }
         })
       }
+      def cancelBranches(): Unit = {
+        pool.shutdownNow()
+        sc.cancelJobsWithTag(tag)
+        // a sibling may submit one more job before its interrupt lands;
+        // once the workers are gone, no job with the tag can start
+        pool.awaitTermination(30, TimeUnit.SECONDS)
+        sc.cancelJobsWithTag(tag)
+      }
+      val deadline = System.nanoTime() + bound.toNanos
       // completion order: the first failure is seen as soon as it happens,
       // not after the siblings queued ahead of it finish
-      for (_ <- items.indices) {
-        try done.take().get()
+      for (i <- items.indices) {
+        val next = done.poll(deadline - System.nanoTime(), TimeUnit.NANOSECONDS)
+        if (next == null) {
+          cancelBranches()
+          throw new TimeoutException(
+            s"$tag: ${items.size - i} of ${items.size} branches unfinished after $bound")
+        }
+        try next.get()
         catch {
           case e: ExecutionException =>
-            pool.shutdownNow()
-            sc.cancelJobsWithTag(tag)
-            // a sibling may submit one more job before its interrupt lands;
-            // once the workers are gone, no job with the tag can start
-            pool.awaitTermination(30, TimeUnit.SECONDS)
-            sc.cancelJobsWithTag(tag)
+            cancelBranches()
             throw Option(e.getCause).getOrElse(e)
         }
       }

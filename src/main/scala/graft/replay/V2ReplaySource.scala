@@ -8,8 +8,9 @@ import graft.core.Time.Nanos
 import graft.sources.v2.ReplayDataSource
 
 /** Replay cursor over the `graft-replay` DataSourceV2 connector — the
-  * preferred scale path: the footer index is read ONCE (cached driver-side
-  * by the connector), `getNext` is pure in-memory index math, and every
+  * preferred scale path: each footer is read ONCE (cached driver-side by
+  * the connector), `readTo` lists the files once per step, `getNext` is
+  * pure in-memory math over that step's index, and every
   * cycle's slice plans O(overlapping row groups) input partitions with the
   * ts bounds pushed into the scan (visible as `graft-replay ... tsRange=`
   * in the plan). The cursor runs off parquet footer statistics only:
@@ -22,7 +23,10 @@ final class V2ReplaySource(
     spark: SparkSession, path: String, tsCol: String,
 ) extends DataSource[SparkBatch] {
 
-  private def groups = ReplayDataSource.index(path, tsCol).groups
+  // The index as of the last readTo (or construction): readTo takes one
+  // fresh snapshot, so files appended meanwhile join at the next readTo;
+  // getNext and the bounds reuse it without listing again.
+  private var groups = ReplayDataSource.index(path, tsCol).groups
 
   // The cursor's exhaustion test (getNext) and slice counts are driven by
   // row-group stats; a stat-less group would be scanned by the connector
@@ -41,6 +45,7 @@ final class V2ReplaySource(
   def maxTimestamp: Nanos = groups.iterator.flatMap(_.tsMax).max
 
   override def readTo(timestamp: Nanos): SparkBatch = {
+    groups = ReplayDataSource.index(path, tsCol).groups
     val from = prevTs
     val overlapping = groups.filter(g =>
       g.tsMax.forall(_ > from) && g.tsMin.forall(_ <= timestamp))

@@ -6,8 +6,9 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.ParquetReadOptions
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapred.JobConf
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -15,6 +16,9 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{GroupType, MessageType, PrimitiveType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -24,6 +28,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** `graft-replay` — a DataSourceV2 batch connector purpose-built for the
   * replay cursor pattern (reference `replay.py:47-83` read_to/get_next over
@@ -32,13 +37,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why not just `spark.read.parquet(...).where(...)` (which the other replay
   * sources use)? The built-in source re-lists files and re-reads footers on
-  * every cycle's plan. This connector builds the (file, row-group, tsMin,
-  * tsMax, rows) index ONCE, caches it in the driver keyed by
-  * (path, mtime), and serves every subsequent cycle's planning from memory:
+  * every cycle's plan. This connector keeps a (file, row-group, tsMin,
+  * tsMax, rows) index in the driver and reads each file's footer ONCE,
+  * cached per file under (name, mtime, length): a cycle's planning costs
+  * one directory listing, plus the footers of files new since the last
+  * listing (an appended-to sink reads only what the append added), and
   * `planInputPartitions` is a pure in-memory filter of the index by the
   * pushed timestamp bounds — O(overlapping row groups) per cycle instead of
-  * O(files) metadata IO. At 100 TB / 1000 cycles that is the difference
+  * O(files) footer IO. At 100 TB / 1000 cycles that is the difference
   * between per-cycle planning being free and being a storage-metadata storm.
+  * The session's Hadoop conf is built and broadcast once
+  * ([[ReplayDataSource.sessionConf]]) and shared by the footer reads and by
+  * every reader and writer task, instead of being rebuilt per call and
+  * shipped whole in every task.
   *
   * Pushdown contract: timestamp-column range predicates
   * (>, >=, <, <=, =) prune row groups via the cached footer stats; ALL
@@ -90,11 +101,21 @@ object ReplayDataSource {
       file: String, startPos: Long, compressedBytes: Long, rows: Long,
       tsMin: Option[Long], tsMax: Option[Long])
 
-  /** The once-per-path metadata: parquet schema + per-row-group footer
-    * index. */
+  /** The metadata of a path, or of one of its files: parquet schema +
+    * per-row-group footer index. */
   final case class PathIndex(schema: MessageType, groups: Array[RowGroupMeta])
 
-  private val cache = new ConcurrentHashMap[(String, String), (Long, PathIndex)]()
+  /** What a footer is cached under: (file, mtime, length). */
+  private type FileKey = (String, Long, Long)
+
+  private def keyOf(f: FileStatus): FileKey =
+    (f.getPath.toString, f.getModificationTime, f.getLen)
+
+  /** The index of one `(path, tsCol)` and the footers it was built from,
+    * in listing order. */
+  private final case class Cached(footers: Seq[(FileKey, PathIndex)], idx: PathIndex)
+
+  private val cache = new ConcurrentHashMap[(String, String), Cached]()
 
   def pathOf(options: CaseInsensitiveStringMap): String = {
     val p = options.get("path")
@@ -105,14 +126,53 @@ object ReplayDataSource {
   def tsColOf(options: CaseInsensitiveStringMap): String =
     Option(options.get("tscol")).getOrElse("ts")
 
-  /** Hadoop conf honoring the active session's `spark.hadoop.*` settings
-    * (S3/HDFS credentials etc.); bare defaults only when no session exists. */
-  private[v2] def sessionHadoopConf(): Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
+  /** What `newHadoopConf` is built from: the context (a new one after a
+    * stop is a different object), its `hadoopConfiguration` and the
+    * session's SQL conf. */
+  private final case class ConfInputs(
+      sc: SparkContext, hadoop: util.Map[String, String], sql: Map[String, String])
+
+  private var shared: (ConfInputs, Broadcast[SerializableConfiguration]) = _ // guarded by this
+
+  /** The session's Hadoop conf (`sessionState.newHadoopConf()`, so the
+    * session's `spark.hadoop.*` settings, S3/HDFS credentials etc. apply),
+    * broadcast ONCE: every driver-side metadata read (`.value.value`) and
+    * every reader and writer task of the session uses this one value, and
+    * never mutates it (a task sets its own keys on a copy, [[taskConf]]).
+    * Rebuilt only when one of its inputs changed since the last call:
+    * comparing them costs a map copy of each, where building the conf
+    * copies ~1,000 entries and shipping it whole costs a serialization per
+    * stage and a deserialization per task. */
+  private[v2] def sessionConf(session: SparkSession): Broadcast[SerializableConfiguration] = {
+    val sc = session.sparkContext
+    val hadoop = new util.HashMap[String, String]()
+    sc.hadoopConfiguration.forEach(e => hadoop.put(e.getKey, e.getValue))
+    val inputs = ConfInputs(sc, hadoop, session.conf.getAll)
+    synchronized {
+      if (shared == null || shared._1 != inputs)
+        shared = (inputs, sc.broadcast(
+          new SerializableConfiguration(session.sessionState.newHadoopConf())))
+      shared._2
+    }
+  }
+
+  /** The active session's conf for driver-side reads; bare defaults only
+    * when no session exists. */
+  private def hadoopConf(): Configuration =
+    SparkSession.getActiveSession.map(sessionConf(_).value.value)
       .getOrElse(new Configuration())
 
-  private def listParquetFiles(path: String, conf: Configuration): Seq[(Path, Long, Long)] = {
+  /** A task's own conf: a copy of the broadcast session conf with `keys`
+    * set. A `JobConf`, so `TaskAttemptContextImpl` takes it without another
+    * copy. */
+  private[v2] def taskConf(conf: Broadcast[SerializableConfiguration],
+      keys: Map[String, String]): JobConf = {
+    val c = new JobConf(conf.value.value)
+    keys.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
+
+  private def listParquetFiles(path: String, conf: Configuration): Seq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val st = fs.getFileStatus(p)
@@ -120,58 +180,58 @@ object ReplayDataSource {
       fs.listStatus(p).toSeq
         .filter(_.getPath.getName.endsWith(".parquet"))
         .sortBy(_.getPath.getName)
-        .map(f => (f.getPath, f.getModificationTime, f.getLen))
-    else Seq((st.getPath, st.getModificationTime, st.getLen))
+    else Seq(st)
   }
 
-  /** Cache version covering every file's (name, mtime, length) so renames,
-    * additions, and in-place rewrites that change size all invalidate; a
-    * same-length same-mtime in-place rewrite is indistinguishable without
-    * reading content (as with Spark's own file index). */
-  private def fileSetVersion(files: Seq[(Path, Long, Long)]): Long =
-    files.foldLeft(files.length.toLong) { case (acc, (p, mtime, len)) =>
-      var h = acc * 1000003L ^ p.toString.hashCode.toLong
-      h = h * 1000003L ^ mtime
-      h * 1000003L ^ len
-    }
+  private def readFooter(file: FileStatus, tsCol: String, conf: Configuration): PathIndex = {
+    // options built from the shared conf: without them parquet builds a
+    // fresh Configuration per open, re-parsing the XML defaults
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+      HadoopReadOptions.builder(conf, file.getPath).build())
+    try {
+      val footer = reader.getFooter
+      val schema = footer.getFileMetaData.getSchema
+      // stats scale to the engine's long-nanos convention by the ts
+      // column's timestamp unit (TIMESTAMP(MICROS) footers hold micros)
+      val mult = graft.replay.TsNanos.unitMultiplier(schema, tsCol)
+      PathIndex(schema, footer.getBlocks.asScala.map { block =>
+        val stats = block.getColumns.asScala
+          .find(_.getPath.toDotString == tsCol)
+          .map(_.getStatistics)
+          .filter(s => s != null && s.hasNonNullValue)
+        RowGroupMeta(file.getPath.toString, block.getStartingPos, block.getCompressedSize,
+          block.getRowCount,
+          stats.map(_.genericGetMin.asInstanceOf[Number].longValue() * mult),
+          stats.map(_.genericGetMax.asInstanceOf[Number].longValue() * mult))
+      }.toArray)
+    } finally reader.close()
+  }
 
-  /** Footer index for `(path, tsCol)`, cached by the file set's
-    * (name, mtime, length) fingerprint so repeated cursor scans never
-    * re-read metadata. Keyed by tsCol too: the stored min/max stats are
-    * that column's. */
+  /** Footer index for `(path, tsCol)`: one listing, plus a footer read for
+    * each file not seen before under the same (name, mtime, length). An
+    * unchanged file set returns the same `PathIndex` object; an append
+    * reads only the new files' footers; the footers of files no longer
+    * listed are dropped. A same-length same-mtime in-place rewrite is
+    * indistinguishable without reading content (as with Spark's own file
+    * index). Keyed by tsCol too: the stored min/max stats are that
+    * column's. */
   def index(path: String, tsCol: String = "ts"): PathIndex = {
-    val conf = sessionHadoopConf()
+    val conf = hadoopConf()
     val files = listParquetFiles(path, conf)
-    val version = fileSetVersion(files)
-    val key = (path, tsCol)
-    val cached = cache.get(key)
-    if (cached != null && cached._1 == version) return cached._2
-
-    var schema: MessageType = null
-    val groups = files.flatMap { case (f, _, _) =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try {
-        val fileSchema = reader.getFooter.getFileMetaData.getSchema
-        if (schema == null) schema = fileSchema
-        // stats scale to the engine's long-nanos convention by the ts
-        // column's timestamp unit (TIMESTAMP(MICROS) footers hold micros)
-        val mult = graft.replay.TsNanos.unitMultiplier(fileSchema, tsCol)
-        reader.getFooter.getBlocks.asScala.map { block =>
-          val stats = block.getColumns.asScala
-            .find(_.getPath.toDotString == tsCol)
-            .map(_.getStatistics)
-            .filter(s => s != null && s.hasNonNullValue)
-          RowGroupMeta(f.toString, block.getStartingPos, block.getCompressedSize,
-            block.getRowCount,
-            stats.map(_.genericGetMin.asInstanceOf[Number].longValue() * mult),
-            stats.map(_.genericGetMax.asInstanceOf[Number].longValue() * mult))
-        }.toSeq
-      } finally reader.close()
-    }.toArray
-    require(schema != null, s"No parquet files under $path")
-    val idx = PathIndex(schema, groups)
-    cache.put(key, (version, idx))
-    idx
+    require(files.nonEmpty, s"No parquet files under $path")
+    val keys = files.map(keyOf)
+    val prev = Option(cache.get((path, tsCol)))
+    prev.filter(_.footers.map(_._1) == keys) match {
+      case Some(c) => c.idx
+      case None =>
+        val seen = prev.map(_.footers.toMap).getOrElse(Map.empty[FileKey, PathIndex])
+        val footers = files.zip(keys).map { case (f, k) =>
+          k -> seen.getOrElse(k, readFooter(f, tsCol, conf))
+        }
+        val idx = PathIndex(footers.head._2.schema, footers.flatMap(_._2.groups).toArray)
+        cache.put((path, tsCol), Cached(footers, idx))
+        idx
+    }
   }
 
   def sparkSchema(schema: MessageType): StructType = StructType(
@@ -426,8 +486,11 @@ final class ReplayScan(path: String, tsCol: String, required: StructType,
     limit: Option[Int] = None)
     extends Scan with Batch with SupportsReportStatistics {
 
+  // one index snapshot per plan: pruning and the reader factory agree
+  private lazy val idx = ReplayDataSource.index(path, tsCol)
+
   private lazy val pruned: Array[ReplayDataSource.RowGroupMeta] = {
-    val inRange = ReplayDataSource.index(path, tsCol).groups.filter { g =>
+    val inRange = idx.groups.filter { g =>
       // keep a group unless its stats PROVE it lies outside (lower, upper];
       // groups without stats are always kept
       (g.tsMax, g.tsMin) match {
@@ -464,29 +527,28 @@ final class ReplayScan(path: String, tsCol: String, required: StructType,
       .asInstanceOf[InputPartition])
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = ReplayDataSource.sessionHadoopConf()
     // The vectorized reader resolves the projection and type mapping from
     // the same conf keys Spark's own parquet scan sets (ParquetReadSupport
     // contract): the requested catalyst schema as JSON plus the schema-
-    // converter flags. Set them here once; readers only deserialize.
-    conf.set("parquet.read.support.class",
-      "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
-    // (requested_schema is set below, after timestamp-unit adjustment)
-    // Every key ParquetToSparkSchemaConverter(conf) reads must be present
-    // (it does a raw conf.get(...).toBoolean for several) — mirror the
-    // session's values via the compiled SQLConf entries so names can't
-    // drift, forcing nanosAsLong (the engine-wide ts convention).
-    locally {
+    // converter flags. Every key ParquetToSparkSchemaConverter(conf) reads
+    // must be present (it does a raw conf.get(...).toBoolean for several) —
+    // mirror the session's values via the compiled SQLConf entries so names
+    // can't drift, forcing nanosAsLong (the engine-wide ts convention).
+    // Each task sets these on its own copy of the broadcast session conf.
+    val scanKeys = {
       val sc = org.apache.spark.sql.internal.SQLConf.get
       import org.apache.spark.sql.internal.SQLConf._
-      conf.setBoolean(PARQUET_BINARY_AS_STRING.key, sc.isParquetBinaryAsString)
-      conf.setBoolean(PARQUET_INT96_AS_TIMESTAMP.key, sc.isParquetINT96AsTimestamp)
-      conf.setBoolean(CASE_SENSITIVE.key, sc.caseSensitiveAnalysis)
-      conf.setBoolean(PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, sc.parquetInferTimestampNTZEnabled)
-      conf.setBoolean(LEGACY_PARQUET_NANOS_AS_LONG.key, true)
-      conf.setBoolean(PARQUET_FIELD_ID_READ_ENABLED.key, sc.parquetFieldIdReadEnabled)
+      Map(
+        "parquet.read.support.class" ->
+          "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport",
+        PARQUET_BINARY_AS_STRING.key -> sc.isParquetBinaryAsString.toString,
+        PARQUET_INT96_AS_TIMESTAMP.key -> sc.isParquetINT96AsTimestamp.toString,
+        CASE_SENSITIVE.key -> sc.caseSensitiveAnalysis.toString,
+        PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key -> sc.parquetInferTimestampNTZEnabled.toString,
+        LEGACY_PARQUET_NANOS_AS_LONG.key -> "true",
+        PARQUET_FIELD_ID_READ_ENABLED.key -> sc.parquetFieldIdReadEnabled.toString,
+        "org.apache.spark.sql.parquet.row.requested_schema" -> required.json)
     }
-    conf.set("org.apache.spark.sql.parquet.row.requested_schema", required.json)
     // Columns with a timestamp unit (TIMESTAMP(MICROS/MILLIS)) surface as
     // long NANOS via the ROW path's per-field unit multipliers — Spark's
     // vectorized reader can't hand back a long vector for an annotated
@@ -496,11 +558,10 @@ final class ReplayScan(path: String, tsCol: String, required: StructType,
     // replay-log scans — the hot cursor workload this connector exists
     // for — keep the full columnar path; external corpora are normalized
     // into engine logs at ingest anyway (ReplayAppendDataSink).
-    val fileSchema = ReplayDataSource.index(path, tsCol).schema
     val anyScaled = required.fields.exists(f =>
-      graft.replay.TsNanos.unitMultiplier(fileSchema, f.name) != 1L)
+      graft.replay.TsNanos.unitMultiplier(idx.schema, f.name) != 1L)
     new ReplayReaderFactory(required.fields.map(_.name), required,
-      new org.apache.spark.util.SerializableConfiguration(conf),
+      ReplayDataSource.sessionConf(SparkSession.active), scanKeys,
       // zero-column projections (bare count(*)) stay on the row path —
       // the Group assembly handles them; a zero-column vectorized batch
       // has no value anyway
@@ -532,7 +593,7 @@ final case class RowGroupPartition(file: String, startPos: Long,
   *     property-tested against.
   */
 final class ReplayReaderFactory(requiredCols: Array[String], required: StructType,
-    hadoopConf: org.apache.spark.util.SerializableConfiguration,
+    val conf: Broadcast[SerializableConfiguration], scanKeys: Map[String, String],
     columnar: Boolean)
     extends PartitionReaderFactory {
 
@@ -556,7 +617,8 @@ final class ReplayReaderFactory(requiredCols: Array[String], required: StructTyp
           /* useOffHeap = */ false, /* capacity = */ 4096)
         val split = new FileSplit(new Path(p.file), p.startPos, p.compressedBytes,
           Array.empty[String])
-        r.initialize(split, new TaskAttemptContextImpl(hadoopConf.value, new TaskAttemptID()))
+        r.initialize(split, new TaskAttemptContextImpl(
+          ReplayDataSource.taskConf(conf, scanKeys), new TaskAttemptID()))
         r.initBatch(new StructType(), InternalRow.empty)
         r.enableReturningBatches()
         r
@@ -572,14 +634,15 @@ final class ReplayReaderFactory(requiredCols: Array[String], required: StructTyp
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RowGroupPartition]
     new PartitionReader[InternalRow] {
-      private val conf = hadoopConf.value
+      private val file = new Path(p.file)
+      private val hadoopConf = ReplayDataSource.taskConf(conf, scanKeys)
       // parquet selects row groups whose byte MIDPOINT falls in the range,
       // so the range must span this block's compressed extent
-      private val options = ParquetReadOptions.builder()
+      private val options = HadoopReadOptions.builder(hadoopConf, file)
         .withRange(p.startPos, p.startPos + p.compressedBytes)
         .build()
       private val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(p.file), conf), options)
+        HadoopInputFile.fromPath(file, hadoopConf), options)
       private val fileSchema = reader.getFooter.getFileMetaData.getSchema
       private val projection: MessageType = new MessageType(
         fileSchema.getName,

@@ -8,6 +8,8 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
@@ -23,8 +25,8 @@ import org.apache.spark.util.SerializableConfiguration
   * invisible to the reader's `.parquet` listing). Parquet writes ts
   * min/max statistics per row group as a matter of course, so everything
   * this writer produces is immediately prunable by [[ReplayScan]]'s
-  * footer index; the index cache's (name, mtime, length) fingerprint
-  * invalidates itself when the commit lands.
+  * footer index, which reads the footers of the committed files (and only
+  * those) at its next listing.
   *
   * Truncate (`SaveMode.Overwrite`) captures the pre-existing file set at
   * job start on the driver and deletes it only in job-level `commit`,
@@ -52,39 +54,42 @@ final class ReplayBatchWrite(path: String, schema: StructType, truncate: Boolean
   // fail at planning, not per-task
   ReplayWriter.parquetSchema(schema)
 
-  private val conf = new SerializableConfiguration(ReplayDataSource.sessionHadoopConf())
+  private val conf = ReplayDataSource.sessionConf(SparkSession.active)
 
-  /** Files present before the job ran — the truncate set. */
-  private val preExisting: Seq[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
-    if (fs.exists(p) && fs.getFileStatus(p).isDirectory)
-      fs.listStatus(p).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).map(_.toString)
-    else Seq.empty
-  }
+  /** Files present before the job ran — the truncate set; an append lists
+    * nothing. */
+  private val preExisting: Seq[String] =
+    if (!truncate) Seq.empty
+    else {
+      val p = new Path(path)
+      val fs = p.getFileSystem(conf.value.value)
+      if (fs.exists(p) && fs.getFileStatus(p).isDirectory)
+        fs.listStatus(p).toSeq.map(_.getPath)
+          .filter(_.getName.endsWith(".parquet")).map(_.toString)
+      else Seq.empty
+    }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new ReplayWriterFactory(path, schema, conf)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    if (truncate) {
-      val fs = new Path(path).getFileSystem(conf.value)
-      preExisting.foreach(f => fs.delete(new Path(f), false))
-    }
+    val fs = new Path(path).getFileSystem(conf.value.value)
+    preExisting.foreach(f => fs.delete(new Path(f), false))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(conf.value)
+    val fs = new Path(path).getFileSystem(conf.value.value)
     messages.collect { case ReplayCommit(f, _) => fs.delete(new Path(f), false) }
   }
 }
 
 final class ReplayWriterFactory(path: String, schema: StructType,
-    conf: SerializableConfiguration) extends DataWriterFactory {
+    conf: Broadcast[SerializableConfiguration]) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
+      // the parquet writer sets its own keys: on this task's copy
+      private val hadoopConf = ReplayDataSource.taskConf(conf, Map.empty)
       private val fileName =
         f"part-$partitionId%05d-$taskId-${UUID.randomUUID().toString.take(8)}.parquet"
       private val tmpPath = new Path(path, s".$fileName.inprogress")
@@ -94,7 +99,7 @@ final class ReplayWriterFactory(path: String, schema: StructType,
       private val fields = schema.fields
       @SuppressWarnings(Array("deprecation"))
       private val writer = ExampleParquetWriter.builder(tmpPath)
-        .withConf(conf.value).withType(parquetType).build()
+        .withConf(hadoopConf).withType(parquetType).build()
       private var rows = 0L
 
       override def write(record: InternalRow): Unit = {
@@ -117,7 +122,7 @@ final class ReplayWriterFactory(path: String, schema: StructType,
 
       override def commit(): WriterCommitMessage = {
         writer.close()
-        val fs = finalPath.getFileSystem(conf.value)
+        val fs = finalPath.getFileSystem(hadoopConf)
         // unique names make the rename race-free; visibility is atomic
         require(fs.rename(tmpPath, finalPath), s"rename failed: $tmpPath -> $finalPath")
         ReplayCommit(finalPath.toString, rows)
@@ -125,7 +130,7 @@ final class ReplayWriterFactory(path: String, schema: StructType,
 
       override def abort(): Unit = {
         writer.close()
-        val fs = tmpPath.getFileSystem(conf.value)
+        val fs = tmpPath.getFileSystem(hadoopConf)
         fs.delete(tmpPath, false): Unit
       }
 

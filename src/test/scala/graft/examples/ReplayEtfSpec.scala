@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDir}
 import graft.core.Time
 import graft.core.Time.Nanos
 import graft.examples.Etfs.{EtfComposition, PriceRecord}
@@ -20,9 +20,9 @@ class ReplayEtfSpec extends AnyFunSuite {
   def ts(s: String): Nanos = Time.parse(s)
   val Hour: Nanos = 3600L * 1000000000L
 
-  test("daily CSV price files replay through the ETF dag in virtual time") {
+  test("daily CSV price files replay through the ETF dag in virtual time") { TempDir("graft_etf_csv") { tmp =>
     // two daily files, AAPL/GOOG prices moving across days
-    val dir = Files.createTempDirectory("graft_etf_csv").toFile
+    val dir = new java.io.File(tmp)
     Files.writeString(new java.io.File(dir, "input_2023-01-01.csv").toPath,
       """timestamp,ticker,price
         |2023-01-01 10:00:00,AAPL,100.0
@@ -75,5 +75,5 @@ class ReplayEtfSpec extends AnyFunSuite {
     assert(navs.last == ("TECH", Some(155.0))) // (110+200)/2
     assert(navs.contains(("TECH", Some(150.0)))) // (100+200)/2 after day 1
     assert(sink.closed)
-  }
+  }}
 }

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDir}
 
 /** The q278–q283 evaluation statistics against brute-force and closed-form
   * ground truth on hand-built frames. */
@@ -156,9 +156,8 @@ class EvaluationSpec extends AnyFunSuite {
       case Array(a, b) => b <= a; case _ => true })
   }
 
-  test("q289 CDC chunking is shift-invariant: a shared passage dedups across different offsets") {
+  test("q289 CDC chunking is shift-invariant: a shared passage dedups across different offsets") { TempDir("cdc") { dir =>
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cdc").toString
     // a long shared passage behind two different-length prefixes: interior
     // chunk boundaries depend only on content, so the shared chunks must
     // fingerprint identically at both offsets (the property fixed-stride
@@ -179,11 +178,10 @@ class EvaluationSpec extends AnyFunSuite {
     assert(n - distinct >= 2, s"expected >=2 duplicate shared chunks, got n=$n distinct=$distinct")
     val (nc, dc) = out("control")
     assert(nc == dc, "control source with unique tokens must have no duplicate chunks")
-  }
+  }}
 
-  test("q290 snake sharding matches the hand rule and balances counts within one doc") {
+  test("q290 snake sharding matches the hand rule and balances counts within one doc") { TempDir("snake") { dir =>
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("snake").toString
     val docs = (0 until 37).map(i =>
       (i.toLong, s"t$i", "en", "s", (1000 - i * 7).toLong))
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -203,7 +201,7 @@ class EvaluationSpec extends AnyFunSuite {
     // count balance: every shard holds floor or ceil of N/8
     val sizes = out.valuesIterator.map(_._1).toSeq
     assert(sizes.max - sizes.min <= 1)
-  }
+  }}
 
   test("q292 isotonic fit is monotone and equals the classic PAV stack algorithm") {
     val dir = "/root/testdata/sf0.001"

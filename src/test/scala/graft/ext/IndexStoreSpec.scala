@@ -1,12 +1,10 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDir}
 
 /** [[IndexStore]] — the persisted-index seam (r13 verdict item 4). Pins:
   * (1) IVF round-trip: build→write→read→query is BIT-IDENTICAL to the
@@ -20,9 +18,6 @@ class IndexStoreSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft_idx_$tag").toString
-
   private val rnd = new scala.util.Random(17)
   private def vec(): Seq[Float] = Seq.fill(8)(rnd.nextFloat() * 2f - 1f)
   private lazy val corpus = (0L until 200L).map(i => (i, vec()))
@@ -31,8 +26,7 @@ class IndexStoreSpec extends AnyFunSuite {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  test("IVF round-trip: from-index top-k is bit-identical to the inline build") {
-    val path = tmpDir("ivf")
+  test("IVF round-trip: from-index top-k is bit-identical to the inline build") { TempDir("graft_idx_ivf") { path =>
     val cents = Similarity.trainCentroids(corpus, "embedding", k = 8,
       iters = 2, idCol = "vec_id")
     IndexStore.writeIvfIndex(path, cents, corpus, "embedding", "vec_id")
@@ -44,10 +38,9 @@ class IndexStoreSpec extends AnyFunSuite {
     assert(sortedRows(fromIndex) == sortedRows(inline))
     // stored centroids round-trip exactly (floats/doubles are bit-stable)
     assert(IndexStore.readIvfCentroids(spark, path) == cents)
-  }
+  }}
 
-  test("from-index scan is partition-pruned to the probed cids") {
-    val path = tmpDir("ivfprune")
+  test("from-index scan is partition-pruned to the probed cids") { TempDir("graft_idx_ivfprune") { path =>
     val cents = Similarity.trainCentroids(corpus, "embedding", k = 8,
       iters = 2, idCol = "vec_id")
     IndexStore.writeIvfIndex(path, cents, corpus, "embedding", "vec_id")
@@ -69,9 +62,9 @@ class IndexStoreSpec extends AnyFunSuite {
     val listNids = prunedEquiv.select(col("nid")).collect()
       .map(_.getLong(0)).toSet
     assert(nids.subsetOf(listNids))
-  }
+  }}
 
-  test("MinHash round-trip: pairs from the persisted index equal the inline build") {
+  test("MinHash round-trip: pairs from the persisted index equal the inline build") { TempDir("graft_idx_minhash") { path =>
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),
       (2L, "the quick brown fox jumps over the lazy dog tonight"),
@@ -80,7 +73,6 @@ class IndexStoreSpec extends AnyFunSuite {
       (5L, "the quick brown fox jumps over the lazy dog today"),
       (6L, "totally unrelated text with no shared shingles at all"),
     ).toDF("doc_id", "text")
-    val path = tmpDir("minhash")
     IndexStore.writeMinhashIndex(path, docs, "text", "doc_id",
       numHashes = 16, k = 3)
     val fromIndex = IndexStore.minhashPairsFromIndex(spark, path,
@@ -101,11 +93,9 @@ class IndexStoreSpec extends AnyFunSuite {
     val pairs = fromIndex.select(col("a_id"), col("b_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 5L)) && pairs.contains((3L, 4L)))
-  }
+  }}
 
-  test("IVF append under frozen centroids: appended index ≡ full rebuild; base list files byte-untouched") {
-    val pathApp = tmpDir("ivfapp")
-    val pathFull = tmpDir("ivffull")
+  test("IVF append under frozen centroids: appended index ≡ full rebuild; base list files byte-untouched") { TempDir("graft_idx_ivfapp") { pathApp => TempDir("graft_idx_ivffull") { pathFull =>
     val cents = Similarity.trainCentroids(corpus, "embedding", k = 8,
       iters = 2, idCol = "vec_id")
     val base = corpus.where(col("vec_id") % 3 =!= 0)
@@ -126,9 +116,9 @@ class IndexStoreSpec extends AnyFunSuite {
     val fromFull = IndexStore.ivfTopKFromIndex(spark, pathFull, queries,
       "embedding", "vec_id", k = 4, nprobe = 2)
     assert(sortedRows(fromApp) == sortedRows(fromFull))
-  }
+  }}}
 
-  test("MinHash append: appended index ≡ full rebuild; base sig files byte-untouched") {
+  test("MinHash append: appended index ≡ full rebuild; base sig files byte-untouched") { TempDir("graft_idx_mhapp") { pathApp => TempDir("graft_idx_mhfull") { pathFull =>
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),
       (2L, "the quick brown fox jumps over the lazy dog tonight"),
@@ -137,8 +127,6 @@ class IndexStoreSpec extends AnyFunSuite {
       (5L, "the quick brown fox jumps over the lazy dog today"),
       (6L, "totally unrelated text with no shared shingles at all"),
     ).toDF("doc_id", "text")
-    val pathApp = tmpDir("mhapp")
-    val pathFull = tmpDir("mhfull")
     IndexStore.writeMinhashIndex(pathApp, docs.where(col("doc_id") <= 4),
       "text", "doc_id", numHashes = 16, k = 3)
     val baseFiles = listParquetFiles(s"$pathApp/sigs")
@@ -157,7 +145,7 @@ class IndexStoreSpec extends AnyFunSuite {
     val pairs = fromApp.select(col("a_id"), col("b_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 5L)))
-  }
+  }}}
 
   /** (relative path, size, mtime) of every parquet data file under dir. */
   private def listParquetFiles(dir: String): Seq[(String, Long, Long)] = {
@@ -170,8 +158,7 @@ class IndexStoreSpec extends AnyFunSuite {
       .sortBy(_._1)
   }
 
-  test("ivfIndexHealth: shares are exact, flags fire only past 2x the balanced share") {
-    val path = tmpDir("health")
+  test("ivfIndexHealth: shares are exact, flags fire only past 2x the balanced share") { TempDir("graft_idx_health") { path =>
     // 4 centroids; skew the corpus onto centroid 0 by writing the
     // centroids as corpus members too (each list holds its centroid)
     val cents = Similarity.trainCentroids(corpus, "embedding", k = 4,
@@ -185,10 +172,9 @@ class IndexStoreSpec extends AnyFunSuite {
       assert(r.getLong(2) == r.getLong(1) * 1000000L / total)
       assert(r.getBoolean(3) == (r.getLong(1) * 4 > 2 * total))
     }
-  }
+  }}
 
-  test("overwrite idempotence: a second write leaves answers unchanged") {
-    val path = tmpDir("rewrite")
+  test("overwrite idempotence: a second write leaves answers unchanged") { TempDir("graft_idx_rewrite") { path =>
     val cents = Similarity.trainCentroids(corpus, "embedding", k = 4,
       iters = 1, idCol = "vec_id")
     IndexStore.writeIvfIndex(path, cents, corpus, "embedding", "vec_id")
@@ -199,5 +185,5 @@ class IndexStoreSpec extends AnyFunSuite {
     val second = sortedRows(IndexStore.ivfTopKFromIndex(spark, path, queries,
       "embedding", "vec_id", k = 3, nprobe = 2))
     assert(first == second)
-  }
+  }}
 }

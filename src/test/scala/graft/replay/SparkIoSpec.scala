@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDir}
 import graft.core.Time
 import graft.kafka.{JsonSerde, KMessage, TopicPartition}
 
@@ -14,8 +14,8 @@ class SparkIoSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  test("CSV replay source with explicit schema (replay_concepts.py:78-91)") {
-    val dir = Files.createTempDirectory("graft_csv").toFile
+  test("CSV replay source with explicit schema (replay_concepts.py:78-91)") { TempDir("graft_csv") { tmp =>
+    val dir = new java.io.File(tmp)
     val csv = new java.io.File(dir, "input.csv")
     Files.writeString(csv.toPath,
       """timestamp,message
@@ -32,10 +32,9 @@ class SparkIoSpec extends AnyFunSuite {
     val batch2 = src.readTo(Time.parse("2023-01-01T03:00:00Z"))
     assert(src.length(batch2) == 1)
     assert(src.getNext == Time.UtcMax)
-  }
+  }}
 
-  test("parquet and csv sinks buffer batches and write once on close") {
-    val out = Files.createTempDirectory("graft_sink").toFile
+  test("parquet and csv sinks buffer batches and write once on close") { TempDir("graft_sink") { out =>
     val pq = new SparkParquetDataSink(s"$out/pq")
     pq.append(0L, Seq((1, "a")).toDF("id", "v"))
     pq.append(1L, Seq((2, "b")).toDF("id", "v"))
@@ -46,10 +45,9 @@ class SparkIoSpec extends AnyFunSuite {
     csv.append(0L, Seq((1, "a"), (2, "b")).toDF("id", "v"))
     csv.close()
     assert(spark.read.option("header", "true").csv(s"$out/csv").count() == 2)
-  }
+  }}
 
-  test("ReplayAppendDataSink: each cycle lands as a prunable slice, crash loses nothing") {
-    val out = Files.createTempDirectory("graft_sink").toFile
+  test("ReplayAppendDataSink: each cycle lands as a prunable slice, crash loses nothing") { TempDir("graft_sink") { out =>
     val path = s"$out/log"
     val sink = new ReplayAppendDataSink(path)
     sink.append(0L, Seq((100L, "a"), (150L, "b")).toDF("ts", "v").coalesce(1))
@@ -65,7 +63,7 @@ class SparkIoSpec extends AnyFunSuite {
     assert(idx.groups.forall(_.tsMin.isDefined))
     // a slice over the second append's range prunes the first file
     assert(all.where(col("ts") > 150L && col("ts") <= 200L).rdd.getNumPartitions == 1)
-  }
+  }}
 
   test("JSON serde round-trip with explicit schema (pyarrow_kafka.py)") {
     val schema = org.apache.spark.sql.types.StructType.fromDDL("ticker STRING, price DOUBLE")

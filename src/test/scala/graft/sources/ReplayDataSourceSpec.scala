@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDir}
 import graft.sources.v2.ReplayDataSource
 
 /** The graft-replay DataSourceV2 connector: agreement with the built-in
@@ -60,9 +60,9 @@ class ReplayDataSourceSpec extends AnyFunSuite {
     assert(a.nonEmpty && a == b)
   }
 
-  test("pushdown prunes row groups on a multi-row-group file") {
+  test("pushdown prunes row groups on a multi-row-group file") { TempDir("graft_v2_multirg") { dir =>
     import spark.implicits._
-    val path = s"/tmp/graft_v2_multirg_${System.nanoTime()}"
+    val path = s"$dir/data"
     // small parquet block size forces several row groups; ts monotonically
     // increasing so footer stats partition the range cleanly
     (0L until 200000L).map(i => (i, i * 1000L, s"payload_$i"))
@@ -86,11 +86,11 @@ class ReplayDataSourceSpec extends AnyFunSuite {
 
     // unbounded scan plans every group
     assert(full.rdd.getNumPartitions == idx.groups.length)
-  }
+  }}
 
-  test("limit pushdown plans a prefix of row groups; filters disable it") {
+  test("limit pushdown plans a prefix of row groups; filters disable it") { TempDir("graft_v2_limit") { dir =>
     import spark.implicits._
-    val path = s"/tmp/graft_v2_limit_${System.nanoTime()}"
+    val path = s"$dir/data"
     (0L until 200000L).map(i => (i, i * 1000L, s"payload_$i"))
       .toDF("ts", "event_id", "payload")
       .coalesce(1)
@@ -120,7 +120,7 @@ class ReplayDataSourceSpec extends AnyFunSuite {
     val survivors = idx.groups.count(g => g.tsMax.forall(_ > 100000L))
     assert(plannedGroups(filteredLimit) == survivors,
       "filter + limit must not drop surviving groups")
-  }
+  }}
 
   test("nested schemas fail fast at inferSchema (embeddings: list<float>)") {
     val e = intercept[Exception] {
@@ -129,9 +129,9 @@ class ReplayDataSourceSpec extends AnyFunSuite {
     assert(e.getMessage.contains("flat primitive schemas"), e.getMessage)
   }
 
-  test("multi-file directory: rows union across files, pruning spans files") {
+  test("multi-file directory: rows union across files, pruning spans files") { TempDir("graft_v2_multifile") { tmp =>
     import spark.implicits._
-    val dir = s"/tmp/graft_v2_multifile_${System.nanoTime()}"
+    val dir = s"$tmp/data"
     // three non-overlapping time-sliced files (the daily-partition replay shape)
     (0 until 3).foreach { d =>
       (0L until 1000L).map(i => (d * 1000L + i, s"d$d-$i"))
@@ -146,7 +146,7 @@ class ReplayDataSourceSpec extends AnyFunSuite {
     val sliced = all.where(col("ts") > 1100L && col("ts") <= 1200L)
     assert(sliced.rdd.getNumPartitions == 1)
     assert(sliced.count() == 100L)
-  }
+  }}
 
   test("footer index is cached across scans (same driver-side object)") {
     val i1 = ReplayDataSource.index(s"$sfDir/events.parquet")
@@ -154,9 +154,9 @@ class ReplayDataSourceSpec extends AnyFunSuite {
     assert(i1 eq i2)
   }
 
-  test("footer index cache is keyed by tsCol (stats follow the column)") {
+  test("footer index cache is keyed by tsCol (stats follow the column)") { TempDir("graft_v2_tscol") { dir =>
     import spark.implicits._
-    val path = s"/tmp/graft_v2_tscol_${System.nanoTime()}"
+    val path = s"$dir/data"
     // two long columns with DIFFERENT ranges: ts in [0,2000), event_id in
     // [1_000_000, 1_002_000). A cache keyed by path only would serve ts
     // stats to an event_id-cursored scan and prune every group.
@@ -176,21 +176,21 @@ class ReplayDataSourceSpec extends AnyFunSuite {
       .where(col("event_id") > 1000999L && col("event_id") <= 1001099L)
       .count()
     assert(n == 100L)
-  }
+  }}
 
-  test("equality filter at Long.MinValue does not prune matching rows") {
+  test("equality filter at Long.MinValue does not prune matching rows") { TempDir("graft_v2_minval") { dir =>
     import spark.implicits._
-    val path = s"/tmp/graft_v2_minval_${System.nanoTime()}"
+    val path = s"$dir/data"
     Seq((Long.MinValue, 1L), (0L, 2L), (5L, 3L))
       .toDF("ts", "v").coalesce(1).write.parquet(path)
     val got = viaConnector(path).where(col("ts") === Long.MinValue)
       .select("v").collect().map(_.getLong(0)).toSeq
     assert(got == Seq(1L))
-  }
+  }}
 
-  test("index cache invalidates when a file is rewritten in place") {
+  test("index cache invalidates when a file is rewritten in place") { TempDir("graft_v2_rewrite") { dir =>
     import spark.implicits._
-    val path = s"/tmp/graft_v2_rewrite_${System.nanoTime()}"
+    val path = s"$dir/data"
     (0L until 100L).map(i => (i, i)).toDF("ts", "v").coalesce(1)
       .write.parquet(path)
     val i1 = ReplayDataSource.index(path)
@@ -199,7 +199,7 @@ class ReplayDataSourceSpec extends AnyFunSuite {
     val i2 = ReplayDataSource.index(path)
     assert(!(i1 eq i2))
     assert(i2.groups.map(_.rows).sum == 250L)
-  }
+  }}
 
   test("property: random ts slices agree with the built-in source (ids and counts)") {
     import org.scalacheck.Gen
@@ -223,11 +223,11 @@ class ReplayDataSourceSpec extends AnyFunSuite {
     }
   }
 
-  test("columnar path is the default plan; vectorized=false agrees row-for-row") {
+  test("columnar path is the default plan; vectorized=false agrees row-for-row") { TempDir("graft_v2_colpath") { dir =>
     import spark.implicits._
     // plain-INT64 fixture (the engine's own write-path shape): columnar
     // eligible. Timestamp-annotated files take the row path (next test).
-    val path = s"/tmp/graft_v2_colpath_${System.nanoTime()}"
+    val path = s"$dir/data"
     (0L until 20000L).map(i => (i, i * 3L, s"p$i")).toDF("ts", "event_id", "payload")
       .coalesce(1).write.parquet(path)
     val colDf = viaConnector(path) // default: vectorized
@@ -241,7 +241,7 @@ class ReplayDataSourceSpec extends AnyFunSuite {
     val a = colDf.orderBy("event_id").collect().toSeq
     val b = rowDf.orderBy("event_id").collect().toSeq
     assert(a.nonEmpty && a == b)
-  }
+  }}
 
   test("timestamp-unit files (micros) surface long nanos on BOTH paths") {
     val path = s"$sfDir/events.parquet"
@@ -264,9 +264,9 @@ class ReplayDataSourceSpec extends AnyFunSuite {
     assert(row == a)
   }
 
-  test("columnar and row paths agree on a ts-sliced, projected scan (all types)") {
+  test("columnar and row paths agree on a ts-sliced, projected scan (all types)") { TempDir("graft_v2_coltypes") { dir =>
     import spark.implicits._
-    val path = s"/tmp/graft_v2_coltypes_${System.nanoTime()}"
+    val path = s"$dir/data"
     // every supported primitive, with nulls in each nullable column
     (0L until 5000L).map { i =>
       (i, if (i % 7 == 0) None else Some(i % 2 == 0),
@@ -283,7 +283,7 @@ class ReplayDataSourceSpec extends AnyFunSuite {
     val a = read(true).orderBy("ts").collect().toSeq
     val b = read(false).orderBy("ts").collect().toSeq
     assert(a.size == 3000 && a == b)
-  }
+  }}
 
   test("bare count(*) works (zero-column projection stays on the row path)") {
     val n = viaConnector(s"$sfDir/events.parquet").count()
@@ -338,5 +338,23 @@ class ReplayDataSourceSpec extends AnyFunSuite {
         .where(col("ts") > a && col("ts") <= b).count()
     }.toSeq
     assert(slices.sum == all.count())
+  }
+
+  test("scans share one conf broadcast until the session's Hadoop conf changes") {
+    val key = "spark.hadoop.graft.test.key"
+    def factory() = viaConnector(s"$sfDir/events.parquet").queryExecution.executedPlan
+      .collectFirst { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan.toBatch.createReaderFactory().asInstanceOf[graft.sources.v2.ReplayReaderFactory]
+      }.get.conf
+    val first = factory()
+    assert(factory().id == first.id)
+    assert(first.value.value.get(key) == null)
+    spark.conf.set(key, "v")
+    try {
+      val set = factory()
+      assert(set.id != first.id)
+      assert(set.value.value.get(key) == "v")
+    } finally spark.conf.unset(key)
+    assert(factory().value.value.get(key) == null)
   }
 }
