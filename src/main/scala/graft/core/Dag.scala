@@ -22,8 +22,6 @@ object HasLength {
     (value: T) => value.size
   implicit def arrayHasLength[E]: HasLength[Array[E]] = (value: Array[E]) => value.length
   implicit val stringHasLength: HasLength[String] = (value: String) => value.length
-  implicit def datasetHasLength[T <: org.apache.spark.sql.Dataset[_]]: HasLength[T] =
-    (value: T) => if (value.isEmpty) 0 else 1
   implicit def optionHasLength[E]: HasLength[Option[E]] = (value: Option[E]) => value.size
 }
 
@@ -206,9 +204,10 @@ final class Dag {
     * (reference `beavers/dag.py:426-463`). Registering an existing name
     * returns the existing node only when the empty values are COMPATIBLE:
     * same runtime class (both are length-0 by construction), and for
-    * Datasets also the same schema; otherwise it throws, matching the
-    * reference's "Duplicate source" error (`beavers/dag.py:448-453`)
-    * instead of silently reusing a node of a different type. */
+    * [[HasSourceSchema]] values also the same schema; otherwise it throws,
+    * matching the reference's "Duplicate source" error
+    * (`beavers/dag.py:448-453`) instead of silently reusing a node of a
+    * different type. */
   def sourceStream[T](empty: => T, name: String = "")(implicit hl: HasLength[T]): Node[T] = {
     val factory = () => checkEmpty(empty)(hl)
     if (name.nonEmpty && sources.contains(name)) {
@@ -216,19 +215,14 @@ final class Dag {
       val existingEmpty = existing.kind.asInstanceOf[SourceStream[_]].emptyFactory()
       val newEmpty = factory()
       // Two empties of the same runtime class are equivalent registrations
-      // even under reference equality (Array.empty, a fresh empty Dataset):
-      // checkEmpty already proved both have length 0, so same-class empties
-      // are the same source type — the reference compares empty factories,
-      // not values (dag.py:448-453). Schema-carrying values (Datasets,
-      // [[HasSourceSchema]] wrappers like SparkBatch) additionally compare
-      // SCHEMAS: they share a runtime class for every schema, and silently
-      // reusing the node would surface as a distant analysis error instead
-      // of a build-site one. KNOWN LIMIT: two case classes with identical
-      // schemas but different encoders are indistinguishable through the
-      // public Dataset API — schema equality is the strongest public signal.
+      // even under reference equality (Array.empty): checkEmpty already
+      // proved both have length 0, so same-class empties are the same source
+      // type — the reference compares empty factories, not values
+      // (dag.py:448-453). [[HasSourceSchema]] wrappers (a DataFrame-carrying
+      // batch) additionally compare SCHEMAS: they share a runtime class for
+      // every schema, and silently reusing the node would surface as a
+      // distant analysis error instead of a build-site one.
       val compatible = (existingEmpty, newEmpty) match {
-        case (a: org.apache.spark.sql.Dataset[_], b: org.apache.spark.sql.Dataset[_]) =>
-          a.schema == b.schema
         case (a: HasSourceSchema, b: HasSourceSchema) =>
           a.getClass == b.getClass && a.sourceSchema == b.sourceSchema
         case (a, b) => a.getClass == b.getClass

@@ -13,6 +13,32 @@ import graft.ext.ExtraQueries._
   * helpers remain in [[Ext]] / [[ExtraQueries]] as `private[ext]`. */
 object GraphQueries {
 
+  /** Rounds 1..n of the label-propagation oracle ladder (`l0` seeds it;
+    * `sym` is the symmetric edge list): each node takes the most frequent
+    * neighbour label, ties to the smallest label. */
+  private def lpaRounds(n: Int): String = (1 to n).map { i =>
+    s"""n$i AS (
+       |  SELECT sym.b AS node, l${i - 1}.lab, COUNT(*) AS c
+       |  FROM l${i - 1} JOIN sym ON sym.a = l${i - 1}.node GROUP BY 1, 2),
+       |l$i AS (
+       |  SELECT node, lab FROM (
+       |    SELECT node, lab,
+       |      ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, lab) AS rn
+       |    FROM n$i) WHERE rn = 1)""".stripMargin
+  }.mkString(",\n")
+
+  /** Rounds 1..n of the k-truss (k = 3) oracle peel (`e0`/`s0` seed it):
+    * an edge survives a round while some triangle supports it. */
+  private def trussRounds(n: Int): String = (1 to n).map { i =>
+    s"""p$i AS MATERIALIZED (
+       |  SELECT e.a, e.b,
+       |    (SELECT COUNT(*) FROM s${i - 1} x JOIN s${i - 1} y ON x.b = y.b
+       |     WHERE x.a = e.a AND y.a = e.b) AS sup
+       |  FROM e${i - 1} e),
+       |e$i AS MATERIALIZED (SELECT a, b FROM p$i WHERE sup >= 1),
+       |s$i AS (SELECT a, b FROM e$i UNION ALL SELECT b, a FROM e$i)""".stripMargin
+  }.mkString(",\n")
+
   /** One-shot hop-4 Brandes betweenness over the FULL host graph from
     * the [[ExtraQueries.SeedHosts]] seeds — the shared oracle of q312
     * (batch) and q324 (maintained form ≡ this recompute, the q322/q323
@@ -412,21 +438,12 @@ object GraphQueries {
           .orderBy(col("node"))
       },
       Some({
-        val round = (i: Int) =>
-          s"""n$i AS (
-             |  SELECT sym.b AS node, l${i - 1}.lab, COUNT(*) AS c
-             |  FROM l${i - 1} JOIN sym ON sym.a = l${i - 1}.node GROUP BY 1, 2),
-             |l$i AS (
-             |  SELECT node, lab FROM (
-             |    SELECT node, lab,
-             |      ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, lab) AS rn
-             |    FROM n$i) WHERE rn = 1)""".stripMargin
         s"""WITH e AS (SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
            |           FROM lineitem a JOIN lineitem b
            |             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
            |sym AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
            |l0 AS (SELECT DISTINCT a AS node, a AS lab FROM sym),
-           |${(1 to 3).map(round).mkString(",\n")}
+           |${lpaRounds(3)}
            |SELECT node, lab AS label FROM l3 ORDER BY node""".stripMargin
       }),
     ),
@@ -891,15 +908,6 @@ object GraphQueries {
           .orderBy(col("node"))
       },
       Some({
-        val round = (i: Int) =>
-          s"""n$i AS (
-             |  SELECT sym.b AS node, l${i - 1}.lab, COUNT(*) AS c
-             |  FROM l${i - 1} JOIN sym ON sym.a = l${i - 1}.node GROUP BY 1, 2),
-             |l$i AS (
-             |  SELECT node, lab FROM (
-             |    SELECT node, lab,
-             |      ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, lab) AS rn
-             |    FROM n$i) WHERE rn = 1)""".stripMargin
         s"""WITH sh AS (
            |  SELECT doc_id, list_distinct([toks[i]||' '||toks[i+1]||' '||toks[i+2]
            |                                FOR i IN generate_series(1, len(toks)-2)]) AS s
@@ -912,7 +920,7 @@ object GraphQueries {
            |        /(len(a.s)+len(b.s)-len(list_intersect(a.s,b.s))) >= 0.5),
            |sym AS MATERIALIZED (SELECT a, b FROM e UNION SELECT b, a FROM e),
            |l0 AS (SELECT DISTINCT a AS node, a AS lab FROM sym),
-           |${(1 to 2).map(round).mkString(",\n")}
+           |${lpaRounds(2)}
            |SELECT node, lab AS label FROM l2 ORDER BY node""".stripMargin
       }),
     ),
@@ -1076,15 +1084,6 @@ object GraphQueries {
           .orderBy(col("label"))
       },
       Some({
-        val round = (i: Int) =>
-          s"""n$i AS (
-             |  SELECT sym.b AS node, l${i - 1}.lab, COUNT(*) AS c
-             |  FROM l${i - 1} JOIN sym ON sym.a = l${i - 1}.node GROUP BY 1, 2),
-             |l$i AS (
-             |  SELECT node, lab FROM (
-             |    SELECT node, lab,
-             |      ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, lab) AS rn
-             |    FROM n$i) WHERE rn = 1)""".stripMargin
         s"""WITH sh AS (
            |  SELECT doc_id, list_distinct([toks[i]||' '||toks[i+1]||' '||toks[i+2]
            |                                FOR i IN generate_series(1, len(toks)-2)]) AS s
@@ -1097,7 +1096,7 @@ object GraphQueries {
            |        /(len(a.s)+len(b.s)-len(list_intersect(a.s,b.s))) >= 0.5),
            |sym AS MATERIALIZED (SELECT a, b FROM e UNION SELECT b, a FROM e),
            |l0 AS (SELECT DISTINCT a AS node, a AS lab FROM sym),
-           |${(1 to 2).map(round).mkString(",\n")},
+           |${lpaRounds(2)},
            |mm AS (SELECT COUNT(*)::BIGINT AS m FROM e),
            |wl AS (
            |  SELECT la.lab AS la, lb.lab AS lb
@@ -1436,22 +1435,13 @@ object GraphQueries {
           .orderBy(col("label"))
       },
       Some({
-        val round = (i: Int) =>
-          s"""n$i AS (
-             |  SELECT sym.b AS node, l${i - 1}.lab, COUNT(*) AS c
-             |  FROM l${i - 1} JOIN sym ON sym.a = l${i - 1}.node GROUP BY 1, 2),
-             |l$i AS (
-             |  SELECT node, lab FROM (
-             |    SELECT node, lab,
-             |      ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, lab) AS rn
-             |    FROM n$i) WHERE rn = 1)""".stripMargin
         s"""WITH e AS MATERIALIZED (
            |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
            |  FROM lineitem a JOIN lineitem b
            |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
            |sym AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
            |l0 AS (SELECT DISTINCT a AS node, a AS lab FROM sym),
-           |${(1 to 2).map(round).mkString(",\n")},
+           |${lpaRounds(2)},
            |deg AS (SELECT a AS node, COUNT(*) AS deg FROM sym GROUP BY a),
            |m AS (SELECT COUNT(*) AS m FROM e),
            |bylab AS (
@@ -1657,15 +1647,6 @@ object GraphQueries {
           .orderBy(col("label"))
       },
       Some({
-        val round = (i: Int) =>
-          s"""n$i AS (
-             |  SELECT sym.b AS node, l${i - 1}.lab, COUNT(*) AS c
-             |  FROM l${i - 1} JOIN sym ON sym.a = l${i - 1}.node GROUP BY 1, 2),
-             |l$i AS (
-             |  SELECT node, lab FROM (
-             |    SELECT node, lab,
-             |      ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, lab) AS rn
-             |    FROM n$i) WHERE rn = 1)""".stripMargin
         s"""WITH sh AS (
            |  SELECT doc_id, list_distinct([toks[i]||' '||toks[i+1]||' '||toks[i+2]
            |                                FOR i IN generate_series(1, len(toks)-2)]) AS s
@@ -1678,7 +1659,7 @@ object GraphQueries {
            |        /(len(a.s)+len(b.s)-len(list_intersect(a.s,b.s))) >= 0.5),
            |sym AS MATERIALIZED (SELECT a, b FROM e UNION SELECT b, a FROM e),
            |l0 AS (SELECT DISTINCT a AS node, a AS lab FROM sym),
-           |${(1 to 2).map(round).mkString(",\n")},
+           |${lpaRounds(2)},
            |deg AS (SELECT a AS node, COUNT(*) AS deg FROM sym GROUP BY a),
            |m AS (SELECT COUNT(*) AS m FROM e),
            |bylab AS (
@@ -1720,22 +1701,13 @@ object GraphQueries {
           .orderBy(col("label"))
       },
       Some({
-        val round = (i: Int) =>
-          s"""n$i AS (
-             |  SELECT sym.b AS node, l${i - 1}.lab, COUNT(*) AS c
-             |  FROM l${i - 1} JOIN sym ON sym.a = l${i - 1}.node GROUP BY 1, 2),
-             |l$i AS (
-             |  SELECT node, lab FROM (
-             |    SELECT node, lab,
-             |      ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, lab) AS rn
-             |    FROM n$i) WHERE rn = 1)""".stripMargin
         s"""WITH e AS MATERIALIZED (
            |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
            |  FROM lineitem a JOIN lineitem b
            |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
            |sym AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
            |l0 AS (SELECT DISTINCT a AS node, a AS lab FROM sym),
-           |${(1 to 2).map(round).mkString(",\n")},
+           |${lpaRounds(2)},
            |deg AS (SELECT a AS node, COUNT(*) AS deg FROM sym GROUP BY a),
            |m AS (SELECT COUNT(*) AS m FROM e),
            |bylab AS (
@@ -1787,15 +1759,6 @@ object GraphQueries {
           .orderBy(col("label"))
       },
       Some({
-        val round = (i: Int) =>
-          s"""n$i AS (
-             |  SELECT sym.b AS node, l${i - 1}.lab, COUNT(*) AS c
-             |  FROM l${i - 1} JOIN sym ON sym.a = l${i - 1}.node GROUP BY 1, 2),
-             |l$i AS (
-             |  SELECT node, lab FROM (
-             |    SELECT node, lab,
-             |      ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, lab) AS rn
-             |    FROM n$i) WHERE rn = 1)""".stripMargin
         s"""WITH sh AS (
            |  SELECT doc_id, list_distinct([toks[i]||' '||toks[i+1]||' '||toks[i+2]
            |                                FOR i IN generate_series(1, len(toks)-2)]) AS s
@@ -1808,7 +1771,7 @@ object GraphQueries {
            |        /(len(a.s)+len(b.s)-len(list_intersect(a.s,b.s))) >= 0.5),
            |sym AS MATERIALIZED (SELECT a, b FROM e UNION SELECT b, a FROM e),
            |l0 AS (SELECT DISTINCT a AS node, a AS lab FROM sym),
-           |${(1 to 2).map(round).mkString(",\n")},
+           |${lpaRounds(2)},
            |deg AS (SELECT a AS node, COUNT(*) AS deg FROM sym GROUP BY a),
            |m AS (SELECT COUNT(*) AS m FROM e),
            |bylab AS (
@@ -1946,14 +1909,6 @@ object GraphQueries {
           .orderBy(col("a"), col("b"))
       },
       Some({
-        val round = (i: Int) =>
-          s"""p$i AS MATERIALIZED (
-             |  SELECT e.a, e.b,
-             |    (SELECT COUNT(*) FROM s${i - 1} x JOIN s${i - 1} y ON x.b = y.b
-             |     WHERE x.a = e.a AND y.a = e.b) AS sup
-             |  FROM e${i - 1} e),
-             |e$i AS MATERIALIZED (SELECT a, b FROM p$i WHERE sup >= 1),
-             |s$i AS (SELECT a, b FROM e$i UNION ALL SELECT b, a FROM e$i)""".stripMargin
         s"""WITH sh AS (
            |  SELECT doc_id, list_distinct([toks[i]||' '||toks[i+1]||' '||toks[i+2]
            |                                FOR i IN generate_series(1, len(toks)-2)]) AS s
@@ -1965,7 +1920,7 @@ object GraphQueries {
            |  WHERE CAST(len(list_intersect(a.s,b.s)) AS DOUBLE)
            |        /(len(a.s)+len(b.s)-len(list_intersect(a.s,b.s))) >= 0.5),
            |s0 AS (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
-           |${(1 to 2).map(round).mkString(",\n")}
+           |${trussRounds(2)}
            |SELECT e.a, e.b,
            |  (SELECT COUNT(*) FROM s2 x JOIN s2 y ON x.b = y.b
            |   WHERE x.a = e.a AND y.a = e.b)::BIGINT AS support
@@ -2007,14 +1962,6 @@ object GraphQueries {
           .orderBy(col("a"), col("b"))
       },
       Some({
-        val round = (i: Int) =>
-          s"""p$i AS MATERIALIZED (
-             |  SELECT e.a, e.b,
-             |    (SELECT COUNT(*) FROM s${i - 1} x JOIN s${i - 1} y ON x.b = y.b
-             |     WHERE x.a = e.a AND y.a = e.b) AS sup
-             |  FROM e${i - 1} e),
-             |e$i AS MATERIALIZED (SELECT a, b FROM p$i WHERE sup >= 1),
-             |s$i AS (SELECT a, b FROM e$i UNION ALL SELECT b, a FROM e$i)""".stripMargin
         s"""WITH sh AS (
            |  SELECT doc_id, list_distinct([toks[i]||' '||toks[i+1]||' '||toks[i+2]
            |                                FOR i IN generate_series(1, len(toks)-2)]) AS s
@@ -2026,7 +1973,7 @@ object GraphQueries {
            |  WHERE CAST(len(list_intersect(a.s,b.s)) AS DOUBLE)
            |        /(len(a.s)+len(b.s)-len(list_intersect(a.s,b.s))) >= 0.5),
            |s0 AS (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
-           |${(1 to 2).map(round).mkString(",\n")}
+           |${trussRounds(2)}
            |SELECT e.a, e.b,
            |  (SELECT COUNT(*) FROM s2 x JOIN s2 y ON x.b = y.b
            |   WHERE x.a = e.a AND y.a = e.b)::BIGINT AS support
@@ -2457,22 +2404,13 @@ object GraphQueries {
         Graphs.randIndex(lp(1), lp(2))
       },
       Some({
-        val round = (i: Int) =>
-          s"""n$i AS (
-             |  SELECT sym.b AS node, l${i - 1}.lab, COUNT(*) AS c
-             |  FROM l${i - 1} JOIN sym ON sym.a = l${i - 1}.node GROUP BY 1, 2),
-             |l$i AS (
-             |  SELECT node, lab FROM (
-             |    SELECT node, lab,
-             |      ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, lab) AS rn
-             |    FROM n$i) WHERE rn = 1)""".stripMargin
         s"""WITH e AS MATERIALIZED (
            |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
            |  FROM lineitem a JOIN lineitem b
            |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
            |sym AS (SELECT a, b FROM e UNION SELECT b, a FROM e),
            |l0 AS (SELECT DISTINCT a AS node, a AS lab FROM sym),
-           |${(1 to 3).map(round).mkString(",\n")},
+           |${lpaRounds(3)},
            |cont AS (
            |  SELECT l2.lab AS la, l3.lab AS lb, COUNT(*) AS nij
            |  FROM l2 JOIN l3 ON l2.node = l3.node GROUP BY 1, 2),

@@ -13,6 +13,30 @@ import graft.ext.ExtraQueries._
   * helpers remain in [[Ext]] / [[ExtraQueries]] as `private[ext]`. */
 object OpsQueries {
 
+  /** q140's one-shot SCD-2 compaction oracle; q160 (the same history
+    * maintained through dag cycles) checks against the same text. */
+  private[graft] val ScdIntervalsSql: String =
+    """WITH o AS (
+       |  SELECT user_id, event_type, epoch_ns(ts) AS ts, event_id,
+       |    CASE WHEN lag(event_type) OVER w IS NULL
+       |           OR lag(event_type) OVER w <> event_type
+       |         THEN 1 ELSE 0 END AS chg
+       |  FROM events
+       |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)),
+       |i AS (
+       |  SELECT *, SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
+       |                           ROWS UNBOUNDED PRECEDING) AS island
+       |  FROM o),
+       |r AS (
+       |  SELECT user_id, island, MIN(event_type) AS event_type,
+       |    MIN(ts) AS valid_from, COUNT(*) AS n_events
+       |  FROM i GROUP BY user_id, island)
+       |SELECT user_id, event_type, valid_from,
+       |  lead(valid_from) OVER (PARTITION BY user_id ORDER BY island) AS valid_to,
+       |  n_events,
+       |  lead(valid_from) OVER (PARTITION BY user_id ORDER BY island) IS NULL AS is_current
+       |FROM r ORDER BY user_id, valid_from""".stripMargin
+
   def queries: Seq[QueryDef] = Seq(
 
     // SCD-type-2 history build from the append-only event log: one row per
@@ -25,26 +49,7 @@ object OpsQueries {
       "q140_scd_intervals",
       (s, dir) => EventFunnel.scdIntervals(tbl(s, dir, "events"))
         .orderBy(col("user_id"), col("valid_from")),
-      Some("""WITH o AS (
-             |  SELECT user_id, event_type, epoch_ns(ts) AS ts, event_id,
-             |    CASE WHEN lag(event_type) OVER w IS NULL
-             |           OR lag(event_type) OVER w <> event_type
-             |         THEN 1 ELSE 0 END AS chg
-             |  FROM events
-             |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)),
-             |i AS (
-             |  SELECT *, SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |                           ROWS UNBOUNDED PRECEDING) AS island
-             |  FROM o),
-             |r AS (
-             |  SELECT user_id, island, MIN(event_type) AS event_type,
-             |    MIN(ts) AS valid_from, COUNT(*) AS n_events
-             |  FROM i GROUP BY user_id, island)
-             |SELECT user_id, event_type, valid_from,
-             |  lead(valid_from) OVER (PARTITION BY user_id ORDER BY island) AS valid_to,
-             |  n_events,
-             |  lead(valid_from) OVER (PARTITION BY user_id ORDER BY island) IS NULL AS is_current
-             |FROM r ORDER BY user_id, valid_from""".stripMargin),
+      Some(ScdIntervalsSql),
     ),
 
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Dag
@@ -15,56 +15,55 @@ import QueryDef.tbl
   * pins the engine's incremental semantics to the batch ground truth. */
 object DagQueries {
 
+  /** Runs `df` through a one-fold dag — one source, one
+    * [[TableOps.foldState]] node, one sink — feeding one cycle per slice
+    * predicate, in order, and returns the final held table. A slice goes in
+    * with count 1: a non-empty mark that costs no Spark job (an empty slice
+    * folds in as a no-op merge). */
+  private def foldCycles(df: DataFrame, slices: Seq[Column], name: String)(
+      seed: DataFrame => DataFrame)(merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val dag = new Dag
+    val source = dag.sourceStream(SparkBatch(df.sparkSession.emptyDataFrame, 0), name = name)
+    val state = TableOps.foldState(dag, source)(seed)(merge)
+    dag.sink(name, state)
+    for (p <- slices) { source.setStream(SparkBatch(df.where(p), 1)); dag.execute() }
+    state.getValue
+  }
+
+  /** `n` slices by `key mod n`. */
+  private def modSlices(key: String, n: Int): Seq[Column] =
+    (0 until n).map(k => pmod(col(key), lit(n)) === k)
+
+  /** `n` equal-width ranges of the long `key` over its actual [min, max]
+    * (one scalar aggregate — two longs to the driver — so data outside any
+    * assumed span is still covered), in ASCENDING order: `dagCuration`'s
+    * greedy-equals-global argument relies on it. */
+  private def rangeSlices(df: DataFrame, key: Column, n: Int): Seq[Column] = {
+    val bounds = df.agg(min(key), max(key)).head()
+    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val width = math.max(1L, (hi - lo) / n + 1)
+    (0 until n).map(k => key >= lo + k * width && key < lo + (k + 1) * width)
+  }
+
   /** Incremental word count (the reference's flagship streaming example)
     * fed through dag cycles; final accumulated state must equal the global
     * batch word count. */
   private def dagWordCount(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val docs = tbl(s, dir, "documents")
-    val dag = new Dag
-    val source = dag.sourceStream(SparkBatch(s.emptyDataFrame, 0), name = "docs")
-    var countsDf: DataFrame = null
-    val state = dag.state(source) { b: SparkBatch =>
-      val batchCounts = b.df.select(explode(split(col("text"), " ")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("cnt"))
-      countsDf =
-        if (countsDf == null) batchCounts
-        else countsDf.unionByName(batchCounts)
-          .groupBy("word").agg(sum("cnt").as("cnt"))
-      // checkpoint the lineage so state doesn't grow a union chain per cycle
-      countsDf = countsDf.localCheckpoint(eager = true)
-      countsDf
-    }
-    dag.sink("counts", state)
-
-    val batches = 5
-    for (k <- 0 until batches) {
-      source.setStream(SparkBatch(docs.where(pmod(col("doc_id"), lit(batches)) === k), 1))
-      dag.execute()
-    }
-    state.getValue.select(col("word"), col("cnt").cast("long").as("cnt")).orderBy("word")
+    val counts = (df: DataFrame) => df.select(explode(split(col("text"), " ")).as("word"))
+      .groupBy("word").agg(count(lit(1)).as("cnt"))
+    foldCycles(docs, modSlices("doc_id", 5), "counts")(counts) { (held, df) =>
+      held.unionByName(counts(df)).groupBy("word").agg(sum("cnt").as("cnt"))
+    }.select(col("word"), col("cnt").cast("long").as("cnt")).orderBy("word")
   }
 
   /** Last-by-key upsert state fed through dag cycles (W4 as an incremental
     * pipeline); final state must equal the batch latest-row-per-key. */
   private def dagLastBy(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val events = tbl(s, dir, "events")
-    val dag = new Dag
-    val source = dag.sourceStream(SparkBatch(s.emptyDataFrame, 0), name = "events")
-    var stateDf: DataFrame = null
-    val state = dag.state(source) { b: SparkBatch =>
-      val all = if (stateDf == null) b.df else stateDf.unionByName(b.df)
-      stateDf = TableOps.lastByKeys(all, Seq("user_id"), Seq("ts", "event_id"))
-        .localCheckpoint(eager = true)
-      stateDf
-    }
-    dag.sink("latest", state)
-
-    val batches = 4
-    for (k <- 0 until batches) {
-      source.setStream(SparkBatch(events.where(pmod(col("event_id"), lit(batches)) === k), 1))
-      dag.execute()
-    }
-    state.getValue
+    val last = (df: DataFrame) => TableOps.lastByKeys(df, Seq("user_id"), Seq("ts", "event_id"))
+    foldCycles(events, modSlices("event_id", 4), "latest")(last)(
+      (held, df) => last(held.unionByName(df)))
       .select(col("user_id"), col("event_id").as("last_event_id"), col("event_type"), col("value"))
       .orderBy("user_id")
   }
@@ -103,6 +102,8 @@ object DagQueries {
 
     val dag = new Dag
     val source = dag.sourceStream(SparkBatch(s.emptyDataFrame, 0), name = "events")
+    // Not a TableOps.foldState node: the emissions join the held state as of
+    // BEFORE this cycle's upsert, which a downstream node could not read.
     var stateDf: DataFrame = null // (user_id, held) — last hourly value per user
     var emittedDf: DataFrame = null // accumulated (user_id, bucket_end, value)
     val state = dag.state(source) { b: SparkBatch =>
@@ -161,33 +162,16 @@ object DagQueries {
   private def dagCuration(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import graft.ext.TextAnalysis
     val docs = tbl(s, dir, "documents")
-    val dag = new Dag
-    val source = dag.sourceStream(SparkBatch(s.emptyDataFrame, 0), name = "docs")
-    var stateDf: DataFrame = null // (fp, doc_id) kept survivors
-    val state = dag.state(source) { b: SparkBatch =>
-      val passed = b.df
-        .where(TextAnalysis.stopwordRatio(col("text")) >= 0.05 &&
-          TextAnalysis.qualityScore(col("text"), TextAnalysis.tokenCount(col("text"))) >= 0.5)
-        .select(md5(col("text")).as("fp"), col("doc_id"))
-      val batchKept = passed.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-      val newKept =
-        if (stateDf == null) batchKept
-        else batchKept.join(stateDf.select(col("fp")), Seq("fp"), "left_anti")
-      stateDf = (if (stateDf == null) newKept else stateDf.unionByName(newKept))
-        .localCheckpoint(eager = true)
-      stateDf
-    }
-    dag.sink("kept", state)
-
-    val batches = 5
-    val maxId = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    val span = maxId / batches + 1
-    for (k <- 0 until batches) { // ascending ranges: greedy == global min-id
-      source.setStream(SparkBatch(
-        docs.where(col("doc_id") >= k * span && col("doc_id") < (k + 1) * span), 1))
-      dag.execute()
-    }
-    state.getValue.select(col("doc_id"), col("fp")).orderBy(col("doc_id"))
+    // (fp, doc_id): the batch's survivors, min doc_id per text fingerprint
+    val batchKept = (df: DataFrame) => df
+      .where(TextAnalysis.stopwordRatio(col("text")) >= 0.05 &&
+        TextAnalysis.qualityScore(col("text"), TextAnalysis.tokenCount(col("text"))) >= 0.5)
+      .select(md5(col("text")).as("fp"), col("doc_id"))
+      .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
+    // ascending ranges: greedy == global min-id
+    foldCycles(docs, rangeSlices(docs, col("doc_id"), 5), "kept")(batchKept) { (held, df) =>
+      held.unionByName(batchKept(df).join(held.select(col("fp")), Seq("fp"), "left_anti"))
+    }.select(col("doc_id"), col("fp")).orderBy(col("doc_id"))
   }
 
   /** SCD-2 history build as INCREMENTAL view maintenance through dag
@@ -196,34 +180,15 @@ object DagQueries {
     * interval state ([[graft.ext.EventFunnel.mergeScdIntervals]] — the
     * streaming twin's transition as DataFrame joins). Four 180-hour
     * slices cover the corpus; the final state must equal the one-shot
-    * batch compaction (q140's oracle re-used verbatim). Per-cycle cost is
+    * batch compaction (q140's oracle shared). Per-cycle cost is
     * slice-sized + an open-runs join — never the accumulated history. */
   private def dagScd(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
+    import graft.ext.EventFunnel.{mergeScdIntervals, scdIntervals}
     val events = tbl(s, dir, "events")
-    val dag = new Dag
-    val source = dag.sourceStream(SparkBatch(s.emptyDataFrame, 0), name = "events")
-    var stateDf: DataFrame = null
-    val state = dag.state(source) { b: SparkBatch =>
-      val sliceRuns = graft.ext.EventFunnel.scdIntervals(b.df)
-      stateDf = (if (stateDf == null) sliceRuns
-        else graft.ext.EventFunnel.mergeScdIntervals(stateDf, sliceRuns))
-        .localCheckpoint(eager = true)
-      stateDf
-    }
-    dag.sink("history", state)
     val hr = expr("(ts - 1704067200000000000L) div 3600000000000L")
-    // derive the 4 slice bounds from the actual hour span (scalar min/max
-    // agg — two longs to the driver) so a corpus outside [0, 720h) is
-    // still fully covered instead of silently excluded
-    val bounds = events.agg(min(hr).as("lo"), max(hr).as("hi")).head
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val width = math.max(1L, (hi - lo) / 4 + 1)
-    for (k <- 0 until 4) {
-      source.setStream(SparkBatch(
-        events.where(hr >= lo + k * width && hr < lo + (k + 1) * width), 1))
-      dag.execute()
-    }
-    state.getValue.orderBy(col("user_id"), col("valid_from"))
+    foldCycles(events, rangeSlices(events, hr, 4), "history")(scdIntervals)(
+      (held, df) => mergeScdIntervals(held, scdIntervals(df)))
+      .orderBy(col("user_id"), col("valid_from"))
   }
 
   /** Incremental dataset card (q214's shape minus the dup column, which
@@ -235,33 +200,17 @@ object DagQueries {
     * counters only. Must be bit-identical to the one-shot card. */
   private def dagCard(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val docs = tbl(s, dir, "documents")
-    val dag = new Dag
-    val source = dag.sourceStream(SparkBatch(s.emptyDataFrame, 0), name = "docs")
-    var counters: DataFrame = null // (source, lang, n_docs, n_tokens, n_chars)
-    val state = dag.state(source) { b: SparkBatch =>
-      val slice = b.df.groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"),
-          sum(col("n_chars")).as("n_chars"))
-      counters = (if (counters == null) slice
-        else counters.unionByName(slice)
-          .groupBy(col("source"), col("lang"))
-          .agg(sum(col("n_docs")).as("n_docs"),
-            sum(col("n_tokens")).as("n_tokens"), sum(col("n_chars")).as("n_chars")))
-        .localCheckpoint(eager = true)
-      counters
+    // (source, lang, n_docs, n_tokens, n_chars)
+    val counters = (df: DataFrame) => df.groupBy(col("source"), col("lang"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"),
+        sum(col("n_chars")).as("n_chars"))
+    val c = foldCycles(docs, rangeSlices(docs, col("doc_id"), 4), "card")(counters) {
+      (held, df) => held.unionByName(counters(df))
+        .groupBy(col("source"), col("lang"))
+        .agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("n_tokens")).as("n_tokens"), sum(col("n_chars")).as("n_chars"))
     }
-    dag.sink("card", state)
-    val bounds = docs.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi")).head
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val width = math.max(1L, (hi - lo) / 4 + 1)
-    for (k <- 0 until 4) {
-      source.setStream(SparkBatch(
-        docs.where(col("doc_id") >= lo + k * width &&
-          col("doc_id") < lo + (k + 1) * width), 1))
-      dag.execute()
-    }
-    val c = state.getValue
     val base = c.groupBy(col("source"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
         sum(col("n_chars")).as("n_chars"), count(lit(1)).as("n_langs"),
@@ -283,37 +232,21 @@ object DagQueries {
     * one-shot batch derivation. */
   private def dagAaTest(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val ev = tbl(s, dir, "events")
-    val dag = new Dag
-    val source = dag.sourceStream(SparkBatch(s.emptyDataFrame, 0), name = "events")
-    var counters: DataFrame = null // (day, n1, c1, n2, c2)
-    val state = dag.state(source) { b: SparkBatch =>
-      val slice = b.df
-        .select(expr("ts div 86400000000000").as("day"),
-          pmod(graft.ext.Sampling.portableHash(col("user_id")), lit(2)).as("arm"),
-          (col("event_type") === "purchase").cast("long").as("conv"))
-        .groupBy("day")
-        .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n1"),
-          sum(when(col("arm") === 0, col("conv")).otherwise(0L)).as("c1"),
-          sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n2"),
-          sum(when(col("arm") === 1, col("conv")).otherwise(0L)).as("c2"))
-      counters = (if (counters == null) slice
-        else counters.unionByName(slice).groupBy("day")
-          .agg(sum("n1").as("n1"), sum("c1").as("c1"),
-            sum("n2").as("n2"), sum("c2").as("c2")))
-        .localCheckpoint(eager = true)
-      counters
+    // (day, n1, c1, n2, c2)
+    val counters = (df: DataFrame) => df
+      .select(expr("ts div 86400000000000").as("day"),
+        pmod(graft.ext.Sampling.portableHash(col("user_id")), lit(2)).as("arm"),
+        (col("event_type") === "purchase").cast("long").as("conv"))
+      .groupBy("day")
+      .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n1"),
+        sum(when(col("arm") === 0, col("conv")).otherwise(0L)).as("c1"),
+        sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n2"),
+        sum(when(col("arm") === 1, col("conv")).otherwise(0L)).as("c2"))
+    val c = foldCycles(ev, rangeSlices(ev, col("event_id"), 4), "aa")(counters) {
+      (held, df) => held.unionByName(counters(df)).groupBy("day")
+        .agg(sum("n1").as("n1"), sum("c1").as("c1"), sum("n2").as("n2"), sum("c2").as("c2"))
     }
-    dag.sink("aa", state)
-    val bounds = ev.agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi")).head
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val width = math.max(1L, (hi - lo) / 4 + 1)
-    for (k <- 0 until 4) {
-      source.setStream(SparkBatch(
-        ev.where(col("event_id") >= lo + k * width &&
-          col("event_id") < lo + (k + 1) * width), 1))
-      dag.execute()
-    }
-    graft.ext.Evaluation.withZ2Ppm(state.getValue).orderBy(col("day"))
+    graft.ext.Evaluation.withZ2Ppm(c).orderBy(col("day"))
   }
 
   val all: Seq[QueryDef] = Seq(
@@ -387,28 +320,9 @@ object DagQueries {
     QueryDef(
       "q160_dag_scd",
       dagScd,
-      // q140's one-shot oracle verbatim: the incremental merge must be
+      // q140's one-shot oracle: the incremental merge must be
       // indistinguishable from recompacting all history
-      Some("""WITH o AS (
-             |  SELECT user_id, event_type, epoch_ns(ts) AS ts, event_id,
-             |    CASE WHEN lag(event_type) OVER w IS NULL
-             |           OR lag(event_type) OVER w <> event_type
-             |         THEN 1 ELSE 0 END AS chg
-             |  FROM events
-             |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)),
-             |i AS (
-             |  SELECT *, SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |                           ROWS UNBOUNDED PRECEDING) AS island
-             |  FROM o),
-             |r AS (
-             |  SELECT user_id, island, MIN(event_type) AS event_type,
-             |    MIN(ts) AS valid_from, COUNT(*) AS n_events
-             |  FROM i GROUP BY user_id, island)
-             |SELECT user_id, event_type, valid_from,
-             |  lead(valid_from) OVER (PARTITION BY user_id ORDER BY island) AS valid_to,
-             |  n_events,
-             |  lead(valid_from) OVER (PARTITION BY user_id ORDER BY island) IS NULL AS is_current
-             |FROM r ORDER BY user_id, valid_from""".stripMargin),
+      Some(graft.ext.OpsQueries.ScdIntervalsSql),
     ),
     QueryDef(
       "q88_dag_curation",

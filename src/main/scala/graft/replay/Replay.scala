@@ -158,6 +158,7 @@ final class ReplayDriver private[replay] (
       records += (value match {
         case i: Iterable[_] => i.size.toLong
         case a: Array[_] => a.length.toLong
+        case b: SparkBatch => b.count
         case _ => 1L
       })
       bs.sink.append(currentTime, value)
@@ -192,36 +193,43 @@ final class ListDataSink[T] extends DataSink[T] {
 }
 
 /** Stitch consecutive `DataSource`s (e.g. one file per day) into one
-  * (reference `IteratorDataSourceAdapter`, `beavers/replay.py:324-371`). */
+  * (reference `IteratorDataSourceAdapter`, `beavers/replay.py:324-371`).
+  * A batch's length is the sum of what the inner sources that produced it
+  * report, so lazy batches ([[SparkBatch]]) keep the "0 iff empty" rule of
+  * [[DataSource.length]]. */
 final class IteratorDataSourceAdapter[T](
     sources: Iterator[DataSource[T]],
     empty: T,
     concatenator: (T, T) => T,
 ) extends DataSource[T] {
   private var current: Option[DataSource[T]] = advance()
+  private var lastLength = 0
 
   private def advance(): Option[DataSource[T]] =
     if (sources.hasNext) Some(sources.next()) else None
 
   override def readTo(timestamp: Nanos): T = current match {
-    case None => empty
+    case None => lastLength = 0; empty
     case Some(src) =>
       var batch = src.readTo(timestamp)
+      var n = src.length(batch)
       while (current.isDefined && current.get.getNext == Time.UtcMax) {
         current = advance()
-        val nextBatch = current.map(_.readTo(timestamp)).getOrElse(empty)
-        if (length(nextBatch) > 0 && length(batch) > 0)
-          batch = concatenator(batch, nextBatch)
-        else if (length(nextBatch) > 0) batch = nextBatch
+        for (next <- current) {
+          val nextBatch = next.readTo(timestamp)
+          val m = next.length(nextBatch)
+          if (m > 0) {
+            batch = if (n > 0) concatenator(batch, nextBatch) else nextBatch
+            n += m
+          }
+        }
       }
+      lastLength = n
       batch
   }
 
   override def getNext: Nanos = current.map(_.getNext).getOrElse(Time.UtcMax)
 
-  override def length(data: T): Int = data match {
-    case i: Iterable[_] => i.size
-    case a: Array[_] => a.length
-    case _ => 1
-  }
+  /** Length of the batch the last [[readTo]] returned. */
+  override def length(data: T): Int = lastLength
 }

@@ -13,15 +13,17 @@ import graft.core.Time.Nanos
   *
   * Scale design: `readTo` returns a LAZY DataFrame slice — the timestamp
   * predicate lands on the parquet scan (min/max row-group pruning), nothing
-  * is collected. The cursor/`getNext` bookkeeping runs off a one-time read
+  * is collected — as a [[SparkBatch]] carrying the slice's exact row count.
+  * The cursor/`getNext` bookkeeping and that count run off a one-time read
   * of the (tiny) timestamp column only — at cluster scale this would come
-  * from parquet footer statistics instead; the protocol is unchanged.
+  * from parquet footer statistics instead ([[V2ReplaySource]]); the
+  * protocol is unchanged.
   */
 final class SparkTableDataSource(
     df: DataFrame,
     tsCol: String,
     tsToNanos: org.apache.spark.sql.Column => org.apache.spark.sql.Column = identity,
-) extends DataSource[DataFrame] {
+) extends DataSource[SparkBatch] {
 
   // One job, single long column: the sorted event-time index.
   private val timestamps: Array[Long] =
@@ -29,23 +31,21 @@ final class SparkTableDataSource(
       .collect().map(_.getLong(0))
   private var pos = 0
   private var prevTs: Nanos = Long.MinValue
-  private var lastCount = 0
 
-  override def readTo(timestamp: Nanos): DataFrame = {
+  /** The count comes from the index — no Spark job per cycle. */
+  override def readTo(timestamp: Nanos): SparkBatch = {
     val from = prevTs
     val start = pos
     while (pos < timestamps.length && timestamps(pos) <= timestamp) pos += 1
-    lastCount = pos - start
     prevTs = timestamp
-    df.where(tsToNanos(col(tsCol)).cast("long") > from &&
-      tsToNanos(col(tsCol)).cast("long") <= timestamp)
+    SparkBatch(df.where(tsToNanos(col(tsCol)).cast("long") > from &&
+      tsToNanos(col(tsCol)).cast("long") <= timestamp), (pos - start).toLong)
   }
 
   override def getNext: Nanos =
     if (pos >= timestamps.length) Time.UtcMax else timestamps(pos)
 
-  /** Count comes from the index — no Spark job per cycle. */
-  override def length(data: DataFrame): Int = lastCount
+  override def length(data: SparkBatch): Int = data.length
 }
 
 object SparkTableDataSource {
@@ -66,27 +66,19 @@ object SparkTableDataSource {
 
 /** A replayed micro-batch: a lazy DataFrame slice plus its known row count,
   * so dag emptiness checks (`HasLength`) never trigger a Spark job. This is
-  * the recommended value type for DataFrame-carrying dag streams.
+  * the one value type for DataFrame-carrying dag streams: `graft.core` has
+  * no `HasLength` for a raw `Dataset`, so such a stream does not compile.
   * Exposes the wrapped schema so duplicate source-name registration can
   * compare structure at build time (every SparkBatch shares one runtime
   * class regardless of schema). */
 final case class SparkBatch(df: DataFrame, count: Long) extends graft.core.HasSourceSchema {
   override def sourceSchema: Any = df.schema
+  /** `count` clamped to `Int` (the `HasLength`/`DataSource.length` width). */
+  def length: Int = math.min(count, Int.MaxValue).toInt
 }
 
 object SparkBatch {
-  implicit val hasLength: graft.core.HasLength[SparkBatch] =
-    (b: SparkBatch) => math.min(b.count, Int.MaxValue).toInt
-}
-
-/** [[SparkTableDataSource]] wrapped to emit [[SparkBatch]] values. */
-final class SparkBatchDataSource(inner: SparkTableDataSource) extends DataSource[SparkBatch] {
-  override def readTo(timestamp: Nanos): SparkBatch = {
-    val df = inner.readTo(timestamp)
-    SparkBatch(df, inner.length(df).toLong)
-  }
-  override def getNext: Nanos = inner.getNext
-  override def length(data: SparkBatch): Int = math.min(data.count, Int.MaxValue).toInt
+  implicit val hasLength: graft.core.HasLength[SparkBatch] = (b: SparkBatch) => b.length
 }
 
 /** Buffers per-cycle DataFrame batches, concatenates and saves on close

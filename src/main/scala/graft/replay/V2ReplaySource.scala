@@ -67,6 +67,5 @@ final class V2ReplaySource(
     else remaining.iterator.map(g => math.max(g.tsMin.getOrElse(Long.MinValue), prevTs + 1)).min
   }
 
-  override def length(data: SparkBatch): Int =
-    math.min(data.count, Int.MaxValue).toInt
+  override def length(data: SparkBatch): Int = data.length
 }

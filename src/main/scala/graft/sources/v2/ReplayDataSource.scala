@@ -302,8 +302,7 @@ final class ReplayTable(path: String, tsCol: String,
 final class ReplayScanBuilder(path: String, tsCol: String, fullSchema: StructType,
     vectorized: Boolean = true)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
-    with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
+    with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
   private var required: StructType = fullSchema
   private var accepted: Array[Filter] = Array.empty
@@ -373,18 +372,6 @@ final class ReplayScanBuilder(path: String, tsCol: String, fullSchema: StructTyp
       : Boolean =
     if (canPushAgg(agg)) { pushedAgg = Some(agg); true } else false
 
-  // ---- limit pushdown: stop planning row groups once the limit is met ----
-  //
-  // LIMIT n is satisfied by ANY n rows, and footer row counts are exact,
-  // so the scan can plan only a PREFIX of row groups whose counts reach n
-  // — a `df.limit(5)` peek at a 100 TB log touches one row group instead
-  // of scheduling every partition (Spark still applies its own
-  // LocalLimit on top, so over-delivery within the last group is fine).
-  // Returning false (partial push) keeps Spark's limit exec in place.
-  private var limit: Option[Int] = None
-
-  override def pushLimit(n: Int): Boolean = { limit = Some(n); false }
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     accepted = filters.flatMap(collectBounds)
     filters // all residual: Spark re-applies every predicate row-wise
@@ -418,7 +405,7 @@ final class ReplayScanBuilder(path: String, tsCol: String, fullSchema: StructTyp
     case Some(agg) => new ReplayAggScan(path, tsCol, agg)
     case None =>
       new ReplayScan(path, tsCol, required, lower, upper, accepted.length,
-        vectorized, limit)
+        vectorized)
   }
 }
 
@@ -482,15 +469,14 @@ final class AggResultReaderFactory extends PartitionReaderFactory {
 }
 
 final class ReplayScan(path: String, tsCol: String, required: StructType,
-    lower: Long, upper: Long, nPushed: Int, vectorized: Boolean = true,
-    limit: Option[Int] = None)
+    lower: Long, upper: Long, nPushed: Int, vectorized: Boolean = true)
     extends Scan with Batch with SupportsReportStatistics {
 
   // one index snapshot per plan: pruning and the reader factory agree
   private lazy val idx = ReplayDataSource.index(path, tsCol)
 
-  private lazy val pruned: Array[ReplayDataSource.RowGroupMeta] = {
-    val inRange = idx.groups.filter { g =>
+  private lazy val pruned: Array[ReplayDataSource.RowGroupMeta] =
+    idx.groups.filter { g =>
       // keep a group unless its stats PROVE it lies outside (lower, upper];
       // groups without stats are always kept
       (g.tsMax, g.tsMin) match {
@@ -498,27 +484,12 @@ final class ReplayScan(path: String, tsCol: String, required: StructType,
         case _ => true
       }
     }
-    limit match {
-      // a prefix of groups reaching `n` footer rows satisfies LIMIT n —
-      // but only when no filter can reject rows inside a kept group
-      // (any pushed ts bound keeps the full surviving-group set: residual
-      // filtering could otherwise starve the limit)
-      case Some(n) if lower == Long.MinValue && upper == Long.MaxValue &&
-          nPushed == 0 =>
-        var acc = 0L
-        val take = inRange.segmentLength { g =>
-          val need = acc < n; acc += g.rows; need
-        }
-        inRange.take(math.max(take, 1))
-      case _ => inRange
-    }
-  }
 
   override def readSchema(): StructType = required
 
   override def description(): String =
     s"graft-replay $path tsRange=($lower,$upper] pushed=$nPushed " +
-      s"rowGroups=${pruned.length}" + limit.map(n => s" limit=$n").getOrElse("")
+      s"rowGroups=${pruned.length}"
 
   override def toBatch: Batch = this
 

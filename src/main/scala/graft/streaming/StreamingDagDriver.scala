@@ -47,16 +47,3 @@ final class StreamingDagDriver(
       .foreachBatch((df: DataFrame, id: Long) => onBatch(df, id)))
       .start()
 }
-
-object StreamingDagDriver {
-  /** Clock from the max value of an event-time long-nanos column, falling
-    * back to the previous cycle's time on empty batches. */
-  def eventTimeClock(tsCol: String): (DataFrame, Long) => Time.Nanos = {
-    var last: Time.Nanos = Time.UtcEpoch
-    (df, _) => {
-      val m = df.agg(org.apache.spark.sql.functions.max(tsCol)).head()
-      if (!m.isNullAt(0)) last = m.getLong(0)
-      last
-    }
-  }
-}

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.{Dag, Node, StateUnchanged}
+import graft.replay.SparkBatch
+
 /** The typed-table convenience layer: Spark-first re-expression of the
   * reference's Arrow/Polars wrappers (W1-W9 in SURVEY.md §2.2;
   * reference `beavers/pyarrow_wrapper.py`, `beavers/polars_wrapper.py`).
@@ -38,6 +41,36 @@ object TableOps {
     df.groupBy(keys.map(col).toIndexedSeq: _*)
       .agg(max_by(payload, ord).as("_last"))
       .select(df.columns.map(c => col(s"_last.$c")).toIndexedSeq: _*)
+  }
+
+  /** THE DataFrame state node: a table held across dag cycles, folded from
+    * a [[SparkBatch]] stream. On the first non-empty batch the held table is
+    * `seed(batch)`; on each later one it is `merge(held, batch)`. Every
+    * cycle that folds ends in one eager `localCheckpoint`, so the held
+    * table's lineage stays one level deep however many cycles run — the
+    * checkpoint cadence of every DataFrame state node is decided here.
+    * Empty batches leave the node unchanged (a state node also runs on the
+    * dag's first cycle, when its source may hold no batch yet).
+    *
+    * W4 (reference `last_by_keys`/`_LastByKey`,
+    * `beavers/pyarrow_wrapper.py:82-91,127-133`) is `foldState` over
+    * `lastByKeys(prev ∪ batch)`:
+    * {{{
+    * val last = (df: DataFrame) => lastByKeys(df, keys, ordering)
+    * foldState(dag, batches)(last)((held, df) => last(held.unionByName(df)))
+    * }}}
+    */
+  def foldState(dag: Dag, input: Node[SparkBatch])(seed: DataFrame => DataFrame)(
+      merge: (DataFrame, DataFrame) => DataFrame): Node[DataFrame] = {
+    var held: Option[DataFrame] = None
+    dag.stateAdv(input) { b: SparkBatch =>
+      if (b.count == 0) StateUnchanged
+      else {
+        val next = held.fold(seed(b.df))(merge(_, b.df)).localCheckpoint(eager = true)
+        held = Some(next)
+        next
+      }
+    }
   }
 
   /** Skew-resistant [[lastByKeys]]: two-stage aggregation over a salted key.

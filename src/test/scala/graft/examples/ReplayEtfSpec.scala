@@ -45,9 +45,9 @@ class ReplayEtfSpec extends AnyFunSuite {
         "timestamp TIMESTAMP, ticker STRING, price DOUBLE", "timestamp")
       new DataSource[List[PriceRecord]] {
         override def readTo(t: Nanos): List[PriceRecord] = {
-          val df = inner.readTo(t)
-          if (inner.length(df) == 0) Nil
-          else df.select("timestamp", "ticker", "price")
+          val b = inner.readTo(t)
+          if (b.count == 0) Nil
+          else b.df.select("timestamp", "ticker", "price")
             .as[(java.sql.Timestamp, String, Double)].collect()
             .map { case (tt, tk, p) => PriceRecord(Time.fromMillis(tt.getTime), tk, Some(p)) }
             .toList

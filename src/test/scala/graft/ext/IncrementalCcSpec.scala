@@ -58,13 +58,8 @@ class IncrementalCcSpec extends AnyFunSuite {
       .filter(e => e._1 != e._2).distinct
     val dag = new Dag
     val source = dag.sourceStream(SparkBatch(spark.emptyDataFrame, 0), name = "edges")
-    var stateDf: DataFrame = null
-    val state = dag.state(source) { b: SparkBatch =>
-      stateDf = (if (stateDf == null) Dedup.connectedComponents(b.df)
-        else Dedup.incrementalConnectedComponents(stateDf, b.df))
-        .localCheckpoint(eager = true)
-      stateDf
-    }
+    val state = graft.tables.TableOps.foldState(dag, source)(Dedup.connectedComponents)(
+      Dedup.incrementalConnectedComponents)
     dag.sink("roots", state)
     for (w <- all.grouped(50)) {
       source.setStream(SparkBatch(w.toDF("a_id", "b_id"), 1))

@@ -123,18 +123,20 @@ class IncrementalHitsSpec extends AnyFunSuite {
     val dag = new Dag
     val source = dag.sourceStream(SparkBatch(spark.emptyDataFrame, 0), name = "edges")
     var edgesSoFar: Seq[(Long, Long)] = Nil
-    var rankDf: DataFrame = null
     var trace: Seq[Graphs.HitsMax] = Nil
-    val state = dag.state(source) { b: SparkBatch =>
-      val wave = b.df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val (df, tr) =
-        if (rankDf == null) Graphs.integerHitsTrace(wave.toDF("src", "dst"), R)
-        else Graphs.incrementalHitsTrace(rankDf, trace,
-          edgesSoFar.toDF("src", "dst"), wave.toDF("src", "dst"), R)
-      rankDf = df.localCheckpoint(eager = true)
+    def pairs(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val state = graft.tables.TableOps.foldState(dag, source) { df =>
+      edgesSoFar = pairs(df)
+      val (ranks, tr) = Graphs.integerHitsTrace(edgesSoFar.toDF("src", "dst"), R)
+      trace = tr
+      ranks
+    } { (held, df) =>
+      val wave = pairs(df)
+      val (ranks, tr) = Graphs.incrementalHitsTrace(held, trace,
+        edgesSoFar.toDF("src", "dst"), wave.toDF("src", "dst"), R)
       trace = tr
       edgesSoFar = edgesSoFar ++ wave
-      rankDf
+      ranks
     }
     dag.sink("hits", state)
     for (w <- waves) {

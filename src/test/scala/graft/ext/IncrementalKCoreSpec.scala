@@ -102,15 +102,15 @@ class IncrementalKCoreSpec extends AnyFunSuite {
     val dag = new Dag
     val source = dag.sourceStream(SparkBatch(spark.emptyDataFrame, 0), name = "edges")
     var pairsSoFar: Seq[(Long, Long)] = Nil
-    var survDf: DataFrame = null
-    val state = dag.state(source) { b: SparkBatch =>
-      val wave = b.df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      survDf = (if (survDf == null) Graphs.kCorePeelEdges(wave.toDF("a", "b"), K, R)
-        else Graphs.incrementalKCorePeelEdges(survDf, pairsSoFar.toDF("a", "b"),
-          wave.toDF("a", "b"), K, R))
-        .localCheckpoint(eager = true)
+    def pairs(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val state = graft.tables.TableOps.foldState(dag, source) { df =>
+      pairsSoFar = pairs(df)
+      Graphs.kCorePeelEdges(pairsSoFar.toDF("a", "b"), K, R)
+    } { (held, df) =>
+      val wave = pairs(df)
+      val before = pairsSoFar.toDF("a", "b")
       pairsSoFar = pairsSoFar ++ wave
-      survDf
+      Graphs.incrementalKCorePeelEdges(held, before, wave.toDF("a", "b"), K, R)
     }
     dag.sink("kcore", state)
     for (w <- waves) {

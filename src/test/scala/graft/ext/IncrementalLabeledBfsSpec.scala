@@ -105,16 +105,15 @@ class IncrementalLabeledBfsSpec extends AnyFunSuite {
     val dag = new Dag
     val source = dag.sourceStream(SparkBatch(spark.emptyDataFrame, 0), name = "edges")
     var edgesSoFar: Seq[(Long, Long)] = Nil
-    var distDf: DataFrame = null
-    val state = dag.state(source) { b: SparkBatch =>
-      val wave = b.df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      distDf = (if (distDf == null)
-          Graphs.labeledBfs(wave.toDF("src", "dst"), seeds.toDF("seed"), 4)
-        else Graphs.incrementalLabeledBfs(distDf,
-          edgesSoFar.toDF("src", "dst"), wave.toDF("src", "dst"), 4))
-        .localCheckpoint(eager = true)
+    def pairs(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val state = graft.tables.TableOps.foldState(dag, source) { df =>
+      edgesSoFar = pairs(df)
+      Graphs.labeledBfs(edgesSoFar.toDF("src", "dst"), seeds.toDF("seed"), 4)
+    } { (held, df) =>
+      val wave = pairs(df)
+      val before = edgesSoFar.toDF("src", "dst")
       edgesSoFar = edgesSoFar ++ wave
-      distDf
+      Graphs.incrementalLabeledBfs(held, before, wave.toDF("src", "dst"), 4)
     }
     dag.sink("dist", state)
     for (w <- waves) {

@@ -69,15 +69,15 @@ class IncrementalLpaSpec extends AnyFunSuite {
       .filter(e => e._1 != e._2).distinct
     val dag = new Dag
     val source = dag.sourceStream(SparkBatch(spark.emptyDataFrame, 0), name = "edges")
-    var edgesSoFar: DataFrame = null
-    var labDf: DataFrame = null
-    val state = dag.state(source) { b: SparkBatch =>
-      labDf = (if (labDf == null) Graphs.labelPropagation(b.df, R)
-        else Graphs.incrementalLabelPropagation(labDf, edgesSoFar, b.df, R))
-        .localCheckpoint(eager = true)
-      edgesSoFar = (if (edgesSoFar == null) b.df
-        else edgesSoFar.unionByName(b.df)).localCheckpoint(eager = true)
-      labDf
+    var pairsSoFar: Seq[(Long, Long)] = Nil
+    def pairs(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val state = graft.tables.TableOps.foldState(dag, source) { df =>
+      pairsSoFar = pairs(df)
+      Graphs.labelPropagation(df, R)
+    } { (held, df) =>
+      val before = pairsSoFar.toDF("a", "b")
+      pairsSoFar = pairsSoFar ++ pairs(df)
+      Graphs.incrementalLabelPropagation(held, before, df, R)
     }
     dag.sink("communities", state)
     for (w <- all.grouped(45)) {

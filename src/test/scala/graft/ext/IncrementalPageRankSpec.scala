@@ -129,14 +129,15 @@ class IncrementalPageRankSpec extends AnyFunSuite {
     val dag = new Dag
     val source = dag.sourceStream(SparkBatch(spark.emptyDataFrame, 0), name = "edges")
     var pairsSoFar: Seq[(Long, Long)] = Nil
-    var rankDf: DataFrame = null
-    val state = dag.state(source) { b: SparkBatch =>
-      val wave = b.df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      rankDf = (if (rankDf == null) Graphs.integerPageRank(dirDF(wave), R)
-        else Graphs.incrementalPageRank(rankDf, dirDF(pairsSoFar), dirDF(wave), R))
-        .localCheckpoint(eager = true)
+    def pairs(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val state = graft.tables.TableOps.foldState(dag, source) { df =>
+      pairsSoFar = pairs(df)
+      Graphs.integerPageRank(dirDF(pairsSoFar), R)
+    } { (held, df) =>
+      val wave = pairs(df)
+      val before = dirDF(pairsSoFar)
       pairsSoFar = pairsSoFar ++ wave
-      rankDf
+      Graphs.incrementalPageRank(held, before, dirDF(wave), R)
     }
     dag.sink("ranks", state)
     for (w <- waves) {

@@ -87,15 +87,15 @@ class IncrementalTrianglesSpec extends AnyFunSuite {
     val dag = new Dag
     val source = dag.sourceStream(SparkBatch(spark.emptyDataFrame, 0), name = "edges")
     var pairsSoFar: Seq[(Long, Long)] = Nil
-    var triDf: DataFrame = null
-    val state = dag.state(source) { b: SparkBatch =>
-      val wave = b.df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      triDf = (if (triDf == null) Graphs.triangleCounts(wave.toDF("a", "b"))
-        else Graphs.incrementalTriangleCounts(triDf, pairsSoFar.toDF("a", "b"),
-          wave.toDF("a", "b")))
-        .localCheckpoint(eager = true)
+    def pairs(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val state = graft.tables.TableOps.foldState(dag, source) { df =>
+      pairsSoFar = pairs(df)
+      Graphs.triangleCounts(pairsSoFar.toDF("a", "b"))
+    } { (held, df) =>
+      val wave = pairs(df)
+      val before = pairsSoFar.toDF("a", "b")
       pairsSoFar = pairsSoFar ++ wave
-      triDf
+      Graphs.incrementalTriangleCounts(held, before, wave.toDF("a", "b"))
     }
     dag.sink("triangles", state)
     for (w <- waves) {

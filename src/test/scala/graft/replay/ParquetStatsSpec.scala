@@ -30,7 +30,7 @@ class ParquetStatsSpec extends AnyFunSuite {
       assert((sb.count == 0) == (actual == 0), "emptiness must be exact")
       statsTotal += actual
       val eb = exact.readTo(t)
-      exactTotal += exact.length(eb)
+      exactTotal += eb.count
       assert(stats.getNext <= exact.getNext)
       t += DayNs
     }

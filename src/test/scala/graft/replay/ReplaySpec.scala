@@ -107,6 +107,39 @@ class ReplaySpec extends AnyFunSuite {
     assert(adapter.readTo(30L) == Nil)
   }
 
+  test("stitched Spark sources: an empty slice has length 0 and runs no cycle") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    def src(tss: Long*) =
+      new SparkTableDataSource(tss.map(t => (t, s"v$t")).toDF("ts", "v"), "ts")
+    val empty = SparkBatch(spark.emptyDataFrame, 0)
+    def stitched() = new IteratorDataSourceAdapter[SparkBatch](
+      Iterator(src(10L, 10L, 20L), src(30L)), empty,
+      (a, b) => SparkBatch(a.df.unionByName(b.df), a.count + b.count))
+
+    val direct = stitched()
+    val before = direct.readTo(5L)
+    assert(direct.length(before) == 0 && before.df.count() == 0)
+    val first = direct.readTo(25L)
+    assert(direct.length(first) == 3 && first.df.count() == 3)
+    val rest = direct.readTo(40L) // exhausts the first source, reads the second
+    assert(direct.length(rest) == 1 && rest.df.count() == 1)
+    val after = direct.readTo(50L)
+    assert(direct.length(after) == 0)
+
+    // the slices before the first and after the last timestamp are empty:
+    // the driver must skip them, and count sink rows, not sink values
+    val dag = new Dag
+    val events = dag.sourceStream(empty, name = "events")
+    dag.sink("events", events)
+    val driver = ReplayDriver.create(dag, ReplayContext(0L, 40L, 10L),
+      Map("events" -> (_ => stitched())), Map("events" -> (_ => new ListDataSink[Any])))
+    driver.run()
+    assert(driver.metrics.map(_.timestamp) == Seq(10L, 20L, 30L))
+    assert(driver.metrics.map(_.sourceRecords) == Seq(2L, 1L, 1L))
+    assert(driver.metrics.map(_.sinkRecords) == Seq(2L, 1L, 1L))
+  }
+
   test("Spark parquet replay source slices events by virtual time") {
     val spark = SparkTestSession.spark
     val dag = new Dag
@@ -126,8 +159,8 @@ class ReplaySpec extends AnyFunSuite {
     val driver = ReplayDriver.create(
       dag,
       ReplayContext(ts("2024-01-01T00:00:00Z"), ts("2024-02-01T00:00:00Z"), 24 * Hour),
-      Map("events" -> (_ => new SparkBatchDataSource(
-        SparkTableDataSource.parquet(spark, "/root/testdata/sf0.001/events.parquet", "ts")))),
+      Map("events" -> (_ =>
+        SparkTableDataSource.parquet(spark, "/root/testdata/sf0.001/events.parquet", "ts"))),
       Map("counts" -> (_ => sink)))
     driver.run()
     val expected = spark.read.parquet("/root/testdata/sf0.001/events.parquet").count()

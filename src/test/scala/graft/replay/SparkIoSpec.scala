@@ -27,8 +27,8 @@ class SparkIoSpec extends AnyFunSuite {
       spark, csv.getAbsolutePath, "timestamp TIMESTAMP, message STRING", "timestamp")
     assert(src.getNext == Time.parse("2023-01-01T01:00:00Z"))
     val batch1 = src.readTo(Time.parse("2023-01-01T02:00:00Z"))
-    assert(src.length(batch1) == 2)
-    assert(batch1.select("message").as[String].collect().toSet == Set("Hello", "How are you"))
+    assert(src.length(batch1) == 2 && batch1.count == 2)
+    assert(batch1.df.select("message").as[String].collect().toSet == Set("Hello", "How are you"))
     val batch2 = src.readTo(Time.parse("2023-01-01T03:00:00Z"))
     assert(src.length(batch2) == 1)
     assert(src.getNext == Time.UtcMax)

@@ -88,40 +88,6 @@ class ReplayDataSourceSpec extends AnyFunSuite {
     assert(full.rdd.getNumPartitions == idx.groups.length)
   }}
 
-  test("limit pushdown plans a prefix of row groups; filters disable it") { TempDir("graft_v2_limit") { dir =>
-    import spark.implicits._
-    val path = s"$dir/data"
-    (0L until 200000L).map(i => (i, i * 1000L, s"payload_$i"))
-      .toDF("ts", "event_id", "payload")
-      .coalesce(1)
-      .write.option("parquet.block.size", "65536").parquet(path)
-    val idx = ReplayDataSource.index(path)
-    assert(idx.groups.length > 2, s"fixture produced ${idx.groups.length} row groups")
-
-    // .rdd.getNumPartitions would measure the post-limit RDD (CollectLimit
-    // coalesces to 1 regardless) — read the SCAN's planned group count
-    // from its description instead
-    def plannedGroups(df: org.apache.spark.sql.DataFrame): Int = {
-      val p = df.queryExecution.executedPlan.toString
-      "rowGroups=(\\d+)".r.findFirstMatchIn(p).map(_.group(1).toInt)
-        .getOrElse(fail(s"no rowGroups in plan:\n$p"))
-    }
-
-    val limited = viaConnector(path).limit(5)
-    assert(plannedGroups(limited) == 1, "LIMIT 5 must plan only the first row group")
-    assert(limited.queryExecution.executedPlan.toString.contains("limit=5"))
-    assert(limited.count() == 5L)
-
-    // a ts filter keeps the full surviving-group set: residual filtering
-    // inside a kept group could otherwise starve the limit
-    val filteredLimit = viaConnector(path)
-      .where(col("ts") > 100000L).limit(5)
-    assert(filteredLimit.count() == 5L)
-    val survivors = idx.groups.count(g => g.tsMax.forall(_ > 100000L))
-    assert(plannedGroups(filteredLimit) == survivors,
-      "filter + limit must not drop surviving groups")
-  }}
-
   test("nested schemas fail fast at inferSchema (embeddings: list<float>)") {
     val e = intercept[Exception] {
       viaConnector(s"$sfDir/embeddings.parquet").schema

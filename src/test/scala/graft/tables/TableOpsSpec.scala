@@ -34,16 +34,37 @@ class TableOpsSpec extends AnyFunSuite {
       .limit(300).cache()
     val global = TableOps.lastByKeys(events, Seq("user_id"), Seq("ts", "event_id"))
       .orderBy("user_id").collect().toSeq
+    val last = (df: org.apache.spark.sql.DataFrame) =>
+      TableOps.lastByKeys(df, Seq("user_id"), Seq("ts", "event_id"))
     for (batches <- Seq(2, 3, 7)) {
-      var state: org.apache.spark.sql.DataFrame = null
+      val dag = new Dag
+      val source = dag.sourceStream(SparkBatch(spark.emptyDataFrame, 0), name = "events")
+      val node = TableOps.foldState(dag, source)(last)((held, df) => last(held.unionByName(df)))
       for (k <- 0 until batches) {
         val delta = events.where(pmod(col("event_id"), lit(batches)) === k)
-        val all = if (state == null) delta else state.unionByName(delta)
-        state = TableOps.lastByKeys(all, Seq("user_id"), Seq("ts", "event_id"))
-          .localCheckpoint(eager = true)
+        source.setStream(SparkBatch(delta, 1))
+        dag.execute()
       }
+      val state = node.getValue
       assert(state.orderBy("user_id").collect().toSeq == global, s"batches=$batches")
     }
+  }
+
+  test("foldState seeds from the first batch, merges later ones, skips empty ones") {
+    val dag = new Dag
+    val source = dag.sourceStream(SparkBatch(spark.emptyDataFrame, 0), name = "rows")
+    val node = TableOps.foldState(dag, source)(identity)(_.unionByName(_))
+    dag.execute() // a state node runs on the first cycle; no batch: no update
+    assert(node.getValue == null && node.getCycleId == 0)
+    source.setStream(SparkBatch(batch1, 3)); dag.execute()
+    source.setStream(SparkBatch(batch2, 2)); dag.execute()
+    assert(node.getCycleId == dag.getCycleId)
+    assert(node.getValue.orderBy("col1", "col2").collect().toSeq ==
+      Seq(Row(1, "a"), Row(1, "d"), Row(2, "b"), Row(2, "e"), Row(3, "c")))
+    // checkpointed per cycle: the held table is not a union over the batches
+    assert(node.getValue.queryExecution.logical.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+    }.isEmpty)
   }
 
   test("salted lastByKeys equals the unsalted aggregate (skew path)") {
