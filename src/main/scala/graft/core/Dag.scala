@@ -298,13 +298,10 @@ final class Dag {
     addState(vs => f(vs(0).asInstanceOf[A], vs(1).asInstanceOf[B], vs(2).asInstanceOf[C],
       vs(3).asInstanceOf[D]), Seq(a, b, c, d), callSite())
 
-  /** State variants whose function may return `SilentUpdate` / `StateUnchanged`
+  /** A state variant whose function may return `SilentUpdate` / `StateUnchanged`
     * directly (they are honoured for any node kind, as in the reference). */
   def stateAdv[A, T](a: Node[A])(f: A => Any): Node[T] =
     addState[T](vs => f(vs(0).asInstanceOf[A]), Seq(a), callSite())
-
-  def stateAdv2[A, B, T](a: Node[A], b: Node[B])(f: (A, B) => Any): Node[T] =
-    addState[T](vs => f(vs(0).asInstanceOf[A], vs(1).asInstanceOf[B]), Seq(a, b), callSite())
 
   /** Named terminal capture; multiple sinks may share a name
     * (reference `beavers/dag.py:520-539`). */
@@ -387,8 +384,6 @@ final class Dag {
     * set now, flush due timers, then a single pass over nodes in topological
     * (insertion) order (reference `Dag.execute`, `beavers/dag.py:663-677`). */
   def execute(timestamp: Nanos): Unit = executeImpl(Some(timestamp))
-
-  def executeAt(instant: java.time.Instant): Unit = execute(Time.fromInstant(instant))
 
   private def executeImpl(timestamp: Option[Nanos]): Unit = {
     _cycleId += 1

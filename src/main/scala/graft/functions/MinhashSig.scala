@@ -34,10 +34,26 @@ case class MinhashSig(child: Expression, numHashes: Int) extends UnaryExpression
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    MinhashSig.kernel(input.asInstanceOf[ArrayData], numHashes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.MinhashSig.kernel($c, $numHashes)")
+
+  override protected def withNewChildInternal(newChild: Expression): MinhashSig =
+    copy(child = newChild)
+
+  override def prettyName: String = "graft_minhash"
+}
+
+object MinhashSig {
+
+  /** The signature of one shingle set — the one implementation behind both
+    * `eval` and the generated code. */
+  def kernel(arr: ArrayData, numHashes: Int): ArrayData = {
     val n = arr.numElements()
-    val out = Array.fill(numHashes)(Long.MaxValue)
+    val out = new Array[Long](numHashes)
+    java.util.Arrays.fill(out, Long.MaxValue)
     val blocks = (numHashes + 63) / 64
     var i = 0
     while (i < n) {
@@ -47,8 +63,8 @@ case class MinhashSig(child: Expression, numHashes: Int) extends UnaryExpression
         // so positions >= 64 stay independent of their j-64 mirrors
         var b = 0
         while (b < blocks) {
-          val h1 = MinhashSig.mix64(v, 0x9E3779B97F4A7C15L + b)
-          val h2 = MinhashSig.mix64(v, 0xC2B2AE3D27D4EB4FL + b)
+          val h1 = mix64(v, 0x9E3779B97F4A7C15L + b)
+          val h2 = mix64(v, 0xC2B2AE3D27D4EB4FL + b)
           var j = b * 64
           val end = math.min(j + 64, numHashes)
           while (j < end) {
@@ -64,55 +80,10 @@ case class MinhashSig(child: Expression, numHashes: Int) extends UnaryExpression
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val v = ctx.freshName("v")
-      val b = ctx.freshName("b")
-      val h1 = ctx.freshName("h1")
-      val h2 = ctx.freshName("h2")
-      val m = ctx.freshName("m")
-      val end = ctx.freshName("end")
-      val blocks = (numHashes + 63) / 64
-      s"""
-         |int $n = $c.numElements();
-         |long[] $out = new long[$numHashes];
-         |java.util.Arrays.fill($out, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$c.isNullAt($i)) {
-         |    long $v = $c.getLong($i);
-         |    // rotl has period 64: re-seed per 64-position block
-         |    for (int $b = 0; $b < $blocks; $b++) {
-         |      long $h1 = graft.functions.MinhashSig.mix64($v, -7046029254386353131L + $b);
-         |      long $h2 = graft.functions.MinhashSig.mix64($v, -4417276706812531889L + $b);
-         |      int $end = java.lang.Math.min($b * 64 + 64, $numHashes);
-         |      for (int $j = $b * 64; $j < $end; $j++) {
-         |        long $m = $h1 ^ Long.rotateLeft($h2, $j);
-         |        if ($m < $out[$j]) $out[$j] = $m;
-         |      }
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashSig =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_minhash"
-}
-
-object MinhashSig {
-
   /** splitmix64-style finalizer seeded per base hash — a full-avalanche
     * 64-bit mix (Steele et al.). JVM long multiplication wraps (ANSI mode
-    * governs SQL expressions, not Expression-internal Java). Public so
-    * generated code and the Scala eval share one definition. */
-  def mix64(v: Long, seed: Long): Long = {
+    * governs SQL expressions, not Expression-internal Java). */
+  private def mix64(v: Long, seed: Long): Long = {
     var z = v ^ seed
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL

@@ -47,67 +47,14 @@ case class RhpSig(child: Expression, tables: Int, bits: Int, dim: Int)
   // object; ~tables*bits*dim bytes.
   @transient private lazy val planes: Array[Array[Byte]] = RhpSig.planes(tables, bits, dim)
 
-  override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    val n = vec.numElements()
-    if (n > dim) throw new IllegalArgumentException(
-      s"graft_rhp_sig: vector has $n elements, plane dim is $dim")
-    val isFloat = elemIsFloat
-    val out = new Array[Long](tables)
-    var t = 0
-    while (t < tables) {
-      var sig = 0L
-      var j = 0
-      while (j < bits) {
-        val plane = planes(t * bits + j)
-        var acc = 0.0
-        var i = 0
-        while (i < n) {
-          val x = if (isFloat) vec.getFloat(i).toDouble else vec.getDouble(i)
-          acc += plane(i) * x
-          i += 1
-        }
-        if (acc > 0) sig |= 1L << j
-        j += 1
-      }
-      out(t) = sig
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    RhpSig.kernel(input.asInstanceOf[ArrayData], elemIsFloat, planes, tables, bits, dim)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val p = ctx.addReferenceObj("rhpPlanes", planes, "byte[][]")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val sig = ctx.freshName("sig")
-      val acc = ctx.freshName("acc")
-      val plane = ctx.freshName("plane")
-      val getX = if (elemIsFloat) s"(double) $c.getFloat($i)" else s"$c.getDouble($i)"
-      s"""
-         |int $n = $c.numElements();
-         |if ($n > $dim) throw new IllegalArgumentException(
-         |  "graft_rhp_sig: vector has " + $n + " elements, plane dim is " + $dim);
-         |long[] $out = new long[$tables];
-         |for (int $t = 0; $t < $tables; $t++) {
-         |  long $sig = 0L;
-         |  for (int $j = 0; $j < $bits; $j++) {
-         |    byte[] $plane = $p[$t * $bits + $j];
-         |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      $acc += $plane[$i] * $getX;
-         |    }
-         |    if ($acc > 0) $sig |= 1L << $j;
-         |  }
-         |  $out[$t] = $sig;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val p = ctx.addReferenceObj("rhpPlanes", planes, "byte[][]")
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.RhpSig.kernel($c, $elemIsFloat, $p, $tables, $bits, $dim)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): RhpSig =
     copy(child = newChild)
@@ -140,8 +87,37 @@ object RhpSig {
   def planes(tables: Int, bits: Int, dim: Int): Array[Array[Byte]] =
     Array.tabulate(tables * bits, dim)((p, i) => planeSign(p, i).toByte)
 
-  /** Reference (plain Scala) signature computation for cross-checking the
-    * codegen path in tests. */
+  /** The signatures of one vector against precomputed `planes` — the one
+    * implementation behind both `eval` and the generated code. */
+  def kernel(vec: ArrayData, isFloat: Boolean, planes: Array[Array[Byte]],
+      tables: Int, bits: Int, dim: Int): ArrayData = {
+    val n = vec.numElements()
+    if (n > dim) throw new IllegalArgumentException(
+      s"graft_rhp_sig: vector has $n elements, plane dim is $dim")
+    val out = new Array[Long](tables)
+    var t = 0
+    while (t < tables) {
+      var sig = 0L
+      var j = 0
+      while (j < bits) {
+        val plane = planes(t * bits + j)
+        var acc = 0.0
+        var i = 0
+        while (i < n) {
+          acc += plane(i) * VecDot.element(vec, isFloat, i)
+          i += 1
+        }
+        if (acc > 0) sig |= 1L << j
+        j += 1
+      }
+      out(t) = sig
+      t += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** Reference (plain Scala) signature computation, independent of
+    * [[kernel]] and [[planes]], for cross-checking the expression in tests. */
   def signaturesOf(vec: Array[Float], tables: Int, bits: Int): Array[Long] =
     Array.tabulate(tables) { t =>
       (0 until bits).foldLeft(0L) { (sig, j) =>

@@ -38,37 +38,31 @@ case class SigAgree(left: Expression, right: Expression)
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val la = l.asInstanceOf[ArrayData]
-    val ra = r.asInstanceOf[ArrayData]
-    val n = math.min(la.numElements(), ra.numElements())
-    var agree = 0L
-    var i = 0
-    while (i < n) {
-      if (la.getLong(i) == ra.getLong(i)) agree += 1L
-      i += 1
-    }
-    agree
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    SigAgree.kernel(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("agree")
-      s"""
-         |int $n = java.lang.Math.min($l.numElements(), $r.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($l.getLong($i) == $r.getLong($i)) $acc++;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (l, r) => s"graft.functions.SigAgree.kernel($l, $r)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SigAgree =
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "graft_sig_agree"
+}
+
+object SigAgree {
+
+  /** The number of positions where `l` and `r` hold the same value — the
+    * one implementation behind both `eval` and the generated code. */
+  def kernel(l: ArrayData, r: ArrayData): Long = {
+    val n = math.min(l.numElements(), r.numElements())
+    var agree = 0L
+    var i = 0
+    while (i < n) {
+      if (l.getLong(i) == r.getLong(i)) agree += 1L
+      i += 1
+    }
+    agree
+  }
 }

@@ -33,14 +33,29 @@ case class SimhashSig(child: Expression, bits: Int) extends UnaryExpression {
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SimhashSig.kernel(input.asInstanceOf[ArrayData], bits)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.SimhashSig.kernel($c, $bits)")
+
+  override protected def withNewChildInternal(newChild: Expression): SimhashSig =
+    copy(child = newChild)
+
+  override def prettyName: String = "graft_simhash"
+}
+
+object SimhashSig {
+
+  /** The `bits`-bit SimHash of one token array — the one implementation
+    * behind both `eval` and the generated code. */
+  def kernel(arr: ArrayData, bits: Int): Long = {
     val n = arr.numElements()
     val votes = new Array[Int](bits)
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        val h = SimhashSig.hash60(arr.getUTF8String(i))
+        val h = hash60(arr.getUTF8String(i))
         var j = 0
         while (j < bits) {
           votes(j) += (if (((h >>> j) & 1L) == 1L) 1 else -1)
@@ -54,41 +69,6 @@ case class SimhashSig(child: Expression, bits: Int) extends UnaryExpression {
     while (j < bits) { if (votes(j) > 0) sig |= 1L << j; j += 1 }
     sig
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val votes = ctx.freshName("votes")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int $n = $c.numElements();
-         |int[] $votes = new int[$bits];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$c.isNullAt($i)) {
-         |    long $h = graft.functions.SimhashSig.hash60($c.getUTF8String($i));
-         |    for (int $j = 0; $j < $bits; $j++) {
-         |      $votes[$j] += ((($h >>> $j) & 1L) == 1L) ? 1 : -1;
-         |    }
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $j = 0; $j < $bits; $j++) {
-         |  if ($votes[$j] > 0) $sig |= 1L << $j;
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimhashSig =
-    copy(child = newChild)
-
-  override def prettyName: String = "graft_simhash"
-}
-
-object SimhashSig {
 
   private val md = ThreadLocal.withInitial[java.security.MessageDigest](() =>
     java.security.MessageDigest.getInstance("MD5"))

@@ -37,9 +37,25 @@ case class SpanFilter(left: Expression, right: Expression, n: Int)
   override def dataType: DataType = ArrayType(StringType,
     containsNull = left.dataType.asInstanceOf[ArrayType].containsNull)
 
-  override def nullSafeEval(tokens: Any, starts: Any): Any = {
-    val t = tokens.asInstanceOf[ArrayData]
-    val s = starts.asInstanceOf[ArrayData]
+  override def nullSafeEval(tokens: Any, starts: Any): Any =
+    SpanFilter.kernel(tokens.asInstanceOf[ArrayData], starts.asInstanceOf[ArrayData], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (t, s) => s"graft.functions.SpanFilter.kernel($t, $s, $n)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SpanFilter =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "graft_span_filter"
+}
+
+object SpanFilter {
+
+  /** The tokens of `t` not covered by any length-`n` span starting at the
+    * ascending 1-based positions `s` — the one implementation behind both
+    * `eval` and the generated code. */
+  def kernel(t: ArrayData, s: ArrayData, n: Int): ArrayData = {
     val nt = t.numElements()
     val ns = s.numElements()
     val kept = new java.util.ArrayList[AnyRef](nt)
@@ -58,39 +74,4 @@ case class SpanFilter(left: Expression, right: Expression, n: Int)
     }
     new GenericArrayData(kept.toArray)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, s) => {
-      val nt = ctx.freshName("nt")
-      val ns = ctx.freshName("ns")
-      val kept = ctx.freshName("kept")
-      val p = ctx.freshName("p")
-      val maxEnd = ctx.freshName("maxEnd")
-      val j = ctx.freshName("j")
-      val e = ctx.freshName("e")
-      s"""
-         |int $nt = $t.numElements();
-         |int $ns = $s.numElements();
-         |java.util.ArrayList<Object> $kept = new java.util.ArrayList<Object>($nt);
-         |int $p = 0;
-         |long $maxEnd = 0L;
-         |for (int $j = 1; $j <= $nt; $j++) {
-         |  while ($p < $ns && $s.getLong($p) <= $j) {
-         |    long $e = $s.getLong($p) + ${n - 1};
-         |    if ($e > $maxEnd) $maxEnd = $e;
-         |    $p++;
-         |  }
-         |  if ($j > $maxEnd) {
-         |    $kept.add($t.isNullAt($j - 1) ? null : $t.getUTF8String($j - 1));
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($kept.toArray());
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SpanFilter =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "graft_span_filter"
 }

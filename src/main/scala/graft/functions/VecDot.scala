@@ -2,10 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo,
+  UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.vectorized.ColumnarArray
 
 /** Codegen'd dot product over two float/double array columns.
   *
@@ -41,45 +43,47 @@ case class VecDot(left: Expression, right: Expression)
     case _ => false
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val la = l.asInstanceOf[ArrayData]
-    val ra = r.asInstanceOf[ArrayData]
-    val n = math.min(la.numElements(), ra.numElements())
-    val lf = elemIsFloat(left)
-    val rf = elemIsFloat(right)
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (lf) la.getFloat(i).toDouble else la.getDouble(i)
-      val y = if (rf) ra.getFloat(i).toDouble else ra.getDouble(i)
-      acc += x * y
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VecDot.kernel(l.asInstanceOf[ArrayData], elemIsFloat(left),
+      r.asInstanceOf[ArrayData], elemIsFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val getL = if (elemIsFloat(left)) s"(double) $l.getFloat($i)" else s"$l.getDouble($i)"
-      val getR = if (elemIsFloat(right)) s"(double) $r.getFloat($i)" else s"$r.getDouble($i)"
-      s"""
-         |int $n = java.lang.Math.min($l.numElements(), $r.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $getL * $getR;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (l, r) =>
+      s"graft.functions.VecDot.kernel($l, ${elemIsFloat(left)}, $r, ${elemIsFloat(right)})")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDot =
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "graft_vec_dot"
+}
+
+object VecDot {
+
+  /** The left-to-right double fold of the element products, each element
+    * widened to double first — the one implementation behind both `eval`
+    * and the generated code. */
+  def kernel(l: ArrayData, lFloat: Boolean, r: ArrayData, rFloat: Boolean): Double = {
+    val n = math.min(l.numElements(), r.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += element(l, lFloat, i) * element(r, rFloat, i)
+      i += 1
+    }
+    acc
+  }
+
+  /** Element `i` of a float/double array, widened to double. A kernel's
+    * code is shared by every call site, so a plain `ArrayData` read in it
+    * sees every array class (unsafe, columnar, generic) and the JIT cannot
+    * inline it; the class tests name the two final classes that scans and
+    * exchanges deliver, so their reads inline. */
+  private[functions] def element(a: ArrayData, isFloat: Boolean, i: Int): Double = a match {
+    case u: UnsafeArrayData => if (isFloat) u.getFloat(i) else u.getDouble(i)
+    case c: ColumnarArray => if (isFloat) c.getFloat(i) else c.getDouble(i)
+    case _ => if (isFloat) a.getFloat(i) else a.getDouble(i)
+  }
 }
 
 /** Session extension registering the engine's native functions — the

@@ -32,9 +32,10 @@ final class StreamingDagDriver(
     val pinned = batchDf.persist()
     try {
       val n = pinned.count()
-      if (n > 0 || dag.getNextTimer <= clock(pinned, batchId)) {
+      val now = clock(pinned, batchId)
+      if (n > 0 || dag.getNextTimer <= now) {
         if (n > 0) source.setStream(SparkBatch(pinned, n))
-        dag.execute(clock(pinned, batchId))
+        dag.execute(now)
         cycles += 1
       }
     } finally { pinned.unpersist(); () }

@@ -1,6 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -24,9 +28,15 @@ class RhpSigSpec extends AnyFunSuite {
     val vecs = df.select(col("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])].collect().toMap
     assert(got.nonEmpty)
+    // one bound expression, so its planes are built once for all vectors
+    val viaEvalExpr = RhpSig(BoundReference(0, ArrayType(FloatType), nullable = false),
+      8, 6, RhpSig.DefaultDim)
     got.foreach { case (id, sig) =>
       val ref = RhpSig.signaturesOf(vecs(id).toArray, tables = 8, bits = 6)
       assert(sig == ref.toSeq, s"signature mismatch for vec $id")
+      val viaEval = viaEvalExpr.eval(InternalRow(ArrayData.toArrayData(vecs(id).toArray)))
+        .asInstanceOf[ArrayData].toLongArray().toSeq
+      assert(viaEval == ref.toSeq, s"eval signature mismatch for vec $id")
     }
   }
 

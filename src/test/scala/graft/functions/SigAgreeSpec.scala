@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -48,6 +50,11 @@ class SigAgreeSpec extends AnyFunSuite {
       sa.zip(sb).count { case (a, b) => a == b }.toLong
     }
     assert(got == want)
+    val viaEval = cases.map { case (sa, sb) =>
+      SigAgree(Literal.create(sa, ArrayType(LongType)), Literal.create(sb, ArrayType(LongType)))
+        .eval(null)
+    }
+    assert(viaEval == want)
   }
 
   test("null propagation and empty arrays") {

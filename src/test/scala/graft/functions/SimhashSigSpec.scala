@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,6 +33,12 @@ class SimhashSigSpec extends AnyFunSuite {
           TextAnalysis.simhashNHof("text", bits).as("ref"))
         .where(col("fast") =!= col("ref"))
       assert(diff.count() == 0, s"bits=$bits")
+    }
+    val rows = docs.select(expr("array_distinct(split(text, ' '))"),
+      TextAnalysis.simhashNHof("text", 16), TextAnalysis.simhashNHof("text", 60)).collect()
+    for ((bits, col) <- Seq(16 -> 1, 60 -> 2); r <- rows) {
+      val tokens = Literal.create(r.getSeq[String](0), ArrayType(StringType))
+      assert(SimhashSig(tokens, bits).eval(null) == r.get(col), s"eval, bits=$bits, row=$r")
     }
   }
 

@@ -1,6 +1,9 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -43,6 +46,10 @@ class SpanFilterSpec extends AnyFunSuite {
         val want = df.select(graft.ext.CorpusMining.spanFilterHof("t", "ds", n))
           .collect()(0).getSeq[String](0)
         assert(got == want, s"toks=$toks starts=$starts n=$n")
+        val viaEval = SpanFilter(Literal.create(toks, ArrayType(StringType)),
+          Literal.create(starts, ArrayType(LongType)), n).eval(null).asInstanceOf[ArrayData]
+        assert(viaEval.toSeq[AnyRef](StringType).map(_.toString) == want,
+          s"eval: toks=$toks starts=$starts n=$n")
       }
     }
   }

@@ -1,8 +1,12 @@
 package graft.queries
 
+import org.apache.spark.sql.execution.{DataSourceScanExec, InputAdapter, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.functions.{RhpSig, VecDot}
 
 /** Physical-plan regression guards: the properties that make these queries
   * scale must survive refactors — filters/projections on the scan, broadcast
@@ -55,6 +59,41 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"), "no conditional all-pairs join")
     assert(p.contains("graft_rhp_sig"), "signatures come from the codegen expression")
     assert(p.contains("graft_vec_dot"), "verify stage uses the codegen dot kernel")
+  }
+
+  /** Every operator of `name`'s final (post-AQE) plan that evaluates
+    * `graft_vec_dot` or `graft_rhp_sig`, each paired with whether it sits
+    * inside a whole-stage codegen stage. Runs the query once so AQE settles
+    * its final plan. */
+  private def nativeKernelOps(name: String): Seq[(String, Boolean)] = {
+    val df = graft.SparkEntry.queries(name)(spark, dir)
+    df.collect()
+    // a parquet scan lists the query's filters as `DataFilters` but never
+    // evaluates a graft_* one: the Filter above it does
+    def native(p: SparkPlan) = !p.isInstanceOf[DataSourceScanExec] &&
+      p.expressions.exists(_.exists {
+        case _: VecDot | _: RhpSig => true
+        case _ => false
+      })
+    def walk(p: SparkPlan, inStage: Boolean): Seq[(String, Boolean)] = {
+      val here = if (native(p)) Seq(p.nodeName -> inStage) else Nil
+      here ++ (p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan, inStage = false)
+        case q: QueryStageExec => walk(q.plan, inStage = false)
+        case w: WholeStageCodegenExec => walk(w.child, inStage = true)
+        case i: InputAdapter => walk(i.child, inStage = false)
+        case _ => p.children.flatMap(walk(_, inStage))
+      })
+    }
+    walk(df.queryExecution.executedPlan, inStage = false)
+  }
+
+  test("q29/q42: the operators evaluating graft_vec_dot/graft_rhp_sig stay in whole-stage codegen") {
+    for (q <- Seq("q29_cosine_neardup", "q42_embedding_neardup_lsh")) {
+      val ops = nativeKernelOps(q)
+      assert(ops.nonEmpty, s"$q: no operator evaluates a graft_* kernel")
+      assert(ops.forall(_._2), s"$q: outside WholeStageCodegen: ${ops.filterNot(_._2)}")
+    }
   }
 
   test("q41: the LSH-routed dedup pipeline is also free of all-pairs joins") {

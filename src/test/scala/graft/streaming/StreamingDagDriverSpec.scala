@@ -41,4 +41,18 @@ class StreamingDagDriverSpec extends AnyFunSuite {
       assert(dag.getCycleId == 2)
     } finally query.stop()
   }
+
+  test("an empty batch with a due timer reads the clock once and runs one cycle at that time") {
+    val dag = new Dag
+    val source = dag.sourceStream(SparkBatch(spark.emptyDataFrame, 0), name = "ticks")
+    val tm = dag.timerManager()
+    val firedAt = dag.state2(tm, dag.now())((_, now) => now)
+    tm.getValue.setNextTimer(500L)
+    var clockCalls = 0
+    val driver = new StreamingDagDriver(dag, source, (_, _) => { clockCalls += 1; 1000L })
+    driver.onBatch(spark.emptyDataFrame, 0L)
+    assert(clockCalls == 1)
+    assert(driver.cycleCount == 1 && dag.getCycleId == 1)
+    assert(firedAt.getValue == 1000L)
+  }
 }
