@@ -9,7 +9,11 @@ import graft.core.Time.Nanos
   * `beavers/dag.py:761-788`). The reference requires `__len__`; this is the
   * Scala typeclass equivalent.
   */
-trait HasLength[T] { def length(value: T): Int }
+trait HasLength[T] {
+  def length(value: T): Int
+  /** What the dag asks of a stream value; O(1) where `length` is not. */
+  def nonEmpty(value: T): Boolean = length(value) > 0
+}
 
 /** Optional marker for source-stream value types that carry a schema:
   * lets [[Dag.sourceStream]]'s duplicate-name check compare STRUCTURE for
@@ -18,8 +22,10 @@ trait HasLength[T] { def length(value: T): Int }
 trait HasSourceSchema { def sourceSchema: Any }
 
 object HasLength {
-  implicit def iterableHasLength[T <: Iterable[_]]: HasLength[T] =
-    (value: T) => value.size
+  implicit def iterableHasLength[T <: Iterable[_]]: HasLength[T] = new HasLength[T] {
+    def length(value: T): Int = value.size
+    override def nonEmpty(value: T): Boolean = value.nonEmpty
+  }
   implicit def arrayHasLength[E]: HasLength[Array[E]] = (value: Array[E]) => value.length
   implicit val stringHasLength: HasLength[String] = (value: String) => value.length
   implicit def optionHasLength[E]: HasLength[Option[E]] = (value: Option[E]) => value.size
@@ -77,7 +83,7 @@ final class Node[T] private[core] (
 ) {
   private[core] val observers = mutable.ArrayBuffer.empty[Node[_]]
   private[core] var cycleId: Long = 0L
-  private[core] var hasLength: Any => Int = _ => 1
+  private[core] var nonEmpty: Any => Boolean = _ => true
 
   /** Value of the node as of its last update. */
   def getValue: T =
@@ -137,7 +143,7 @@ final class Node[T] private[core] (
     case SilentUpdate(v) => value = v; false
     case StateUnchanged if !isStream => false
     case v if !isStream => value = v; true
-    case v => value = v; hasLength(v) > 0
+    case v => value = v; nonEmpty(v)
   }
 }
 
@@ -180,7 +186,10 @@ final class Dag {
   private val sources = mutable.LinkedHashMap.empty[String, Node[_]]
   private var timerManagerNodes = mutable.ArrayBuffer.empty[Node[TimerManager]]
   private var _cycleId: Long = 0L
-  private var metrics = DagMetrics()
+  // DagMetrics counts since the last flush; nodeCount is read at the flush
+  private var notificationCount = 0L
+  private var updatedNodeCount = 0L
+  private var cycleCount = 0L
 
   /** DAG-wide virtual clock (nanos), set by `execute(timestamp)`; silent so
     * time changes alone never trigger recomputation
@@ -338,7 +347,7 @@ final class Dag {
   def silence[T](node: Node[T]): Node[T] = {
     val n = new Node[T](vs => SilentUpdate(vs(0)), Seq(node),
       node.emptyFactory, node.value, 1, callSite(), Plain)
-    n.hasLength = node.hasLength
+    n.nonEmpty = node.nonEmpty
     addNode(n)
   }
 
@@ -378,31 +387,33 @@ final class Dag {
     timerManagerNodes.foldLeft(Time.UtcMax)((acc, n) => math.min(acc, n.getValue.getNextTimer))
 
   /** One synchronous cycle without a clock update. */
-  def execute(): Unit = executeImpl(None)
+  def execute(): Unit = { _cycleId += 1; runNodes() }
 
   /** One synchronous cycle at virtual time `timestamp` (nanos): bump cycle id,
     * set now, flush due timers, then a single pass over nodes in topological
     * (insertion) order (reference `Dag.execute`, `beavers/dag.py:663-677`). */
-  def execute(timestamp: Nanos): Unit = executeImpl(Some(timestamp))
-
-  private def executeImpl(timestamp: Option[Nanos]): Unit = {
+  def execute(timestamp: Nanos): Unit = {
     _cycleId += 1
-    timestamp.foreach { ts =>
-      nowNanos = ts
-      nowSource.stain()
-      flushTimers(ts)
+    nowNanos = timestamp
+    nowSource.stain()
+    flushTimers(timestamp)
+    runNodes()
+  }
+
+  private def runNodes(): Unit = {
+    var i = 0
+    while (i < nodes.length) {
+      val node = nodes(i)
+      notificationCount += node.notifications
+      if (node.clean(_cycleId)) updatedNodeCount += 1
+      i += 1
     }
-    for (node <- nodes) {
-      metrics = metrics.copy(notificationCount = metrics.notificationCount + node.notifications)
-      if (node.clean(_cycleId))
-        metrics = metrics.copy(updatedNodeCount = metrics.updatedNodeCount + 1)
-    }
-    metrics = metrics.copy(cycleCount = metrics.cycleCount + 1, nodeCount = nodes.size.toLong)
+    cycleCount += 1
   }
 
   def flushMetrics(): DagMetrics = {
-    val out = metrics.copy(nodeCount = nodes.size.toLong)
-    metrics = DagMetrics(nodeCount = nodes.size.toLong)
+    val out = DagMetrics(notificationCount, updatedNodeCount, cycleCount, nodes.size.toLong)
+    notificationCount = 0L; updatedNodeCount = 0L; cycleCount = 0L
     out
   }
 
@@ -420,7 +431,7 @@ final class Dag {
   private def addStream[T](fn: Seq[Any] => Any, inputs: Seq[Node[_]], factory: () => T,
       site: Array[StackTraceElement], kind: Kind)(implicit hl: HasLength[T]): Node[T] = {
     val node = new Node[T](fn, inputs, Some(factory), factory(), 1, site, kind)
-    node.hasLength = (v: Any) => hl.length(v.asInstanceOf[T])
+    node.nonEmpty = (v: Any) => hl.nonEmpty(v.asInstanceOf[T])
     addNode(node)
   }
 
@@ -435,7 +446,6 @@ final class Dag {
       input.observers += node
     }
     nodes += node
-    metrics = metrics.copy(nodeCount = nodes.size.toLong)
     node
   }
 

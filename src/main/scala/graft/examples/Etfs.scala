@@ -1,5 +1,7 @@
 package graft.examples
 
+import scala.collection.mutable
+
 import graft.core.Dag
 import graft.core.Time.Nanos
 
@@ -12,29 +14,32 @@ object Etfs {
   final case class PriceRecord(timestamp: Nanos, ticker: String, price: Option[Double])
   final case class EtfComposition(timestamp: Nanos, ticker: String, weights: Map[String, Double])
 
-  /** reference `GetLatest` (`examples/etfs.py:34-43`). */
-  final class GetLatest[K, V](keyOf: V => K) extends (List[V] => Map[K, V]) {
-    private var latest = Map.empty[K, V]
-    def apply(updates: List[V]): Map[K, V] = {
-      updates.foreach(u => latest += keyOf(u) -> u)
+  /** reference `GetLatest` (`examples/etfs.py:34-43`): one map, updated in
+    * place and returned on every call, as the reference does with its dict
+    * (insertion-ordered like it, so NAVs come out in the reference's order). */
+  final class GetLatest[K, V](keyOf: V => K) extends (List[V] => collection.Map[K, V]) {
+    private val latest = mutable.LinkedHashMap.empty[K, V]
+    def apply(updates: List[V]): collection.Map[K, V] = {
+      updates.foreach(u => latest.update(keyOf(u), u))
       latest
     }
   }
 
   /** reference `calculate_nav` (`examples/etfs.py:70-91`): weighted average,
     * None when any constituent is missing. */
-  def calculateNav(composition: EtfComposition, prices: Map[String, PriceRecord]): PriceRecord = {
+  def calculateNav(composition: EtfComposition,
+      prices: collection.Map[String, PriceRecord]): PriceRecord = {
     var timestamp = composition.timestamp
     var quotient = 0.0
     var dividend = 0.0
     var error = false
-    composition.weights.foreach { case (ticker, weight) =>
-      prices.get(ticker) match {
-        case None => error = true
-        case Some(p) =>
-          quotient += p.price.getOrElse(0.0) * weight
-          dividend += weight
-          timestamp = math.max(timestamp, p.timestamp)
+    composition.weights.foreachEntry { (ticker, weight) =>
+      val p = prices.getOrElse(ticker, null)
+      if (p == null) error = true
+      else {
+        quotient += p.price.getOrElse(0.0) * weight
+        dividend += weight
+        timestamp = math.max(timestamp, p.timestamp)
       }
     }
     PriceRecord(timestamp, composition.ticker,
@@ -43,18 +48,24 @@ object Etfs {
 
   /** reference `calculate_navs` (`examples/etfs.py:94-107`): recompute only
     * ETFs touched by the update set (incremental view maintenance). */
-  def calculateNavs(updatedTickers: Set[String],
-      compositions: Map[String, EtfComposition],
-      prices: Map[String, PriceRecord]): List[PriceRecord] =
-    compositions.values.iterator
+  def calculateNavs(updatedTickers: collection.Set[String],
+      compositions: collection.Map[String, EtfComposition],
+      prices: collection.Map[String, PriceRecord]): List[PriceRecord] =
+    compositions.valuesIterator
       .filter(c => updatedTickers.contains(c.ticker) ||
-        c.weights.keySet.intersect(updatedTickers).nonEmpty)
+        c.weights.keysIterator.exists(updatedTickers.contains))
       .map(calculateNav(_, prices))
       .toList
 
+  /** reference `get_updated_tickers` (`examples/etfs.py:109-115`): every
+    * ticker of the cycle's prices and compositions, in one set. */
   def getUpdatedTickers(prices: List[PriceRecord],
-      compositions: List[EtfComposition]): Set[String] =
-    prices.map(_.ticker).toSet ++ compositions.map(_.ticker)
+      compositions: List[EtfComposition]): collection.Set[String] = {
+    val tickers = mutable.HashSet.empty[String]
+    prices.foreach(p => tickers += p.ticker)
+    compositions.foreach(c => tickers += c.ticker)
+    tickers
+  }
 
   /** reference `create_dag` (`examples/etfs.py:118-134`). */
   def createDag(): Dag = {
@@ -64,8 +75,8 @@ object Etfs {
     val priceLatest = dag.state(priceStream)(new GetLatest[String, PriceRecord](_.ticker))
     val compositionLatest =
       dag.state(compositionStream)(new GetLatest[String, EtfComposition](_.ticker))
-    val updatedTickers = dag.stream2(priceStream, compositionStream)(Set.empty[String])(
-      getUpdatedTickers)
+    val updatedTickers =
+      dag.stream2(priceStream, compositionStream)(collection.Set.empty[String])(getUpdatedTickers)
     val updatedNavs = dag.stream3(updatedTickers, compositionLatest, priceLatest)(
       List.empty[PriceRecord])(calculateNavs)
     dag.sink("etf_price", updatedNavs)

@@ -1,5 +1,6 @@
 package graft.kafka
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 import graft.core.{Dag, Node, Time}
@@ -17,7 +18,10 @@ import graft.core.Time.Nanos
   *    cross-topic time-aligned priming the Spark source does not provide
   *    (SURVEY.md §4).
   */
-final case class TopicPartition(topic: String, partition: Int)
+final case class TopicPartition(topic: String, partition: Int) {
+  // the live path looks a partition up once per message: hash it once
+  override val hashCode: Int = scala.util.hashing.MurmurHash3.productHash(this)
+}
 
 /** A consumed record; timestamps in engine nanos. */
 final case class KMessage(
@@ -197,6 +201,14 @@ object OffsetResolver {
   * are released, so topics replay in global event-time order. Partitions
   * running ahead are paused once the held buffer exceeds `batchSize * 5`,
   * bounding memory; they resume when the watermark catches up.
+  *
+  * The held buffer is kept sorted: `held(heldFrom until heldTo)` is ordered
+  * by effective timestamp, ties in arrival order. A poll sorts only its
+  * fresh batch (stably) and merges it with the held run in one linear pass,
+  * the held message first on a tie. That equals the reference's re-sort of
+  * the whole buffer (`kafka.py:310-311`, a stable `sortBy` of held ++ fresh)
+  * message for message, at O(fresh log fresh + held) per poll; releasing is
+  * a move of `heldFrom`.
   */
 final class ConsumerManager(
     cutoffNs: Nanos,
@@ -205,38 +217,49 @@ final class ConsumerManager(
     batchSize: Int,
     nowNs: () => Nanos = () => Time.fromMillis(System.currentTimeMillis()),
 ) {
+  import ConsumerManager.{byEffectiveTs, effectiveTs}
+
   private val maxHeldMessages = batchSize * 5
   private val partitionInfo: Map[TopicPartition, PartitionInfo] =
     partitionOffsets.map { case (tp, (start, lastRequired)) =>
       tp -> new PartitionInfo(start - 1, lastRequired)
     }
-  private var heldMessages = Vector.empty[KMessage]
+  // the same partitions in the map's iteration order, for per-poll loops
+  private val partitions: Array[TopicPartition] = partitionInfo.keys.toArray
+  private val infos: Array[PartitionInfo] = partitions.map(partitionInfo)
+  // the held run and the array the next merge writes into
+  private var held = new Array[KMessage](16)
+  private var spare = new Array[KMessage](16)
+  private var heldFrom = 0
+  private var heldTo = 0
   private var lowWaterMarkNs: Nanos = Time.UtcEpoch
   private var pausedCount = 0
-  private var metrics = ConsumerMetrics()
+  // consumer metrics since the last flush
+  private var consumedSize = 0L
+  private var consumedCount = 0L
+  private var releasedCount = 0L
+  private var errorCount = 0L
+  private var reportedPaused = 0
+  private var reportedHeld = 0L
+
+  private def heldSize: Int = heldTo - heldFrom
 
   def poll(timeoutMs: Long): Seq[KMessage] = {
-    val limit = math.max(batchSize, maxHeldMessages - heldMessages.size)
-    val newMessages = pollAll(timeoutMs, limit)
-    metrics = metrics.copy(
-      consumedMessageCount = metrics.consumedMessageCount + newMessages.size,
-      consumedMessageSize = metrics.consumedMessageSize + newMessages.map(_.value.length.toLong).sum,
-      errorMessageCount = metrics.errorMessageCount + newMessages.count(_.error.isDefined))
-
-    heldMessages = (heldMessages ++ newMessages).sortBy(effectiveTs)
-    updatePartitionInfo(newMessages)
+    val limit = math.max(batchSize, maxHeldMessages - heldSize)
+    val fresh = pollAll(timeoutMs, limit)
+    updatePartitionInfo(fresh)
+    merge(fresh)
 
     val releaseLimit =
-      if (lowWaterMarkNs >= cutoffNs && pausedCount == 0) batchSize
+      if (lowWaterMarkNs >= cutoffNs && pausedCount == 0) math.min(batchSize, heldSize)
       else getLimit(lowWaterMarkNs)
-    val (released, rest) = heldMessages.splitAt(releaseLimit)
-    heldMessages = rest
+    val released = java.util.Arrays.copyOfRange(held, heldFrom, heldFrom + releaseLimit)
+    heldFrom += releaseLimit
     managePausedPartitions()
 
-    metrics = metrics.copy(
-      releasedMessageCount = metrics.releasedMessageCount + released.size,
-      heldMessageCount = heldMessages.size.toLong)
-    released
+    releasedCount += releaseLimit
+    reportedHeld = heldSize.toLong
+    ArraySeq.unsafeWrapArray(released)
   }
 
   /** Priming watermark while still replaying; None once live
@@ -245,12 +268,14 @@ final class ConsumerManager(
     if (lowWaterMarkNs < cutoffNs) Some(lowWaterMarkNs) else None
 
   def flushMetrics(): ConsumerMetrics = {
-    val out = metrics
-    metrics = ConsumerMetrics()
+    val out = ConsumerMetrics(consumedSize, consumedCount, reportedPaused, releasedCount,
+      reportedHeld, errorCount)
+    consumedSize = 0L; consumedCount = 0L; reportedPaused = 0; releasedCount = 0L
+    reportedHeld = 0L; errorCount = 0L
     out
   }
 
-  private def pollAll(timeoutMs: Long, limit: Int): Seq[KMessage] = {
+  private def pollAll(timeoutMs: Long, limit: Int): mutable.ArrayBuffer[KMessage] = {
     val out = mutable.ArrayBuffer.empty[KMessage]
     consumer.poll(timeoutMs).foreach { first =>
       out += first
@@ -261,9 +286,102 @@ final class ConsumerManager(
           case None => continue = false
         }
     }
-    out.toSeq
+    out
   }
 
+  /** Sorts `fresh` stably by effective timestamp and merges it into the
+    * held run; on a tie the held message goes first. */
+  private def merge(fresh: mutable.ArrayBuffer[KMessage]): Unit = {
+    val n = fresh.size
+    if (n > 0) {
+      val batch = fresh.toArray
+      java.util.Arrays.sort(batch, byEffectiveTs) // TimSort: stable
+      val total = heldSize + n
+      if (spare.length < total) spare = new Array[KMessage](math.max(total, spare.length * 2))
+      val out = spare
+      var i = heldFrom
+      var j = 0
+      var k = 0
+      while (i < heldTo && j < n) {
+        if (effectiveTs(held(i)) <= effectiveTs(batch(j))) { out(k) = held(i); i += 1 }
+        else { out(k) = batch(j); j += 1 }
+        k += 1
+      }
+      while (i < heldTo) { out(k) = held(i); i += 1; k += 1 }
+      while (j < n) { out(k) = batch(j); j += 1; k += 1 }
+      java.util.Arrays.fill(held.asInstanceOf[Array[AnyRef]], 0, heldTo, null)
+      spare = held
+      held = out
+      heldFrom = 0
+      heldTo = total
+    }
+  }
+
+  /** First index past the watermark, capped at batchSize
+    * (reference `_get_limit`, `beavers/kafka.py:335-341`). */
+  private def getLimit(watermark: Nanos): Int = {
+    var i = 0
+    while (i < heldSize && i < batchSize && effectiveTs(held(heldFrom + i)) <= watermark) i += 1
+    i
+  }
+
+  /** Counts the fresh batch and records each partition's last offset and
+    * timestamp, in arrival order; the partition is looked up again only
+    * when it changes. */
+  private def updatePartitionInfo(fresh: mutable.ArrayBuffer[KMessage]): Unit = {
+    var lastTp: TopicPartition = null
+    var info: PartitionInfo = null
+    var i = 0
+    while (i < fresh.size) {
+      val m = fresh(i)
+      consumedSize += m.value.length
+      if (m.error.isDefined) errorCount += 1
+      if (m.tp != lastTp) { lastTp = m.tp; info = partitionInfo(lastTp) }
+      if (m.timestampNs > 0) info.timestampNs = m.timestampNs
+      info.currentOffset = m.offset
+      i += 1
+    }
+    consumedCount += fresh.size
+    var low = Long.MaxValue
+    var anyNonLive = false
+    i = 0
+    while (i < infos.length) {
+      val p = infos(i)
+      if (!p.isLive) { anyNonLive = true; low = math.min(low, p.timestampNs) }
+      i += 1
+    }
+    lowWaterMarkNs = if (anyNonLive) low else nowNs()
+  }
+
+  /** Pause partitions running ahead when the buffer is full; resume when the
+    * watermark catches up (reference `_managed_paused_partitions`,
+    * `beavers/kafka.py:349-381`). */
+  private def managePausedPartitions(): Unit = {
+    val full = heldSize >= maxHeldMessages
+    var toPause: mutable.ArrayBuffer[TopicPartition] = null
+    var toResume: mutable.ArrayBuffer[TopicPartition] = null
+    var paused = 0
+    var i = 0
+    while (i < infos.length) {
+      val info = infos(i)
+      if (full && !info.paused && info.timestampNs > lowWaterMarkNs) {
+        if (toPause == null) toPause = mutable.ArrayBuffer.empty
+        toPause += partitions(i); info.paused = true
+      } else if (info.paused && info.timestampNs <= lowWaterMarkNs) {
+        if (toResume == null) toResume = mutable.ArrayBuffer.empty
+        toResume += partitions(i); info.paused = false
+      }
+      if (info.paused) paused += 1
+      i += 1
+    }
+    if (toPause != null) consumer.pause(toPause.toSeq)
+    if (toResume != null) consumer.resume(toResume.toSeq)
+    pausedCount = paused
+    reportedPaused = paused
+  }
+}
+
+object ConsumerManager {
   /** Timestamp used for ordering and watermark gating: a message without a
     * broker timestamp (ts <= 0, the TIMESTAMP_NOT_AVAILABLE case) sorts LAST
     * and is held until the priming watermark passes — never released out of
@@ -272,49 +390,9 @@ final class ConsumerManager(
   private def effectiveTs(m: KMessage): Nanos =
     if (m.timestampNs <= 0) Time.UtcMax else m.timestampNs
 
-  /** First index past the watermark, capped at batchSize
-    * (reference `_get_limit`, `beavers/kafka.py:335-341`). */
-  private def getLimit(watermark: Nanos): Int = {
-    var i = 0
-    while (i < heldMessages.size && i < batchSize &&
-      effectiveTs(heldMessages(i)) <= watermark) i += 1
-    i
-  }
+  private val byEffectiveTs: java.util.Comparator[KMessage] =
+    java.util.Comparator.comparingLong[KMessage](m => effectiveTs(m))
 
-  private def updatePartitionInfo(newMessages: Seq[KMessage]): Unit = {
-    for (m <- newMessages) {
-      val info = partitionInfo(m.tp)
-      if (m.timestampNs > 0) info.timestampNs = m.timestampNs
-      info.currentOffset = m.offset
-    }
-    val nonLive = partitionInfo.values.filterNot(_.isLive)
-    lowWaterMarkNs =
-      if (nonLive.isEmpty) nowNs()
-      else nonLive.map(_.timestampNs).min
-  }
-
-  /** Pause partitions running ahead when the buffer is full; resume when the
-    * watermark catches up (reference `_managed_paused_partitions`,
-    * `beavers/kafka.py:349-381`). */
-  private def managePausedPartitions(): Unit = {
-    val toPause = mutable.ArrayBuffer.empty[TopicPartition]
-    val toResume = mutable.ArrayBuffer.empty[TopicPartition]
-    for ((tp, info) <- partitionInfo) {
-      if (heldMessages.size >= maxHeldMessages && !info.paused &&
-        info.timestampNs > lowWaterMarkNs) {
-        toPause += tp; info.paused = true
-      } else if (info.paused && info.timestampNs <= lowWaterMarkNs) {
-        toResume += tp; info.paused = false
-      }
-    }
-    if (toPause.nonEmpty) consumer.pause(toPause.toSeq)
-    if (toResume.nonEmpty) consumer.resume(toResume.toSeq)
-    pausedCount = partitionInfo.values.count(_.paused)
-    metrics = metrics.copy(pausedPartitions = pausedCount)
-  }
-}
-
-object ConsumerManager {
   /** Resolve offsets per policy, assign, and build the manager
     * (reference `_ConsumerManager.create`, `beavers/kafka.py:269-296`). */
   def create(consumer: ConsumerClient, topics: Seq[SourceTopic[_]], batchSize: Int,
@@ -337,7 +415,7 @@ final class RuntimeSourceTopic[T](
   private val buffer = mutable.ArrayBuffer.empty[KMessage]
   def append(m: KMessage): Unit = buffer += m
   def flush(): Boolean = {
-    val result = deserializer(buffer.toSeq)
+    val result = deserializer(ArraySeq.unsafeWrapArray(buffer.toArray))
     buffer.clear()
     if (lengthOf(result) > 0) { node.setStream(result); true } else false
   }
@@ -367,32 +445,57 @@ final class KafkaDriver(
     producer: ProducerClient,
     nowNs: () => Nanos = () => Time.fromMillis(System.currentTimeMillis()),
 ) {
-  private var metrics = ExecutionMetrics()
-  private var producerMetrics = ProducerMetrics()
+  private val sources: Array[RuntimeSourceTopic[_]] = sourceTopics.values.toArray
+  // execution and producer metrics since the last flush
+  private var pollNs = 0L
+  private var deserializationNs = 0L
+  private var executionNs = 0L
+  private var serializationNs = 0L
+  private var cycles = 0L
+  private var producedCount = 0L
+  private var producedSize = 0L
+  private var deliveryErrorCount = 0L
+  private var confirmedCount = 0L
+  private val onDelivery: Option[Throwable] => Unit = {
+    case Some(_) => deliveryErrorCount += 1
+    case None => confirmedCount += 1
+  }
 
   def runCycle(pollTimeoutMs: Long = 1000L): Boolean = {
     val t0 = System.nanoTime()
     val messages = consumerManager.poll(pollTimeoutMs)
-    metrics = metrics.copy(pollNs = metrics.pollNs + (System.nanoTime() - t0))
+    pollNs += System.nanoTime() - t0
     val ran = runDagCycle(messages)
     if (ran) produceRecords(dag.getCycleId)
     producer.poll()
     ran
   }
 
+  /** Appends each error-free message to its topic's buffer; the topic is
+    * looked up again only when it changes. */
+  private def route(messages: Seq[KMessage]): Unit = {
+    var topic: String = null
+    var target: RuntimeSourceTopic[_] = null
+    messages.foreach { m =>
+      if (m.error.isEmpty) {
+        if (m.tp.topic != topic) { topic = m.tp.topic; target = sourceTopics.getOrElse(topic, null) }
+        if (target != null) target.append(m)
+      }
+    }
+  }
+
   private def runDagCycle(messages: Seq[KMessage]): Boolean = {
-    messages.filter(_.error.isEmpty).foreach(m => sourceTopics.get(m.tp.topic).foreach(_.append(m)))
+    route(messages)
     val t0 = System.nanoTime()
     var hasMessages = false
-    sourceTopics.values.foreach(h => hasMessages = h.flush() || hasMessages)
-    metrics = metrics.copy(deserializationNs = metrics.deserializationNs + (System.nanoTime() - t0))
+    sources.foreach(h => hasMessages = h.flush() || hasMessages)
+    deserializationNs += System.nanoTime() - t0
     val cycleTime = consumerManager.primingWatermark.getOrElse(nowNs())
     if (hasMessages || dag.getNextTimer <= cycleTime) {
       val t1 = System.nanoTime()
       dag.execute(cycleTime)
-      metrics = metrics.copy(
-        executionNs = metrics.executionNs + (System.nanoTime() - t1),
-        cycles = metrics.cycles + 1)
+      executionNs += System.nanoTime() - t1
+      cycles += 1
       true
     } else false
   }
@@ -400,23 +503,24 @@ final class KafkaDriver(
   private def produceRecords(cycleId: Long): Unit = {
     val t0 = System.nanoTime()
     val messages = sinkTopics.flatMap(_.serialize(cycleId))
-    metrics = metrics.copy(serializationNs = metrics.serializationNs + (System.nanoTime() - t0))
-    for (m <- messages) {
-      producer.produce(m.topic, m.key, m.value, {
-        case Some(_) => producerMetrics = producerMetrics.copy(
-          deliveryErrorCount = producerMetrics.deliveryErrorCount + 1)
-        case None => producerMetrics = producerMetrics.copy(
-          confirmedCount = producerMetrics.confirmedCount + 1)
-      })
-      producerMetrics = producerMetrics.copy(
-        producedCount = producerMetrics.producedCount + 1,
-        producedSize = producerMetrics.producedSize + m.value.length)
+    serializationNs += System.nanoTime() - t0
+    messages.foreach { m =>
+      producer.produce(m.topic, m.key, m.value, onDelivery)
+      producedCount += 1
+      producedSize += m.value.length
     }
   }
 
-  def flushMetrics(): ExecutionMetrics = { val out = metrics; metrics = ExecutionMetrics(); out }
+  def flushMetrics(): ExecutionMetrics = {
+    val out = ExecutionMetrics(serializationNs, deserializationNs, executionNs, pollNs, cycles)
+    serializationNs = 0L; deserializationNs = 0L; executionNs = 0L; pollNs = 0L; cycles = 0L
+    out
+  }
+
   def flushProducerMetrics(): ProducerMetrics = {
-    val out = producerMetrics; producerMetrics = ProducerMetrics(); out
+    val out = ProducerMetrics(producedCount, producedSize, 0L, deliveryErrorCount, confirmedCount)
+    producedCount = 0L; producedSize = 0L; deliveryErrorCount = 0L; confirmedCount = 0L
+    out
   }
 }
 

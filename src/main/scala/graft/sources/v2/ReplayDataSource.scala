@@ -46,10 +46,10 @@ import org.apache.spark.util.SerializableConfiguration
   * pushed timestamp bounds — O(overlapping row groups) per cycle instead of
   * O(files) footer IO. At 100 TB / 1000 cycles that is the difference
   * between per-cycle planning being free and being a storage-metadata storm.
-  * The session's Hadoop conf is built and broadcast once
-  * ([[ReplayDataSource.sessionConf]]) and shared by the footer reads and by
-  * every reader and writer task, instead of being rebuilt per call and
-  * shipped whole in every task.
+  * The session's Hadoop conf is built once and shared by the footer reads
+  * and, broadcast once when the first reader or writer factory needs it
+  * ([[ReplayDataSource.sessionConf]]), by every reader and writer task,
+  * instead of being rebuilt per call and shipped whole in every task.
   *
   * Pushdown contract: timestamp-column range predicates
   * (>, >=, <, <=, =) prune row groups via the cached footer stats; ALL
@@ -132,35 +132,44 @@ object ReplayDataSource {
   private final case class ConfInputs(
       sc: SparkContext, hadoop: util.Map[String, String], sql: Map[String, String])
 
-  private var shared: (ConfInputs, Broadcast[SerializableConfiguration]) = _ // guarded by this
+  /** The session's Hadoop conf built from `inputs`, and its broadcast, made
+    * only when a reader or writer factory first needs one. */
+  private final class SessionConf(val inputs: ConfInputs, val conf: Configuration) {
+    lazy val broadcast: Broadcast[SerializableConfiguration] =
+      inputs.sc.broadcast(new SerializableConfiguration(conf))
+  }
+
+  private var shared: SessionConf = _ // guarded by this
 
   /** The session's Hadoop conf (`sessionState.newHadoopConf()`, so the
     * session's `spark.hadoop.*` settings, S3/HDFS credentials etc. apply),
-    * broadcast ONCE: every driver-side metadata read (`.value.value`) and
-    * every reader and writer task of the session uses this one value, and
-    * never mutates it (a task sets its own keys on a copy, [[taskConf]]).
-    * Rebuilt only when one of its inputs changed since the last call:
-    * comparing them costs a map copy of each, where building the conf
-    * copies ~1,000 entries and shipping it whole costs a serialization per
-    * stage and a deserialization per task. */
-  private[v2] def sessionConf(session: SparkSession): Broadcast[SerializableConfiguration] = {
+    * built ONCE: every driver-side metadata read and every reader and writer
+    * task of the session uses this one value, and never mutates it (a task
+    * sets its own keys on a copy, [[taskConf]]). Rebuilt only when one of
+    * its inputs changed since the last call: comparing them costs a map copy
+    * of each, where building the conf copies ~1,000 entries. */
+  private def current(session: SparkSession): SessionConf = {
     val sc = session.sparkContext
     val hadoop = new util.HashMap[String, String]()
     sc.hadoopConfiguration.forEach(e => hadoop.put(e.getKey, e.getValue))
     val inputs = ConfInputs(sc, hadoop, session.conf.getAll)
     synchronized {
-      if (shared == null || shared._1 != inputs)
-        shared = (inputs, sc.broadcast(
-          new SerializableConfiguration(session.sessionState.newHadoopConf())))
-      shared._2
+      if (shared == null || shared.inputs != inputs)
+        shared = new SessionConf(inputs, session.sessionState.newHadoopConf())
+      shared
     }
   }
+
+  /** The session conf as tasks see it: broadcast once per conf (shipping it
+    * whole costs a serialization per stage and a deserialization per task).
+    * Driver-only reads ([[hadoopConf]]) never create the broadcast. */
+  private[v2] def sessionConf(session: SparkSession): Broadcast[SerializableConfiguration] =
+    current(session).broadcast
 
   /** The active session's conf for driver-side reads; bare defaults only
     * when no session exists. */
   private def hadoopConf(): Configuration =
-    SparkSession.getActiveSession.map(sessionConf(_).value.value)
-      .getOrElse(new Configuration())
+    SparkSession.getActiveSession.map(current(_).conf).getOrElse(new Configuration())
 
   /** A task's own conf: a copy of the broadcast session conf with `keys`
     * set. A `JobConf`, so `TaskAttemptContextImpl` takes it without another

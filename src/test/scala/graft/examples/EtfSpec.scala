@@ -1,5 +1,7 @@
 package graft.examples
 
+import scala.collection.mutable
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Time
@@ -55,5 +57,57 @@ class EtfSpec extends AnyFunSuite {
         EtfComposition(t4, "SOFT", Map("MSFT" -> 0.5, "GOOG" -> 1.0, "ORCL" -> 0.5))))
       .execute(t4)
       .assertSinkList("etf_price", Seq(PriceRecord(t4, "SOFT", None)))
+  }
+
+  test("ETF NAV dag over a seeded random stream matches a from-scratch recomputation") {
+    val rng = new scala.util.Random(7)
+    val tickers = Vector.tabulate(12)(i => s"T$i")
+    val etfs = Vector.tabulate(5)(i => s"E$i")
+    val bench = new DagTestBench(Etfs.createDag())
+    // the recomputation's state: latest price per ticker, latest composition
+    // per ETF in first-seen order (the reference's dict order)
+    val prices = mutable.Map.empty[String, PriceRecord]
+    val compositions = mutable.LinkedHashMap.empty[String, EtfComposition]
+    def nav(c: EtfComposition): PriceRecord = {
+      var ts = c.timestamp
+      var num = 0.0
+      var den = 0.0
+      var missing = false
+      c.weights.foreach { case (t, w) =>
+        prices.get(t) match {
+          case None => missing = true
+          case Some(p) =>
+            num += p.price.getOrElse(0.0) * w
+            den += w
+            ts = math.max(ts, p.timestamp)
+        }
+      }
+      PriceRecord(ts, c.ticker, if (missing || den == 0.0) None else Some(num / den))
+    }
+    var updatedCycles = 0
+    var quietCycles = 0
+    for (cycle <- 1 to 50) {
+      val now = plusSec(cycle)
+      val priceBatch = List.fill(rng.nextInt(4))(PriceRecord(now - rng.nextInt(1000),
+        tickers(rng.nextInt(tickers.size)),
+        if (rng.nextInt(10) == 0) None else Some(10.0 + rng.nextInt(9000) / 100.0)))
+      val compositionBatch =
+        if (rng.nextInt(4) != 0) Nil
+        else List(EtfComposition(now, etfs(rng.nextInt(etfs.size)),
+          List.fill(rng.nextInt(5))(tickers(rng.nextInt(tickers.size)) -> (1 + rng.nextInt(9)).toDouble)
+            .toMap))
+      if (priceBatch.nonEmpty) bench.setSource("price", priceBatch)
+      if (compositionBatch.nonEmpty) bench.setSource("etf_composition", compositionBatch)
+      bench.execute(now)
+
+      priceBatch.foreach(p => prices(p.ticker) = p)
+      compositionBatch.foreach(c => compositions(c.ticker) = c)
+      val touched = priceBatch.map(_.ticker).toSet ++ compositionBatch.map(_.ticker)
+      val want = compositions.values.filter(c =>
+        touched.contains(c.ticker) || c.weights.keys.exists(touched.contains)).map(nav).toList
+      if (want.isEmpty) { bench.assertSinkNotUpdated("etf_price"); quietCycles += 1 }
+      else { bench.assertSinkList("etf_price", want); updatedCycles += 1 }
+    }
+    assert(updatedCycles > 10 && quietCycles > 5, "the stream exercises both outcomes")
   }
 }

@@ -2,14 +2,30 @@
 """Local replica of the driver's correctness gate: run DuckDB oracle SQL over
 the testdata parquet and compare against the Verify.scala parquet dumps.
 Usage: check_oracle.py <sfDir> <verifyOutDir>
+
+DuckDB gets a memory limit (half of MemTotal) and one thread per CPU, and
+each query a time bound (QUERY_TIMEOUT_S): a query past it prints
+`FAIL <name>: timeout` and the script goes on to the next one.
 """
 import json
+import os
 import sys
+import threading
 
 import duckdb
 import pyarrow.parquet as pq
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+MEMORY_SHARE = 0.5
+QUERY_TIMEOUT_S = 600.0
+
+
+def mem_total_bytes():
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) * 1024
+    raise RuntimeError("no MemTotal in /proc/meminfo")
 
 
 def normalize(rows, cols):
@@ -20,8 +36,22 @@ def normalize(rows, cols):
     return sorted(out)
 
 
-def main(sf_dir, out_dir):
+def run_bounded(con, sql, timeout_s):
+    """The query's Arrow table, or None when it ran past `timeout_s`."""
+    timer = threading.Timer(timeout_s, con.interrupt)
+    timer.start()
+    try:
+        return con.execute(sql).fetch_arrow_table()
+    except duckdb.InterruptException:
+        return None
+    finally:
+        timer.cancel()
+
+
+def main(sf_dir, out_dir, timeout_s=QUERY_TIMEOUT_S):
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{int(mem_total_bytes() * MEMORY_SHARE) // 2**20}MB'")
+    con.execute(f"SET threads = {len(os.sched_getaffinity(0))}")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
@@ -30,7 +60,11 @@ def main(sf_dir, out_dir):
         try:
             # one oracle run and one parquet read per query: rows and
             # dtypes both come from these two Arrow tables
-            want_t = con.execute(sql).fetch_arrow_table()
+            want_t = run_bounded(con, sql, timeout_s)
+            if want_t is None:
+                print(f"FAIL {name}: timeout")
+                fail += 1
+                continue
             got_t = pq.read_table(f"{out_dir}/{name}")
             want, got = want_t.to_pylist(), got_t.to_pylist()
         except Exception as e:
