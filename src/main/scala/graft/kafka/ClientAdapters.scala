@@ -61,16 +61,12 @@ trait RawConsumer {
   *    beginning (replay-from-start, matching a fresh consumer group).
   */
 final class RawConsumerAdapter(raw: RawConsumer) extends ConsumerClient {
-  // Fetched records not yet delivered, in arrival order: `buffered` from
-  // arrival number `headSeq` on; `resumed` holds records of partitions
-  // resumed since they were parked, with their arrival numbers (all below
-  // `headSeq`); `parked` holds those of paused partitions.
-  private val buffered = mutable.ArrayDeque.empty[KMessage]
-  private var headSeq = 0L
-  private var resumed = mutable.ArrayDeque.empty[(Long, KMessage)]
-  private val parked = mutable.HashMap.empty[TopicPartition, mutable.ArrayDeque[(Long, KMessage)]]
+  // Fetched records not yet delivered: one queue per partition, each record
+  // with its arrival number.
+  private val buffered =
+    mutable.LinkedHashMap.empty[TopicPartition, mutable.ArrayDeque[(Long, KMessage)]]
+  private var arrivals = 0L
   private val pausedSet = mutable.Set.empty[TopicPartition]
-  private var lastTp: TopicPartition = null
 
   override def partitions(topic: String): Seq[Int] = raw.partitionsFor(topic)
 
@@ -94,53 +90,28 @@ final class RawConsumerAdapter(raw: RawConsumer) extends ConsumerClient {
   override def poll(timeoutMs: Long): Option[KMessage] =
     firstDeliverable().orElse {
       raw.poll(timeoutMs).foreach { r =>
-        buffered.append(KMessage(topicPartition(r), r.offset,
+        val m = KMessage(TopicPartition(r.topic, r.partition), r.offset,
           if (r.timestampDefined) Math.multiplyExact(r.timestampMs, 1000000L) else 0L,
-          r.key, r.value))
+          r.key, r.value)
+        buffered.getOrElseUpdate(m.tp, mutable.ArrayDeque.empty) += (arrivals -> m)
+        arrivals += 1
       }
       firstDeliverable()
     }
 
   /** KafkaConsumer semantics: paused partitions deliver nothing, including
     * records fetched before the pause — those stay buffered until resume.
-    * The first record in arrival order whose partition is not paused; each
-    * record of a paused partition met on the way is parked, once. */
+    * The earliest-arrived record at the head of an unpaused partition's
+    * queue, which is the first unpaused record in arrival order. */
   private def firstDeliverable(): Option[KMessage] = {
-    while (resumed.nonEmpty) {
-      val (seq, m) = resumed.removeHead()
-      if (pausedSet.contains(m.tp)) park(seq, m) else return Some(m)
+    var first: mutable.ArrayDeque[(Long, KMessage)] = null
+    buffered.foreachEntry { (tp, q) =>
+      if (q.nonEmpty && !pausedSet.contains(tp) && (first == null || q.head._1 < first.head._1))
+        first = q
     }
-    while (buffered.nonEmpty) {
-      val m = buffered.removeHead()
-      headSeq += 1
-      if (pausedSet.nonEmpty && pausedSet.contains(m.tp)) park(headSeq - 1, m) else return Some(m)
-    }
-    None
-  }
-
-  private def park(seq: Long, m: KMessage): Unit =
-    parked.getOrElseUpdate(m.tp, mutable.ArrayDeque.empty) += (seq -> m)
-
-  /** One partition object per run of records of the same partition. */
-  private def topicPartition(r: RawRecord): TopicPartition = {
-    if (lastTp == null || lastTp.partition != r.partition || lastTp.topic != r.topic)
-      lastTp = TopicPartition(r.topic, r.partition)
-    lastTp
+    if (first == null) None else Some(first.removeHead()._2)
   }
 
   override def pause(tps: Seq[TopicPartition]): Unit = { pausedSet ++= tps; raw.pause(tps) }
-
-  /** Resumed partitions' parked records go back ahead of `buffered`, merged
-    * with `resumed` by arrival number. */
-  override def resume(tps: Seq[TopicPartition]): Unit = {
-    pausedSet --= tps
-    tps.foreach(tp => parked.remove(tp).foreach { q =>
-      val merged = new mutable.ArrayDeque[(Long, KMessage)](resumed.size + q.size)
-      while (resumed.nonEmpty || q.nonEmpty)
-        merged += (if (q.isEmpty || (resumed.nonEmpty && resumed.head._1 < q.head._1))
-          resumed.removeHead() else q.removeHead())
-      resumed = merged
-    })
-    raw.resume(tps)
-  }
+  override def resume(tps: Seq[TopicPartition]): Unit = { pausedSet --= tps; raw.resume(tps) }
 }

@@ -254,6 +254,7 @@ final class ConsumerManager(
       if (lowWaterMarkNs >= cutoffNs && pausedCount == 0) math.min(batchSize, heldSize)
       else getLimit(lowWaterMarkNs)
     val released = java.util.Arrays.copyOfRange(held, heldFrom, heldFrom + releaseLimit)
+    java.util.Arrays.fill(held.asInstanceOf[Array[AnyRef]], heldFrom, heldFrom + releaseLimit, null)
     heldFrom += releaseLimit
     managePausedPartitions()
 
@@ -309,7 +310,7 @@ final class ConsumerManager(
       }
       while (i < heldTo) { out(k) = held(i); i += 1; k += 1 }
       while (j < n) { out(k) = batch(j); j += 1; k += 1 }
-      java.util.Arrays.fill(held.asInstanceOf[Array[AnyRef]], 0, heldTo, null)
+      java.util.Arrays.fill(held.asInstanceOf[Array[AnyRef]], heldFrom, heldTo, null)
       spare = held
       held = out
       heldFrom = 0

@@ -48,7 +48,7 @@ def run_bounded(con, sql, timeout_s):
         timer.cancel()
 
 
-def main(sf_dir, out_dir, timeout_s=QUERY_TIMEOUT_S):
+def main(sf_dir, out_dir):
     con = duckdb.connect()
     con.execute(f"SET memory_limit = '{int(mem_total_bytes() * MEMORY_SHARE) // 2**20}MB'")
     con.execute(f"SET threads = {len(os.sched_getaffinity(0))}")
@@ -60,7 +60,7 @@ def main(sf_dir, out_dir, timeout_s=QUERY_TIMEOUT_S):
         try:
             # one oracle run and one parquet read per query: rows and
             # dtypes both come from these two Arrow tables
-            want_t = run_bounded(con, sql, timeout_s)
+            want_t = run_bounded(con, sql, QUERY_TIMEOUT_S)
             if want_t is None:
                 print(f"FAIL {name}: timeout")
                 fail += 1
